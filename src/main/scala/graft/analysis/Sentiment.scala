@@ -75,8 +75,9 @@ object Sentiment {
   // size tracked with a counter (TrieMap.size is O(n)); at capacity evict
   // ONE arbitrary entry instead of clearing — a workload cycling 64+ live
   // lexicon pairs degrades to one rebuild per new pair, not a full-cache
-  // rebuild every cycle. Races make the counter approximate; the bound
-  // only needs to hold within a few entries.
+  // rebuild every cycle. The counter moves only on a successful insert or
+  // remove, so it equals the cache size whenever no call is in flight;
+  // concurrent misses may overshoot the bound by a few entries.
   private val acCacheSize = new java.util.concurrent.atomic.AtomicInteger(0)
   private def acFor(pos: Set[String], neg: Set[String]): AhoCorasick =
     if ((pos eq PositiveLexicon) && (neg eq NegativeLexicon)) defaultAc
@@ -89,12 +90,18 @@ object Sentiment {
             acCache.headOption.foreach { case (ek, _) =>
               if (acCache.remove(ek).isDefined) acCacheSize.decrementAndGet()
             }
-          var built = false
-          val a = acCache.getOrElseUpdate(k, { built = true; AhoCorasick.twoGroups(pos, neg) })
-          if (built) acCacheSize.incrementAndGet()
-          a
+          // putIfAbsent, not getOrElseUpdate: the latter may run its builder
+          // and then lose the insert race, which would count a phantom entry
+          val built = AhoCorasick.twoGroups(pos, neg)
+          acCache.putIfAbsent(k, built) match {
+            case Some(winner) => winner
+            case None => acCacheSize.incrementAndGet(); built
+          }
       }
     }
+
+  /** (counter, actual entries) of the non-default automaton cache. */
+  private[graft] def acCacheCounts: (Int, Int) = (acCacheSize.get, acCache.size)
 
   /** (positive hits, negative hits) of a preprocessed text — one automaton
     * pass with per-term non-overlapping counts identical to naiveHits.

@@ -96,31 +96,39 @@ object Dedup {
       struct(lit(b).as("band"),
         md5(concat_ws("|", (0 until rows).map(r => col(s"mh_${b * rows + r}")): _*)).as("key"))
     }
-    // explicit fixed-width repartition on the bucket key: (a) the guard
-    // groupBy, the guard join and the pair self-join all consume this one
-    // exchange (ReusedExchange — signatures are computed once, not three
-    // times), (b) AQE cannot coalesce the quadratic pair expansion into a
-    // few tasks based on the tiny pre-join input (see ngramJaccardPairs)
-    val p = sigs.sparkSession.sessionState.conf.numShufflePartitions
     val keyed = sigs
       .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      .repartition(p, col("band"), col("key"))
-    // degenerate-bucket guard: a single hot (band, key) — e.g. empty or
-    // boilerplate docs — would make the self-join below O(bucket²); skew
-    // real corpora always have. Cap is recall-vs-cost rails like maxDf;
-    // drops are observable through `obs` (Guard.observeDrops piggybacks on
-    // this aggregation).
-    val counts = Guard.observeDrops(
-      keyed.groupBy(col("band"), col("key")).count(), obs, maxBucket,
-      label = "lshCandidatePairs")
-    val small = counts.filter(col("count") <= maxBucket).select(col("band"), col("key"))
-    val guarded = keyed.join(small, Seq("band", "key"))
-    val a = guarded.as("a"); val b = guarded.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.band").as("band"), col("a.doc_id").as("a"), col("b.doc_id").as("b"))
+    blockedPairs(keyed, Seq("band", "key"), "doc_id", Nil, maxBucket, obs,
+        "lshCandidatePairs")
+      .filter(col("a") < col("b"))
+      .select(col("band"), col("a"), col("b"))
       .distinct()
+  }
+
+  /** The blocked-pair skeleton shared by every bucketed near-dup operator:
+    * rows of `keyed` sharing a `keys` bucket become candidate pairs. Returns
+    * the keys plus each side's id (`a`, `b`) and `payload` columns, each
+    * `(column, name)` renamed `<name>a` / `<name>b`; the caller applies its
+    * own pair predicate, verify and threshold.
+    *
+    * The explicit fixed-width repartition on the bucket key means (a) the
+    * guard groupBy, the guard join and the pair self-join all consume this
+    * one exchange (ReusedExchange — the keyed frame is computed once, not
+    * three times), and (b) AQE cannot coalesce the quadratic pair expansion
+    * into a few tasks based on the tiny pre-join input (see
+    * ngramJaccardPairs). `Guard.capBuckets` drops buckets over `maxBucket`
+    * and reports the drops under `label`.
+    */
+  private[ops] def blockedPairs(keyed: DataFrame, keys: Seq[String], id: String,
+      payload: Seq[(String, String)], maxBucket: Int,
+      obs: Option[Guard.GuardObservation], label: String): DataFrame = {
+    val p = keyed.sparkSession.sessionState.conf.numShufflePartitions
+    val guarded = Guard.capBuckets(keyed.repartition(p, keys.map(col): _*), keys,
+      maxBucket, obs, label)
+    def side(s: String) = guarded.select(keys.map(col) ++
+      (col(id).as(s) +: payload.map { case (c, n) => col(c).as(n + s) }): _*)
+    side("a").join(side("b"), keys)
   }
 
   /** Exact word-shingle Jaccard for candidate pairs (the verify stage after
@@ -165,16 +173,9 @@ object Dedup {
       array_distinct(shingleCol(col("text"), shingleW)).as("sh"))
       .withColumn("setSize", size(col("sh")))
     val inv = sets.select(col("doc_id"), col("setSize"), explode(col("sh")).as("sh"))
-    // inverted-index guard: drop degenerate hub shingles. Skipped entirely
-    // when capless (one less shuffle) — the exact-oracle contract query
-    // runs capless (and `obs`, if any, reports zeros: nothing can drop).
-    val filtered =
-      if (maxDf == Int.MaxValue) inv
-      else inv.join(
-        Guard.observeDrops(inv.groupBy("sh").count(), obs, maxDf,
-            label = "ngramJaccardPairs")
-          .filter(col("count") <= maxDf).select("sh"),
-        Seq("sh"))
+    // inverted-index guard: drop degenerate hub shingles (skipped when
+    // capless — the exact-oracle contract query runs capless)
+    val filtered = Guard.capBuckets(inv, Seq("sh"), maxDf, obs, "ngramJaccardPairs")
     // EXPLICIT fixed-width repartition on the join key. The join inputs are
     // tiny (one row per doc-shingle) but the join OUTPUT is quadratic in
     // per-shingle df — AQE, which sizes partitions from the map-side input
@@ -281,38 +282,36 @@ object Dedup {
       obs: Option[Guard.GuardObservation] = None): DataFrame = {
     val nBlocks = maxHamming + 1
     require(nBlocks <= bits, s"maxHamming $maxHamming needs $nBlocks blocks > $bits bits")
-    val width = bits / nBlocks // first (nBlocks-1) blocks `width` bits, last takes the rest
-    Guard.warnIfUndersized("simhashDupPairs", corpusSize,
-      math.pow(2.0, width), maxBucket)
-    val sigs = signatures(docs)
+    simhashBlockedPairs(signatures(docs), Seq("sig" -> "sig"), maxHamming, bits,
+      maxBucket, corpusSize, obs, "simhashDupPairs")
+  }
+
+  /** The SimHash pair body shared by the 64- and 128-bit entries, over a
+    * signature held in `limbs` — 64-bit `(column, side name)` words, most
+    * significant first. Blocks are `bits128` slices (the first
+    * `maxHamming` blocks `bits / (maxHamming+1)` wide, the last takes the
+    * rest); the verify is the popcount of the XOR summed over the limbs.
+    */
+  private def simhashBlockedPairs(sigs: DataFrame, limbs: Seq[(String, String)],
+      maxHamming: Int, bits: Int, maxBucket: Int, corpusSize: Long,
+      obs: Option[Guard.GuardObservation], label: String): DataFrame = {
+    val nBlocks = maxHamming + 1
+    val width = bits / nBlocks
+    Guard.warnIfUndersized(label, corpusSize, math.pow(2.0, width), maxBucket)
+    val lo = col(limbs.last._1)
+    val hi = if (limbs.size > 1) col(limbs.head._1) else lit(0L)
     val blocks = (0 until nBlocks).map { q =>
-      val lo = q * width
-      val w = if (q == nBlocks - 1) bits - lo else width
-      val mask = if (w == 64) -1L else (1L << w) - 1 // 1L<<64 wraps to 1 in JVM shift semantics
-      struct(lit(q).as("q"),
-        shiftrightunsigned(col("sig"), lo).bitwiseAND(lit(mask)).as("key"))
+      val start = q * width
+      val w = if (q == nBlocks - 1) bits - start else width
+      struct(lit(q).as("q"), bits128(hi, lo, start, math.min(w, 64)).as("key"))
     }
-    // same exchange-sharing + anti-coalesce repartition as lshCandidatePairs
-    val p = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val keyed = sigs.select(col("doc_id"), col("sig"), explode(array(blocks: _*)).as("bk"))
-      .select(col("doc_id"), col("sig"), col("bk.q").as("q"), col("bk.key").as("key"))
-      .repartition(p, col("q"), col("key"))
-    // capless contract runs (maxBucket = MaxValue) skip the guard count +
-    // semi-join entirely — nothing can drop, every (q, key) would pass, and
-    // the join is a pure no-op on the result (ngramJaccardPairs pattern)
-    val guarded =
-      if (maxBucket == Int.MaxValue) keyed
-      else {
-        val small = Guard.observeDrops(keyed.groupBy(col("q"), col("key")).count(),
-            obs, maxBucket, label = "simhashDupPairs")
-          .filter(col("count") <= maxBucket).select(col("q"), col("key"))
-        keyed.join(small, Seq("q", "key"))
-      }
-    val a = guarded.select(col("q"), col("key"), col("doc_id").as("a"), col("sig").as("siga"))
-    val b = guarded.select(col("q"), col("key"), col("doc_id").as("b"), col("sig").as("sigb"))
-    a.join(b, Seq("q", "key")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("siga").bitwiseXOR(col("sigb"))).as("hamming"))
+    val sigCols = limbs.map(l => col(l._1))
+    val keyed = sigs.select(col("doc_id") +: sigCols :+ explode(array(blocks: _*)).as("bk"): _*)
+      .select(col("doc_id") +: sigCols :+ col("bk.q").as("q") :+ col("bk.key").as("key"): _*)
+    blockedPairs(keyed, Seq("q", "key"), "doc_id", limbs, maxBucket, obs, label)
+      .filter(col("a") < col("b"))
+      .select(col("a"), col("b"), limbs.map { case (_, n) =>
+        bit_count(col(n + "a").bitwiseXOR(col(n + "b"))) }.reduce(_ + _).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }
@@ -402,46 +401,11 @@ object Dedup {
       signatures: DataFrame => DataFrame = simhashFnv128Sigs(_),
       corpusSize: Long = -1L,
       obs: Option[Guard.GuardObservation] = None): DataFrame = {
-    val bits = 128
     val nBlocks = maxHamming + 1
-    require(nBlocks >= 2 && nBlocks <= bits,
-      s"simhashDupPairs128 needs 1 <= maxHamming <= ${bits - 1}, got $maxHamming")
-    val width = bits / nBlocks
-    Guard.warnIfUndersized("simhashDupPairs128", corpusSize,
-      math.pow(2.0, width), maxBucket)
-    val sigs = signatures(docs)
-    val blocks = (0 until nBlocks).map { q =>
-      val loBit = q * width
-      val w = if (q == nBlocks - 1) bits - loBit else width
-      struct(lit(q).as("q"),
-        bits128(col("sig_hi"), col("sig_lo"), loBit, math.min(w, 64)).as("key"))
-    }
-    // same exchange-sharing + anti-coalesce repartition as the 64-bit path
-    val p = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val keyed = sigs
-      .select(col("doc_id"), col("sig_hi"), col("sig_lo"), explode(array(blocks: _*)).as("bk"))
-      .select(col("doc_id"), col("sig_hi"), col("sig_lo"),
-        col("bk.q").as("q"), col("bk.key").as("key"))
-      .repartition(p, col("q"), col("key"))
-    // capless runs skip the guard tier — see simhashDupPairs
-    val guarded =
-      if (maxBucket == Int.MaxValue) keyed
-      else {
-        val small = Guard.observeDrops(keyed.groupBy(col("q"), col("key")).count(),
-            obs, maxBucket, label = "simhashDupPairs128")
-          .filter(col("count") <= maxBucket).select(col("q"), col("key"))
-        keyed.join(small, Seq("q", "key"))
-      }
-    val a = guarded.select(col("q"), col("key"), col("doc_id").as("a"),
-      col("sig_hi").as("ha"), col("sig_lo").as("la"))
-    val b = guarded.select(col("q"), col("key"), col("doc_id").as("b"),
-      col("sig_hi").as("hb"), col("sig_lo").as("lb"))
-    a.join(b, Seq("q", "key")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        (bit_count(col("ha").bitwiseXOR(col("hb"))) +
-          bit_count(col("la").bitwiseXOR(col("lb")))).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
+    require(nBlocks >= 2 && nBlocks <= 128,
+      s"simhashDupPairs128 needs 1 <= maxHamming <= 127, got $maxHamming")
+    simhashBlockedPairs(signatures(docs), Seq("sig_hi" -> "h", "sig_lo" -> "l"),
+      maxHamming, 128, maxBucket, corpusSize, obs, "simhashDupPairs128")
   }
 
   /** Corpus-aware SimHash near-dup (mirrors embeddingDupPairsAuto): counts
@@ -517,17 +481,11 @@ object Dedup {
       obs: Option[Guard.GuardObservation] = None): DataFrame = {
     Guard.warnIfUndersized("embeddingDupPairs", corpusSize,
       math.pow(2.0, planes), maxBucket)
-    val p = embeddings.sparkSession.sessionState.conf.numShufflePartitions
     val bucketed = Par.widen(embeddings).withColumn("bucket",
-        Similarity.signBucketCol(col("embedding"), dim, planes, seed))
-      .repartition(p, col("bucket"))
-    val small = Guard.observeDrops(bucketed.groupBy(col("bucket")).count(),
-        obs, maxBucket, label = "embeddingDupPairs")
-      .filter(col("count") <= maxBucket).select("bucket")
-    val guarded = bucketed.join(small, Seq("bucket"))
-    val a = guarded.select(col("bucket"), col("vec_id").as("a"), col("embedding").as("va"))
-    val b = guarded.select(col("bucket"), col("vec_id").as("b"), col("embedding").as("vb"))
-    a.join(b, Seq("bucket")).filter(col("a") < col("b"))
+      Similarity.signBucketCol(col("embedding"), dim, planes, seed))
+    blockedPairs(bucketed, Seq("bucket"), "vec_id", Seq("embedding" -> "v"),
+        maxBucket, obs, "embeddingDupPairs")
+      .filter(col("a") < col("b"))
       .withColumn("cosine", cosineCol(col("va"), col("vb")))
       .filter(col("cosine") >= threshold)
       .select("a", "b", "cosine")

@@ -31,7 +31,7 @@ object Guard {
     @volatile private[ops] var attached = false
     // the observed bucket-count aggregation + its cap, kept for the
     // pruned-plan fallback below
-    @volatile private[ops] var source: Option[(DataFrame, Int, String)] = None
+    @volatile private[ops] var source: Option[(DataFrame, Int)] = None
     @volatile private var fallbackCache: Option[Map[String, Long]] = None
 
     private val zeros = Map("total_rows" -> 0L, "dropped_rows" -> 0L,
@@ -62,17 +62,12 @@ object Guard {
           m.map { case (k, v) => k -> (if (v == null) 0L else v.asInstanceOf[Long]) }
         else fallbackCache.getOrElse {
           val computed = source match {
-            case Some((counts, cap, countCol)) =>
+            case Some((counts, cap)) =>
               log.warn(s"[$label] guard metrics were pruned from the executed " +
                 "plan (empty result); recomputing the bucket-count aggregation " +
                 "from full lineage — this re-runs the operator's input scan")
-              val r = counts.agg(
-                coalesce(sum(col(countCol)), lit(0L)).as("total_rows"),
-                coalesce(sum(when(col(countCol) > cap, col(countCol)).otherwise(0L)), lit(0L))
-                  .as("dropped_rows"),
-                count(lit(1)).as("buckets"),
-                coalesce(sum(when(col(countCol) > cap, 1L).otherwise(0L)), lit(0L))
-                  .as("dropped_buckets")).head()
+              val aggs = dropAggs(cap)
+              val r = counts.agg(aggs.head, aggs.tail: _*).head()
               Map("total_rows" -> r.getLong(0), "dropped_rows" -> r.getLong(1),
                 "buckets" -> r.getLong(2), "dropped_buckets" -> r.getLong(3))
             case None => zeros
@@ -113,26 +108,14 @@ object Guard {
 
   def observation(label: String): GuardObservation = new GuardObservation(label)
 
-  private def dropAggs(countCol: String, cap: Int) = Seq(
-    coalesce(sum(col(countCol)), lit(0L)).as("total_rows"),
-    coalesce(sum(when(col(countCol) > cap, col(countCol)).otherwise(0L)), lit(0L))
+  private def dropAggs(cap: Int) = Seq(
+    coalesce(sum(col("count")), lit(0L)).as("total_rows"),
+    coalesce(sum(when(col("count") > cap, col("count")).otherwise(0L)), lit(0L))
       .as("dropped_rows"),
     count(lit(1)).as("buckets"),
-    coalesce(sum(when(col(countCol) > cap, 1L).otherwise(0L)), lit(0L))
+    coalesce(sum(when(col("count") > cap, 1L).otherwise(0L)), lit(0L))
       .as("dropped_buckets"))
 
-  /** Attach the drop metrics to the guard's bucket-count aggregation
-    * (the `groupBy(bucket).count()` every guarded op already computes).
-    * One CollectMetrics node on an existing tiny intermediate — no extra
-    * job, no extra shuffle.
-    *
-    * Telemetry is DEFAULT-ON: with no explicit `obs`, the metrics node is
-    * attached under an auto-generated name and a once-per-session
-    * QueryExecutionListener reads it after whatever action the CALLER
-    * eventually runs — a lossy run WARNs (and lands in the drop ledger)
-    * with zero caller cooperation. An explicit `obs` additionally gives
-    * the caller blocking reads + the AQE-pruned-plan recompute fallback.
-    */
   /** A/B escape hatch for measuring the default-on telemetry's own cost:
     * `-Dgraft.guard.telemetry=off` skips the CollectMetrics attach (and the
     * listener registration) entirely. BENCH-ONLY — with it off, a recall
@@ -142,16 +125,26 @@ object Guard {
   private def telemetryOff: Boolean =
     sys.props.get("graft.guard.telemetry").contains("off")
 
-  private[ops] def observeDrops(bucketCounts: DataFrame,
-      obs: Option[GuardObservation], cap: Int,
-      countCol: String = "count", label: String = "guard"): DataFrame = {
+  /** Attach the drop metrics to the guard's bucket-count aggregation
+    * (`capBuckets`' `groupBy(keys).count()`). One CollectMetrics node on an
+    * existing tiny intermediate — no extra job, no extra shuffle.
+    *
+    * Telemetry is DEFAULT-ON: with no explicit `obs`, the metrics node is
+    * attached under an auto-generated name and a once-per-session
+    * QueryExecutionListener reads it after whatever action the CALLER
+    * eventually runs — a lossy run WARNs (and lands in the drop ledger)
+    * with zero caller cooperation. An explicit `obs` additionally gives
+    * the caller blocking reads + the AQE-pruned-plan recompute fallback.
+    */
+  private def observeDrops(bucketCounts: DataFrame,
+      obs: Option[GuardObservation], cap: Int, label: String): DataFrame = {
     if (telemetryOff && obs.isEmpty) return bucketCounts
     ensureListener(bucketCounts.sparkSession)
-    val aggs = dropAggs(countCol, cap)
+    val aggs = dropAggs(cap)
     obs match {
       case Some(o) =>
         o.attached = true
-        o.source = Some((bucketCounts, cap, countCol))
+        o.source = Some((bucketCounts, cap))
         putTag(o.obs.name)
         bucketCounts.observe(o.obs, aggs.head, aggs.tail: _*)
       case None =>
@@ -160,6 +153,24 @@ object Guard {
         bucketCounts.observe(name, aggs.head, aggs.tail: _*)
     }
   }
+
+  /** The degenerate-bucket guard every near-dup operator shares: keeps the
+    * rows of `keyed` whose `keys` bucket holds at most `maxBucket` rows
+    * (a hot bucket — empty or boilerplate docs — would make the pair
+    * self-join O(bucket²)). The bucket-count aggregation carries the drop
+    * metrics (`observeDrops`). Capless runs (`maxBucket = Int.MaxValue`)
+    * return `keyed` untouched: nothing can drop, so the count and join
+    * would be pure cost, and `obs` reports zeros.
+    */
+  private[ops] def capBuckets(keyed: DataFrame, keys: Seq[String], maxBucket: Int,
+      obs: Option[GuardObservation], label: String): DataFrame =
+    if (maxBucket == Int.MaxValue) keyed
+    else {
+      val small = observeDrops(keyed.groupBy(keys.map(col): _*).count(), obs,
+          maxBucket, label)
+        .filter(col("count") <= maxBucket).select(keys.map(col): _*)
+      keyed.join(small, keys)
+    }
 
   // ---- default-on telemetry: session listener + drop ledger -----------------
 

@@ -178,6 +178,8 @@ object Multimodal {
       require(size >= 0 && off + 8 + size.toLong <= bytes.length,
         s"malformed WAV chunk '$id' at $off: size $size exceeds ${bytes.length} bytes")
       if (id == "fmt ") {
+        // a short fmt chunk would read its fields from the next chunk
+        require(size >= 16, s"malformed WAV fmt chunk at $off: size $size < 16")
         channels = bb.getShort(off + 10); rate = bb.getInt(off + 12)
         bits = bb.getShort(off + 22)
       } else if (id == "data") { dataOff = off + 8; dataLen = size }

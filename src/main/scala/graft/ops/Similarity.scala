@@ -217,25 +217,17 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     Guard.warnIfUndersized("bucketedNeighbors", corpusSize,
       math.pow(2.0, nPlanes), maxBucket)
-    val p = embeddings.sparkSession.sessionState.conf.numShufflePartitions
+    // nPlanes is the primary scale knob (see bucketedNeighborsAuto); the
+    // maxBucket cap keeps a hot bucket from making the self-join quadratic
     val bucketed = Par.widen(embeddings).withColumn("bucket",
-        signBucketCol(col("embedding"), dim, nPlanes, seed))
-      .repartition(p, col("bucket"))
-    // degenerate-bucket guard (see Dedup.embeddingDupPairs): a hot bucket
-    // would make the self-join quadratic; nPlanes is the primary scale
-    // knob (see bucketedNeighborsAuto), and `obs` reports what the cap
-    // actually dropped
-    val small = Guard.observeDrops(bucketed.groupBy(col("bucket")).count(),
-        obs, maxBucket, label = "bucketedNeighbors")
-      .filter(col("count") <= maxBucket).select("bucket")
-    val guarded = bucketed.join(small, Seq("bucket"))
-    val a = guarded.select(col("bucket"), col("vec_id").as("a"), col("embedding").as("va"))
-    val b = guarded.select(col("bucket"), col("vec_id").as("b"), col("embedding").as("vb"))
+      signBucketCol(col("embedding"), dim, nPlanes, seed))
     // rank on the 6-decimal-ROUNDED cosine (ties broken by b): raw doubles
     // rank identically in any engine only down to ulp noise — rounding
     // first makes the top-k reproducible across engines (oracle-checkable)
     // at no semantic cost
-    val pairs = a.join(b, Seq("bucket")).filter(col("a") =!= col("b"))
+    val pairs = Dedup.blockedPairs(bucketed, Seq("bucket"), "vec_id",
+        Seq("embedding" -> "v"), maxBucket, obs, "bucketedNeighbors")
+      .filter(col("a") =!= col("b"))
       .withColumn("cosine", round(Dedup.cosineCol(col("va"), col("vb")), 6))
     val w = Window.partitionBy(col("a")).orderBy(col("cosine").desc, col("b"))
     pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= k)

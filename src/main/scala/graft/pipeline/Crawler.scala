@@ -268,17 +268,6 @@ final class Crawler(
     }.getOrElse(spark.emptyDataset[Candidate])
   }
 
-  private val timing = sys.env.get("GRAFT_TIMING").contains("1")
-  private def timed[T](label: String)(body: => T): T = {
-    if (!timing) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[graft-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
-
   /** One crawl round; returns (next round's candidates, their count). */
   def runRound(round: Int, candidates: Dataset[Candidate]): (Dataset[Candidate], Long) = {
     val cands = filterAllowed(candidates.toDF()
@@ -300,9 +289,8 @@ final class Crawler(
 
     // global sequence assignment, continuing from the in-flight counter
     val seqStart = nextSeqAcc
-    val (sequencedRaw, frontierCount, seqCache) = timed(s"r$round sequencer") {
+    val (sequencedRaw, frontierCount, seqCache) =
       Sequencer.addSeq(fresh, Seq(col("ord0"), col("ord1")), "seq", seqStart)
-    }
     fresh.unpersist() // seqCache is materialized by addSeq's count pass
     // the consumed candidates frame (last round's materializedNext, a
     // localCheckpoint) has flowed into the now-materialized seqCache —
@@ -370,15 +358,12 @@ final class Crawler(
     // A lost checkpoint block fails the run instead of silently
     // recomputing — resume covers that.
     val newState = hostStates
-    val mergedState = timed(s"r$round host-state") {
-      val m = (stateAcc match {
-        case Some(old) => old.join(newState.select("host", "lane"), Seq("host", "lane"), "left_anti")
-          .unionByName(newState)
-        case None => newState
-      }).localCheckpoint(false)
-      lastStateCount = m.count()
-      m
-    }
+    val mergedState = (stateAcc match {
+      case Some(old) => old.join(newState.select("host", "lane"), Seq("host", "lane"), "left_anti")
+        .unionByName(newState)
+      case None => newState
+    }).localCheckpoint(false)
+    lastStateCount = mergedState.count()
 
     // fold the round's frontier into the seen chain. Order of operations
     // matters for BOTH pathologies here:
@@ -411,7 +396,7 @@ final class Crawler(
       case Some(old) => DistBloomBank.merge(old, roundBank).persist()
       case None      => roundBank
     }
-    timed(s"r$round bloom-build") { mergedBank.count() }
+    mergedBank.count()
     if (!bankAcc.contains(mergedBank)) {
       bankAcc.foreach(_.unpersist())
       if (mergedBank ne roundBank) roundBank.unpersist()
@@ -439,13 +424,10 @@ final class Crawler(
       // same checkpoint-below-repartition-below-persist layering as
       // roundSeen: bounded plan depth AND a partitioning the anti-joins
       // can reuse
-      val collapsed = timed(s"r$round seen-collapse") {
-        val c = seenParts.reduce(_.unionByName(_))
-          .localCheckpoint(false)
-          .repartition(seenP, $"canon").persist()
-        c.count()
-        c
-      }
+      val collapsed = seenParts.reduce(_.unionByName(_))
+        .localCheckpoint(false)
+        .repartition(seenP, $"canon").persist()
+      collapsed.count()
       // each chain part layers persist over a localCheckpoint: unpersist
       // drops the cached copy, dropCheckpoint frees the checkpoint blocks
       // underneath (the collapsed frame re-checkpointed all of it above)
@@ -453,7 +435,7 @@ final class Crawler(
       seenParts = Vector(collapsed)
       val rebuilt = DistBloomBank.buildRound(collapsed, "canon",
         config.seenPartitions, config.bloomExpectedPerPartition, config.bloomFpp).persist()
-      timed(s"r$round bank-rebuild") { rebuilt.count() }
+      rebuilt.count()
       bankAcc.foreach(_.unpersist())
       bankAcc = Some(rebuilt)
     }
@@ -464,7 +446,7 @@ final class Crawler(
     // flattened every round (see the lineage note above — candidates are
     // one leg of the multiplicative outcome/state cross-reference)
     val materializedNext = next.localCheckpoint(false)
-    val nextCount = timed(s"r$round next-candidates") { materializedNext.count() }
+    val nextCount = materializedNext.count()
     val oldState = stateAcc
     stateAcc = Some(mergedState)
     // the replaced state is either a resume-time persist (unpersist works)
@@ -665,13 +647,13 @@ final class Crawler(
     val bankSave: Seq[() => Unit] = bankAcc.toSeq.map(b =>
       () => DistBloomBank.save(spark, b, store.bloomPath(round)))
 
-    timed(s"r$round commit-tables") { store.commit(round,
+    store.commit(round,
       Map("docs" -> docs, "crawl_log" -> crawlLog, "seen" -> seen,
         "metrics" -> sizedForWrite(metrics, 1L, 1L),
         "host_state" -> sizedForWrite(roundStateDelta, lastStateCount, 500000L)),
       knownCounts = Map("seen" -> frontierCount, "crawl_log" -> frontierCount),
       metricsJson = s"""{"next_seq":$nextSeq,"frontier":$frontierCount}""",
-      alsoParallel = bankSave) }
+      alsoParallel = bankSave)
   }
 }
 

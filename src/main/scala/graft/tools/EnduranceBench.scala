@@ -59,8 +59,9 @@ object EnduranceBench {
       // run's filesystem (tmpfs-backed /tmp would pressure the very run
       // this warm-up stabilizes) — delete it before the timed loop
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(warmStore)).iterator().asScala
-        .toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(warmStore))
+      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
+      finally walk.close() // Files.walk holds a directory handle until closed
     }
 
     val crawler = new graft.pipeline.Crawler(spark, cfg, store)

@@ -23,6 +23,31 @@ class AnalysisSpec extends AnyFunSuite {
     assert(Sentiment.score("갓겜 갓겜 노잼") == 0.6) // ("갓겜"+"갓")×2 hits vs "노잼"
   }
 
+  test("custom-lexicon automaton cache: counter equals size after concurrent misses") {
+    // 96 distinct pairs > the 64-entry cap; 8 threads meet at a barrier
+    // before each lookup, so they miss on the same pair together and their
+    // inserts race each other and the evictions
+    val pairs = (0 until 96).map(i => (Set(s"p$i", "good"), Set(s"n$i")))
+    val threads = 8
+    val barrier = new java.util.concurrent.CyclicBarrier(threads)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val tasks = (0 until threads).map { _ =>
+        pool.submit(new Runnable {
+          def run(): Unit = (0 until 3).foreach { _ =>
+            pairs.foreach { case (pos, neg) =>
+              barrier.await(30, java.util.concurrent.TimeUnit.SECONDS)
+              assert(Sentiment.hits2("good p1 n1", pos, neg)._1 >= 1)
+            }
+          }
+        })
+      }
+      tasks.foreach(_.get())
+    } finally pool.shutdown()
+    val (counter, size) = Sentiment.acCacheCounts
+    assert(counter == size, s"counter $counter vs cache size $size")
+  }
+
   test("label thresholds ±0.1 (sentiment.py:132-146)") {
     assert(Sentiment.label(0.11) == "positive")
     assert(Sentiment.label(0.1) == "neutral")

@@ -366,6 +366,15 @@ class OpsSpec extends SparkSpec {
     java.nio.ByteBuffer.wrap(evil2).order(java.nio.ByteOrder.LITTLE_ENDIAN)
       .putInt(16, Int.MaxValue - 4) // huge chunk: would skip past the data chunk
     intercept[IllegalArgumentException] { Multimodal.decodeWav(evil2) }
+    // a 14-byte fmt chunk (bits-per-sample cut off), followed by an empty
+    // chunk whose id starts with the bytes 16, 0: an unchecked decoder
+    // reads that id as 16 bits per sample and accepts the file
+    val short = java.nio.ByteBuffer.allocate(wav.length + 6)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    short.put(wav, 0, 16).putInt(14).put(wav, 20, 14)
+      .putShort(16).put("xx".getBytes("US-ASCII")).putInt(0)
+      .put(wav, 36, wav.length - 36).putInt(4, wav.length + 6 - 8)
+    intercept[IllegalArgumentException] { Multimodal.decodeWav(short.array()) }
     // opaque payloads: byte-histogram features from the actual bytes
     val blob = Array.tabulate[Byte](64)(i => (i * 4).toByte) // 4 bytes per nibble bin
     val bf = Multimodal.decode(MediaAsset("x.bin", "d", "binary", blob))
@@ -420,6 +429,137 @@ class OpsSpec extends SparkSpec {
     Dedup.ngramJaccardPairs(sample, shingleW = 2, threshold = 0.5,
       maxDf = Int.MaxValue, obs = Some(capless)).count()
     assert(capless.totalRows == 0L && capless.droppedFraction == 0.0)
+  }
+
+  test("blocked-pair operators equal an in-memory brute force minus over-cap buckets") {
+    val rnd = new scala.util.Random(11)
+    def buckets[K](keys: Seq[(Long, Seq[K])]): Map[K, Seq[Long]] =
+      keys.flatMap { case (id, ks) => ks.distinct.map(_ -> id) }.groupMap(_._1)(_._2)
+    def bucketSizes[K](keys: Seq[(Long, Seq[K])]): Seq[Int] = buckets(keys).values.map(_.size).toSeq
+    // (bucket, a, b) for every pair a < b sharing a bucket of at most `cap` ids
+    def sharedPairs[K](keys: Seq[(Long, Seq[K])], cap: Int): Set[(K, Long, Long)] =
+      buckets(keys).toSeq.flatMap { case (k, ids) =>
+        if (ids.size > cap) Nil else for (a <- ids; b <- ids if a < b) yield (k, a, b)
+      }.toSet
+    // capped: pairs and drop counts match the brute force (the corpus has
+    // a bucket over the cap and one exactly at it); capless: the brute
+    // force over every bucket, and an all-zero observation
+    def check[K, R](name: String, keys: Seq[(Long, Seq[K])], cap: Int,
+        expected: Int => Set[R], run: (Int, Option[Guard.GuardObservation]) => Set[R]): Unit = {
+      val sizes = bucketSizes(keys)
+      assert(sizes.exists(_ > cap) && sizes.contains(cap), s"$name corpus")
+      val capped = Guard.observation(s"skeleton_$name")
+      val got = run(cap, Some(capped))
+      assert(got == expected(cap), name)
+      assert(capped.droppedBuckets == sizes.count(_ > cap), name)
+      assert(capped.droppedRows == sizes.filter(_ > cap).sum, name)
+      val capless = Guard.observation(s"skeleton_${name}_capless")
+      val all = run(Int.MaxValue, Some(capless))
+      assert(all == expected(Int.MaxValue) && all != got, s"$name capless")
+      assert(capless.metrics.values.forall(_ == 0L), s"$name capless ${capless.metrics}")
+    }
+
+    // MinHash-LSH over hand-made signatures: k = bands = 2, so the band
+    // key is md5 of one signature value; 14 docs share one band-0 value
+    // and 8 (the cap) another
+    val sigRows = (0 until 40).map(i =>
+      (i.toLong, if (i < 14) "hot" else if (i < 22) "edge" else s"c${i % 5}", s"d${i % 9}"))
+    val lshKeys = sigRows.map { case (id, m0, m1) => id -> Seq((0, m0), (1, m1)) }
+    check[(Int, String), (Int, Long, Long)]("lsh", lshKeys, 8,
+      cap => sharedPairs(lshKeys, cap).map { case ((band, _), a, b) => (band, a, b) },
+      (cap, obs) => Dedup.lshCandidatePairs(sigRows.toDF("doc_id", "mh_0", "mh_1"),
+          k = 2, bands = 2, maxBucket = cap, obs = obs)
+        .as[(Int, Long, Long)].collect().toSet)
+
+    // SimHash: near-dup families, plus 16 signatures whose block 0 is all
+    // zero and 10 (the cap) whose block 1 is, paired so each pair differs
+    // by one bit in every other block — such a pair shares only that bucket
+    def flip(s: (Long, Long), bit: Int) =
+      if (bit < 64) (s._1, s._2 ^ (1L << bit)) else (s._1 ^ (1L << (bit - 64)), s._2)
+    def mask(w: Int) = if (w == 64) -1L else (1L << w) - 1
+    def sigCorpus(bits: Int): Seq[(Long, Long, Long)] = { // (doc_id, hi, lo)
+      val w = bits / 4
+      def rand() = (if (bits > 64) rnd.nextLong() else 0L, rnd.nextLong())
+      val fams = (0 until 8).flatMap { _ =>
+        val base = rand()
+        (0 until 4).map(m => (0 until m).foldLeft(base)((s, _) => flip(s, rnd.nextInt(bits))))
+      }
+      def zeroBlock(nPairs: Int, z: Int) = (0 until nPairs).flatMap { _ =>
+        val (h, l) = rand()
+        val base = (h, l & ~(mask(w) << (z * w)))
+        Seq(base, (0 until 4).filter(_ != z)
+          .foldLeft(base)((s, q) => flip(s, q * w + rnd.nextInt(w))))
+      }
+      (fams ++ zeroBlock(8, 0) ++ zeroBlock(5, 1)).zipWithIndex
+        .map { case ((h, l), i) => (i.toLong, h, l) }
+    }
+    def simhashCase(bits: Int): Unit = {
+      val corpus = sigCorpus(bits)
+      val w = bits / 4
+      val keys = corpus.map { case (id, h, l) => id -> (0 until 4).map { q =>
+        val s = q * w
+        (q, if (s >= 64) (h >>> (s - 64)) & mask(w) else (l >>> s) & mask(w))
+      } }
+      val sig = corpus.map { case (id, h, l) => id -> (h, l) }.toMap
+      def ham(a: Long, b: Long) = java.lang.Long.bitCount(sig(a)._1 ^ sig(b)._1) +
+        java.lang.Long.bitCount(sig(a)._2 ^ sig(b)._2)
+      val sigs = if (bits == 64) corpus.map(r => (r._1, r._3)).toDF("doc_id", "sig")
+        else corpus.toDF("doc_id", "sig_hi", "sig_lo")
+      check[(Int, Long), (Long, Long, Int)](s"simhash$bits", keys, 10,
+        cap => sharedPairs(keys, cap).map { case (_, a, b) => (a, b, ham(a, b)) }
+          .filter(_._3 <= 3),
+        (cap, obs) => (if (bits == 64)
+            Dedup.simhashDupPairs(sigs, maxHamming = 3, maxBucket = cap,
+              signatures = identity, obs = obs)
+          else Dedup.simhashDupPairs128(sigs, maxHamming = 3, maxBucket = cap,
+              signatures = identity, obs = obs))
+          .as[(Long, Long, Int)].collect().toSet)
+    }
+    simhashCase(64)
+    simhashCase(128)
+
+    // embeddings: a 20-vector hot cluster plus six 3-vector clusters, over
+    // 3 sign planes (8 buckets); the cap is the second-largest bucket
+    val dim = 8
+    val planes = Similarity.planes(dim, 3, 42L)
+    def noisy(c: Array[Float], eps: Double) = c.map(x => (x + eps * rnd.nextGaussian()).toFloat)
+    def center() = Array.fill(dim)(rnd.nextGaussian().toFloat)
+    val hotC = center()
+    val vecs = ((0 until 20).map(_ => noisy(hotC, 0.05)) ++
+      (0 until 6).flatMap { _ => val c = center(); (0 until 3).map(_ => noisy(c, 0.15)) })
+      .zipWithIndex.map { case (v, i) => i.toLong -> v.toSeq }
+    val vec = vecs.toMap
+    val embKeys = vecs.map { case (id, v) => id -> Seq(planes.indices.foldLeft(0) { (acc, p) =>
+      val dot = v.indices.map(i => v(i) * planes(p)(i)).sum
+      if (dot > 0) acc | (1 << p) else acc
+    }) }
+    def cos(a: Long, b: Long): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      vec(a).indices.foreach { i =>
+        val x = vec(a)(i).toDouble; val y = vec(b)(i).toDouble
+        dot += x * y; na += x * x; nb += y * y
+      }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    def round6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val embDf = vecs.toDF("vec_id", "embedding")
+    val embCap = bucketSizes(embKeys).sorted.reverse(1)
+    check[Int, (Long, Long, Double)]("embedding", embKeys, embCap,
+      cap => sharedPairs(embKeys, cap).map { case (_, a, b) => (a, b, cos(a, b)) }
+        .filter(_._3 >= 0.9),
+      (cap, obs) => Dedup.embeddingDupPairs(embDf, dim, planes = 3, threshold = 0.9,
+          maxBucket = cap, obs = obs)
+        .as[(Long, Long, Double)].collect().toSet)
+    check[Int, (Long, Long, Double)]("neighbors", embKeys, embCap,
+      cap => sharedPairs(embKeys, cap).toSeq
+        .flatMap { case (_, a, b) => Seq((a, b), (b, a)) }
+        .groupBy(_._1).toSeq.flatMap { case (a, mates) =>
+          mates.map { case (_, b) => (a, b, round6(cos(a, b))) }
+            .sortBy { case (_, b, c) => (-c, b) }.take(2)
+        }.toSet,
+      (cap, obs) => Similarity.bucketedNeighbors(embDf, dim, k = 2, nPlanes = 3,
+          maxBucket = cap, obs = obs)
+        .as[(Long, Long, Double)].collect().toSet)
   }
 
   test("guard telemetry is default-on: drop ledger records a lossy run with NO caller opt-in") {
