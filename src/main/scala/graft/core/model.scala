@@ -105,9 +105,9 @@ final case class CrawlConfig(
     maxRounds: Int = 2,
     seenPartitions: Int = 32,      // bloom bank width; scale knob (10^10 URLs → raise)
     saltFactor: Int = 1,           // >1 splits hot hosts across lanes (bench mode only)
-    bloomExpectedPerPartition: Long = 1000000L,
-    bloomFpp: Double = 0.01,
-    collapseEvery: Int = 8,       // seen-chain collapse + bank-rebuild cycle (rounds)
+    bloomExpectedPerPartition: Long = 1000000L, // cap on one bloom filter's sized keys
+    bloomFpp: Double = 0.01,       // target FPP of the whole bank
+    collapseEvery: Int = 8,       // seen-chain collapse cycle (rounds)
     persistRounds: Boolean = true, // false = bench mode: no snapshot writes
     // Free localCheckpoint blocks eagerly once superseded (instead of
     // waiting for the ContextCleaner). A localCheckpoint'ed RDD cannot

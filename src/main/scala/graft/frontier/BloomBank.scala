@@ -8,37 +8,38 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, IntegerType, StructF
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.sketch.BloomFilter
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.charset.StandardCharsets
 
 /** Partitioned bloom-filter bank over the URL-seen set (north rule: the
   * scale-out realization of the reference's in-memory `seen` dict,
   * /root/reference/crawler/utils/url_deduplicator.py:53-62).
   *
   * The seen set is hash-partitioned by canonical-URL FNV-64 into `width`
-  * independent bloom filters so each filter stays small enough for the
-  * target FPP at 10^10 keys (e.g. width = 4096 × ~2.4M keys/filter at 1%
-  * FPP ≈ 2.9 MB/filter).
+  * partitions. A FILTER SET holds at most one bloom filter per partition,
+  * each sized to the keys it is built from; a bank is the co-partitioned
+  * union of its filter sets, so a pid may hold several filters and
+  * mightContain is true iff any of them says so. Filters are never
+  * merged, so sets of different sizes can share a bank.
   *
   * DISTRIBUTED LAYOUT (round-2 redesign; round 1 collected the bank to the
   * driver and broadcast it whole — O(bank) on the driver and O(bank ×
   * executors) on the network, both scale-killers at the 10^10-key target):
   * the bank lives as an `RDD[(pid, filterBytes)]` under a
-  * `HashPartitioner(width)`, so pid i's blob sits in partition i and NEVER
-  * moves:
+  * `HashPartitioner(width)`, so pid i's blobs sit in partition i and NEVER
+  * move:
   *   - probe: candidates are keyed by pid and `partitionBy`-shuffled to the
   *     bank's partitioner, then `zipPartitions` probes each candidate
-  *     against its partition's blob — only the (small) candidate side
+  *     against its partition's blobs — only the (small) candidate side
   *     crosses the network, the bank side is narrow;
-  *   - merge: per-round banks share the partitioner, so OR-ing blobs is a
-  *     `zipPartitions` too — zero shuffle, O(bank) CPU spread across the
-  *     cluster;
+  *   - union: sets share the partitioner, so a bank of several sets is a
+  *     partitioner-aware union — zero shuffle, zero CPU;
   *   - persistence: one parquet table of (pid, filter, width) rows per
   *     round — written/read with ordinary distributed I/O, nothing
-  *     driver-resident. The width column makes the saved bank
-  *     SELF-DESCRIBING: a resume under a different `seenPartitions` config
-  *     keeps probing at the width the filters were BUILT with (pid =
-  *     hash(url) mod built-width). Re-partitioning bloom filters is
-  *     impossible, and probing saved filters at a different modulus would
-  *     turn bloom "false" — which the dedup tier treats as authoritative
+  *     driver-resident. A serialized filter records its own bit and hash
+  *     counts; the width column makes load() probe at the width the
+  *     filters were BUILT with (pid = hash(url) mod built-width), since
+  *     probing saved filters at a different modulus would turn bloom
+  *     "false" — which the dedup tier treats as authoritative
   *     definitely-new — into silent re-crawls.
   *
   * CORRECTNESS: the bloom is a PRE-FILTER ONLY. `mightContain = false` is
@@ -49,19 +50,14 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   */
 object DistBloomBank {
 
-  /** A bank: its build GEOMETRY (width + per-filter expected insertions +
-    * fpp — `mergeInPlace` requires identical numBits/numHashFunctions, so
-    * ALL of it must survive a resume, not just the width) plus
-    * (pid, serialized filter) rows, always partitioned by
-    * HashPartitioner(width) with pid i in partition i (Int hashCode is
-    * identity). All probes derive pid from `width`, never from the current
-    * session config.
+  /** A bank: its width plus (pid, serialized filter) rows, always
+    * partitioned by HashPartitioner(width) with pid i in partition i (Int
+    * hashCode is identity). All probes derive pid from `width`, never from
+    * the current session config.
     */
-  final case class Bank(width: Int, expected: Long, fpp: Double,
-      rdd: RDD[(Int, Array[Byte])]) {
+  final case class Bank(width: Int, rdd: RDD[(Int, Array[Byte])]) {
     /** MEMORY_AND_DISK: an evicted MEMORY_ONLY bank partition would
-      * recompute through every prior round's merge lineage (or, post
-      * rebuild, one seen-chain scan) — blobs are small, disk is cheap.
+      * recompute through a seen-chain scan — blobs are small, disk is cheap.
       */
     def persist(): Bank = { rdd.persist(StorageLevel.MEMORY_AND_DISK); this }
     def unpersist(): Bank = { rdd.unpersist(); this }
@@ -74,50 +70,49 @@ object DistBloomBank {
   private def deser(b: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new ByteArrayInputStream(b))
 
-  /** Build one round's bank from a (canon) DataFrame: shuffle urls to their
-    * pid's partition, build exactly one filter per non-empty pid there.
-    * Pids with no urls this round emit nothing (probe treats a missing
-    * blob as mightContain = false, which is exact: nothing was inserted).
+  /** Build one filter set from a (canon) DataFrame: shuffle urls to their
+    * pid's partition and build exactly one filter per non-empty pid there,
+    * sized to the urls its pid holds, capped at `maxPerFilter`. The build
+    * buffers up to `maxPerFilter` urls to count them, so a filter matches
+    * its own load however unevenly the urls spread over pids; past the cap
+    * the filter is sized at the cap and the rest stream in. Pids with no
+    * urls emit nothing (probe treats a missing blob as mightContain =
+    * false, which is exact: nothing was inserted).
     */
-  def buildRound(df: DataFrame, canonCol: String, partitions: Int,
-      expectedPerPartition: Long, fpp: Double): Bank = {
-    val p = partitions; val exp = expectedPerPartition; val f = fpp
-    Bank(p, exp, f, df.select(canonCol).rdd
+  def buildRound(df: DataFrame, canonCol: String, width: Int, maxPerFilter: Long,
+      fpp: Double): Bank = {
+    val p = width; val f = fpp; val cap = maxPerFilter
+    Bank(p, df.select(canonCol).rdd
       .map(r => (UrlCanon.partition(r.getString(0), p), r.getString(0)))
       .partitionBy(new HashPartitioner(p))
       .mapPartitions({ it =>
-        if (it.isEmpty) Iterator.empty
+        val head = scala.collection.mutable.ArrayBuffer.empty[String]
+        var pid = -1
+        while (head.size < cap && it.hasNext) { val (k, u) = it.next(); pid = k; head += u }
+        if (head.isEmpty) Iterator.empty
         else {
-          val bf = BloomFilter.create(exp, f)
-          var pid = -1
-          it.foreach { case (k, u) => pid = k; bf.putString(u) }
+          val bf = BloomFilter.create(head.size.toLong, f)
+          head.foreach(bf.putString)
+          it.foreach { case (_, u) => bf.putString(u) }
           Iterator((pid, ser(bf)))
         }
       }, preservesPartitioning = true))
   }
 
-  /** OR-merge two co-partitioned banks — narrow (no shuffle). */
-  def merge(a: Bank, b: Bank): Bank = {
-    require(a.width == b.width && a.expected == b.expected && a.fpp == b.fpp,
-      s"bank geometry mismatch: (${a.width},${a.expected},${a.fpp}) vs " +
-        s"(${b.width},${b.expected},${b.fpp}) — mergeInPlace needs identical filter geometry")
-    Bank(a.width, a.expected, a.fpp,
-      a.rdd.zipPartitions(b.rdd, preservesPartitioning = true) { (ia, ib) =>
-      val m = scala.collection.mutable.LinkedHashMap.empty[Int, BloomFilter]
-      (ia ++ ib).foreach { case (pid, bytes) =>
-        m.get(pid) match {
-          case Some(g) => g.mergeInPlace(deser(bytes))
-          case None    => m(pid) = deser(bytes)
-        }
-      }
-      m.iterator.map { case (pid, bf) => (pid, ser(bf)) }
-    })
+  /** The bank of several filter sets of one width — a partitioner-aware
+    * union, narrow on every set (no shuffle, no merge).
+    */
+  def union(sets: Seq[Bank]): Bank = {
+    require(sets.nonEmpty && sets.forall(_.width == sets.head.width),
+      s"filter sets must share one width: ${sets.map(_.width).mkString(",")}")
+    if (sets.size == 1) sets.head
+    else Bank(sets.head.width, sets.head.rdd.sparkContext.union(sets.map(_.rdd)))
   }
 
   /** Adds boolean column `flag` = bank.mightContain(canon). Only the
     * candidate rows shuffle (to the bank's partitioner — pid computed at
     * the BANK's width, regardless of session config); each task probes its
-    * partition's blob in place.
+    * partition's blobs in place.
     */
   def probe(cands: DataFrame, canonCol: String, bank: Bank, flag: String): DataFrame = {
     val spark = cands.sparkSession
@@ -130,8 +125,9 @@ object DistBloomBank {
     val probed = keyed.zipPartitions(bank.rdd, preservesPartitioning = false) { (cit, bit) =>
       val filters = bit.map(kv => deser(kv._2)).toArray
       cit.map { case (_, r) =>
-        val maybe = filters.nonEmpty &&
-          filters.exists(_.mightContainString(r.getString(idx)))
+        // encoded once for all of the pid's filters (as mightContainString does)
+        val url = r.getString(idx).getBytes(StandardCharsets.UTF_8)
+        val maybe = filters.exists(_.mightContainBinary(url))
         Row.fromSeq(r.toSeq :+ maybe)
       }
     }
@@ -142,66 +138,50 @@ object DistBloomBank {
   private val saveSchema = StructType(Seq(
     StructField("pid", IntegerType, nullable = false),
     StructField("filter", BinaryType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("expected", org.apache.spark.sql.types.LongType, nullable = false),
-    StructField("fpp", org.apache.spark.sql.types.DoubleType, nullable = false)))
+    StructField("width", IntegerType, nullable = false)))
 
-  /** Persist as a parquet table of (pid, filter, width, expected, fpp) —
-    * distributed write; the geometry columns make the table
-    * self-describing for load().
+  /** Persist as a parquet table of (pid, filter, width) rows — distributed
+    * write; the width column makes the table self-describing for load().
     */
   def save(spark: SparkSession, bank: Bank, path: String): Unit =
-    spark.createDataFrame(
-      bank.rdd.map { case (pid, b) => Row(pid, b, bank.width, bank.expected, bank.fpp) },
-      saveSchema)
+    spark.createDataFrame(bank.rdd.map { case (pid, b) => Row(pid, b, bank.width) }, saveSchema)
       .write.mode("overwrite").parquet(path)
 
-  /** Load a saved bank at ITS OWN recorded geometry (never the current
-    * config's: filters cannot be re-hashed or re-sized, and probing them
-    * at a different modulus silently re-crawls seen URLs, while merging
-    * with differently-sized round filters throws in mergeInPlace). A
-    * resume that changed the config simply keeps the old geometry until
-    * the bank is next rebuilt from the seen chain. A bank saved without
-    * geometry columns (foreign/older format) returns None — the caller's
-    * exact-anti-join fallback carries correctness.
+  /** Load a saved bank at ITS OWN recorded width (never the current
+    * config's: filters cannot be re-hashed, and probing them at a different
+    * modulus silently re-crawls seen URLs). A bank saved without a width
+    * column, or with no rows, returns None.
     */
   def load(spark: SparkSession, path: String): Option[Bank] = {
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(path))) return None
     val df = spark.read.parquet(path)
-    val cols = df.schema.fieldNames.toSet
-    if (!Set("pid", "filter", "width", "expected", "fpp").subsetOf(cols)) {
-      System.err.println(s"[bloom] bank at $path lacks geometry columns — " +
-        "falling back to exact-only dedup for this resume")
-      return None
-    }
-    val geom = df.select("width", "expected", "fpp").distinct().collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    if (geom.isEmpty) return None // empty bank: nothing was ever inserted
-    require(geom.length == 1, s"corrupt bank at $path: mixed geometry ${geom.mkString(",")}")
-    val (w, exp, f) = geom(0)
-    Some(Bank(w, exp, f, df.select("pid", "filter").rdd
+    if (!Set("pid", "filter", "width").subsetOf(df.schema.fieldNames.toSet)) return None
+    val widths = df.select("width").distinct().collect().map(_.getInt(0))
+    if (widths.isEmpty) return None // empty bank: nothing was ever inserted
+    require(widths.length == 1, s"corrupt bank at $path: mixed widths ${widths.mkString(",")}")
+    val w = widths(0)
+    Some(Bank(w, df.select("pid", "filter").rdd
       .map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
       .partitionBy(new HashPartitioner(w))))
   }
 
   /** Driver-side view for tests/diagnostics ONLY (collects the bank). */
   def toLocal(bank: Bank): BloomBank = {
-    val filters = new Array[BloomFilter](bank.width)
-    bank.rdd.collect().foreach { case (pid, b) => filters(pid) = deser(b) }
+    val filters = Array.fill(bank.width)(Vector.empty[BloomFilter])
+    bank.rdd.collect().foreach { case (pid, b) => filters(pid) :+= deser(b) }
     new BloomBank(bank.width, filters)
   }
 }
 
 /** Driver-local bank view — used by tests and the sequential oracle's
   * cross-checks; the engine itself only ever touches DistBloomBank.
-  * A null slot means "no urls ever hashed to this pid" (mightContain
-  * = false, exactly).
+  * Each slot holds every filter of its pid, one per filter set; an empty
+  * slot means "no urls ever hashed to this pid" (mightContain = false,
+  * exactly).
   */
-final class BloomBank(val partitions: Int, val filters: Array[BloomFilter]) extends Serializable {
+final class BloomBank(val partitions: Int, val filters: Array[Vector[BloomFilter]]) extends Serializable {
   require(filters.length == partitions)
 
-  def mightContain(canonUrl: String): Boolean = {
-    val f = filters(UrlCanon.partition(canonUrl, partitions))
-    f != null && f.mightContainString(canonUrl)
-  }
+  def mightContain(canonUrl: String): Boolean =
+    filters(UrlCanon.partition(canonUrl, partitions)).exists(_.mightContainString(canonUrl))
 }

@@ -67,9 +67,10 @@ final case class FetchParseRow(
   *     → relevance filter, round 0 only (manager.py:176-203, θ=0.5)
   *     → robots disallow filter (north-rule budget)
   *     → within-round first-wins dedup (window by canon, order by discovery)
-  *     → cross-round dedup: bloom PRE-filter (partitioned bank, broadcast)
-  *       + exact left-anti join vs the seen table (false positives re-checked,
-  *       never dropped — SURVEY §7.4.3)
+  *     → cross-round dedup: bloom PRE-filter (partitioned bank; candidates
+  *       shuffle to the filters, which never move) + exact left-anti join vs
+  *       the seen table (false positives re-checked, never dropped — SURVEY
+  *       §7.4.3)
   *     → global sequence assignment (scalable two-pass: range partition +
   *       per-partition row_number + offset cumsum — no single-partition window)
   *     → politeness schedule: repartition by (host, salt lane) hash,
@@ -174,11 +175,13 @@ final class Crawler(
   // history every round (round-1 kept one ever-growing union — its
   // lineage AND its shuffle grew with total-seen). The chain is collapsed
   // into one partitioned cache every `collapseEvery` rounds to bound plan
-  // depth. The bloom bank is a partitioner-aware distributed RDD — see
-  // DistBloomBank (nothing bank-sized ever lands on the driver or gets
-  // broadcast).
-  private var seenParts: Vector[DataFrame] = Vector.empty
-  private var bankAcc: Option[DistBloomBank.Bank] = None
+  // depth. Each chain part carries one bloom filter set built from it; the
+  // bloom bank is the union of the parts' sets (see DistBloomBank —
+  // nothing bank-sized ever lands on the driver or gets broadcast). The
+  // chain and the bank change together in exactly three places: round
+  // append, collapse and resume.
+  private case class SeenPart(canon: DataFrame, bloom: DistBloomBank.Bank)
+  private var seenParts: Vector[SeenPart] = Vector.empty
   private var stateAcc: Option[DataFrame] = None
   private var lastStateCount: Long = 0L
   private var nextSeqAcc: Long = 0L
@@ -193,6 +196,27 @@ final class Crawler(
   private val collapseEvery = config.collapseEvery
   private val seenP = spark.sessionState.conf.numShufflePartitions
 
+  /** A chain part and its filter set, built at `fpp`. The set's count is
+    * the part's first scan: it materializes the part's cache too.
+    */
+  private def seenPart(canon: DataFrame, fpp: Double): SeenPart = {
+    val bloom = DistBloomBank.buildRound(canon, "canon", config.seenPartitions,
+      config.bloomExpectedPerPartition, fpp).persist()
+    bloom.count()
+    SeenPart(canon, bloom)
+  }
+
+  // The bank's FPP budget, split by load: a bank holds at most one base
+  // part (the collapsed or resumed chain, which holds most keys) plus
+  // collapseEvery round parts, or collapseEvery + 1 round parts before the
+  // first collapse (the round's commit saves the bank before the
+  // collapse). Half the budget to the base and the other half shared by
+  // the round parts keeps the union at or below bloomFpp either way.
+  private val baseFpp = config.bloomFpp / 2
+  private val roundFpp = config.bloomFpp / (2 * math.max(1, collapseEvery))
+
+  private def bank: DistBloomBank.Bank = DistBloomBank.union(seenParts.map(_.bloom))
+
   /** Total URLs scheduled (= fetched+deduped) so far in this run. */
   def totalScheduled: Long = nextSeqAcc
 
@@ -201,24 +225,11 @@ final class Crawler(
     val resumeFrom = store.latestRound().map(_ + 1).getOrElse(0)
     if (resumeFrom > 0) { // resume: load cross-round state from the store
       val last = resumeFrom - 1
-      seenParts = store.read(spark, "seen").map(df =>
-        df.select($"canonUrl".as("canon")).repartition(seenP, $"canon").persist()).toVector
-      // the saved bank is self-describing: it loads at the geometry it was
-      // BUILT with (a changed config is adopted only at the next seen-chain
-      // collapse, when the bank is rebuilt from scratch)
-      bankAcc = DistBloomBank.load(spark, store.bloomPath(last)).map(_.persist())
-      if (bankAcc.isEmpty && seenParts.nonEmpty) {
-        // unusable saved bank (foreign/older format) with real history: the
-        // bank MUST cover the whole seen set before the first round-bank
-        // fold installs a partial one — a partial bank's authoritative
-        // "definitely new" would bypass the exact tier for pre-resume URLs
-        // from the SECOND post-resume round on. Rebuild from the chain.
-        val rebuilt = DistBloomBank.buildRound(
-          seenParts.reduce(_.unionByName(_)), "canon", config.seenPartitions,
-          config.bloomExpectedPerPartition, config.bloomFpp).persist()
-        rebuilt.count()
-        bankAcc = Some(rebuilt)
-      }
+      // the saved banks are never read back: the seen chain resumes as one
+      // base part whose filter set is built at the current config
+      seenParts = store.read(spark, "seen").map(df => seenPart(
+        df.select($"canonUrl".as("canon")).repartition(seenP, $"canon").persist(),
+        baseFpp)).toVector
       // host_state is committed as per-round DELTAS (only the round's
       // touched (host, lane) rows); the current state is the
       // latest-round-wins fold — paid once here, not per commit
@@ -285,13 +296,15 @@ final class Crawler(
     // Persisted: the sequencer's range partitioner SAMPLES its input, so an
     // unpersisted plan would re-run the dedup window + anti-join three
     // times (sample, shuffle, count). Candidate rows are narrow.
-    val fresh = antiJoinSeen(round, roundUnique).persist()
+    val (deduped, probed) = antiJoinSeen(roundUnique)
+    val fresh = deduped.persist()
 
     // global sequence assignment, continuing from the in-flight counter
     val seqStart = nextSeqAcc
     val (sequencedRaw, frontierCount, seqCache) =
       Sequencer.addSeq(fresh, Seq(col("ord0"), col("ord1")), "seq", seqStart)
     fresh.unpersist() // seqCache is materialized by addSeq's count pass
+    probed.foreach(dropCheckpoint)
     // the consumed candidates frame (last round's materializedNext, a
     // localCheckpoint) has flowed into the now-materialized seqCache —
     // free its checkpoint blocks now instead of waiting for the
@@ -375,33 +388,12 @@ final class Crawler(
     //  - repartition + persist ON TOP of the checkpoint keeps the
     //    canon-hash layout visible through InMemoryRelation, so the
     //    per-round anti-joins stay exchange-free on the history side.
-    // Lazy checkpoint: the first pass (the bank build below) materializes
-    // checkpoint blocks, shuffle and columnar cache in ONE scan.
+    // Lazy checkpoint: the first pass (the part's filter-set build)
+    // materializes checkpoint blocks, shuffle and columnar cache in ONE scan.
     val roundSeen = frontier.select($"canonUrl".as("canon")).toDF()
       .localCheckpoint(false)
       .repartition(seenP, $"canon").persist()
-    seenParts :+= roundSeen
-
-    // bloom bank fold: build this round's bank from the cached roundSeen,
-    // then OR-merge into the accumulated bank — both narrow on the bank
-    // side (no driver collect, no broadcast, no bank-sized shuffle).
-    // Geometry (width + expected + fpp) follows the ACCUMULATED bank (a
-    // resumed bank keeps the geometry it was built with — filters cannot be
-    // re-hashed or re-sized, and mergeInPlace requires identical geometry);
-    // a changed config is adopted at the next collapse-cycle rebuild.
-    val (bw, bexp, bfpp) = bankAcc.map(b => (b.width, b.expected, b.fpp))
-      .getOrElse((config.seenPartitions, config.bloomExpectedPerPartition, config.bloomFpp))
-    val roundBank = DistBloomBank.buildRound(roundSeen, "canon", bw, bexp, bfpp).persist()
-    val mergedBank = bankAcc match {
-      case Some(old) => DistBloomBank.merge(old, roundBank).persist()
-      case None      => roundBank
-    }
-    mergedBank.count()
-    if (!bankAcc.contains(mergedBank)) {
-      bankAcc.foreach(_.unpersist())
-      if (mergedBank ne roundBank) roundBank.unpersist()
-    }
-    bankAcc = Some(mergedBank)
+    seenParts :+= seenPart(roundSeen, roundFpp)
 
     if (config.persistRounds) {
       // the round's observed fetched-row count (outcome is fully
@@ -416,28 +408,21 @@ final class Crawler(
 
     // bound the seen chain: collapse into one partitioned cache every
     // `collapseEvery` rounds (plan depth + per-round join fan-in stay O(1)).
-    // The bloom bank is REBUILT from the collapsed chain on the same cycle:
-    // the per-round OR-merge chain otherwise accumulates O(rounds) zip
-    // lineage (a lost blob would recompute through every prior round), and
-    // the rebuild is also where a config width change takes effect.
+    // The parts' filter sets are dropped with them and the collapsed part
+    // gets one new set.
     if (seenParts.size > collapseEvery) {
       // same checkpoint-below-repartition-below-persist layering as
       // roundSeen: bounded plan depth AND a partitioning the anti-joins
       // can reuse
-      val collapsed = seenParts.reduce(_.unionByName(_))
+      val collapsed = seenParts.map(_.canon).reduce(_.unionByName(_))
         .localCheckpoint(false)
         .repartition(seenP, $"canon").persist()
-      collapsed.count()
+      val base = seenPart(collapsed, baseFpp) // materializes collapsed
       // each chain part layers persist over a localCheckpoint: unpersist
       // drops the cached copy, dropCheckpoint frees the checkpoint blocks
       // underneath (the collapsed frame re-checkpointed all of it above)
-      seenParts.foreach { p => p.unpersist(); dropCheckpoint(p) }
-      seenParts = Vector(collapsed)
-      val rebuilt = DistBloomBank.buildRound(collapsed, "canon",
-        config.seenPartitions, config.bloomExpectedPerPartition, config.bloomFpp).persist()
-      rebuilt.count()
-      bankAcc.foreach(_.unpersist())
-      bankAcc = Some(rebuilt)
+      seenParts.foreach { p => p.canon.unpersist(); dropCheckpoint(p.canon); p.bloom.unpersist() }
+      seenParts = Vector(base)
     }
 
     // next round's candidates are the one frame whose lineage reaches
@@ -470,24 +455,22 @@ final class Crawler(
     * the exact tier would be an Iceberg table bucketed by canon-hash with
     * storage-partitioned joins; the cached-partitioned chain is the
     * in-memory equivalent.
+    *
+    * Returns the fresh candidates and the probed frame, a checkpoint the
+    * caller frees once the fresh candidates are materialized.
     */
-  private def antiJoinSeen(round: Int, cands: DataFrame): DataFrame = {
-    (bankAcc, seenParts) match {
-      case (Some(bank), parts) if parts.nonEmpty =>
-        val flagged = DistBloomBank.probe(cands, "canon", bank, "maybe_seen")
-        val definitelyNew = flagged.filter(!$"maybe_seen")
-        val confirmed = parts.foldLeft(flagged.filter($"maybe_seen")) {
-          (df, seen) => df.join(seen, Seq("canon"), "left_anti")
-        }
-        definitelyNew.unionByName(confirmed).drop("maybe_seen")
-      case (None, parts) if parts.nonEmpty =>
-        // defensive: history without a bank (e.g. an empty saved bank) —
-        // fall back to exact anti-joins only; correctness never depends on
-        // the bloom tier existing, only on it never lying "false"
-        parts.foldLeft(cands) { (df, seen) => df.join(seen, Seq("canon"), "left_anti") }
-      case _ => cands // first round of a fresh run
+  private def antiJoinSeen(cands: DataFrame): (DataFrame, Option[DataFrame]) =
+    if (seenParts.isEmpty) (cands, None) // first round of a fresh run
+    else {
+      // materialized once (its rows are narrow): both union branches below
+      // read it, and a lazy plan would run the probe pass once per branch
+      val flagged = DistBloomBank.probe(cands, "canon", bank, "maybe_seen").localCheckpoint()
+      val definitelyNew = flagged.filter(!$"maybe_seen")
+      val confirmed = seenParts.foldLeft(flagged.filter($"maybe_seen")) {
+        (df, part) => df.join(part.canon, Seq("canon"), "left_anti")
+      }
+      (definitelyNew.unionByName(confirmed).drop("maybe_seen"), Some(flagged))
     }
-  }
 
   /** Host-partitioned, virtually-paced fetch + parse (T1/T2 semantics).
     * Emits the fetch results AND, after each partition drains, the final
@@ -644,16 +627,13 @@ final class Crawler(
     // Distributed parquet write of (pid, filter) rows — nothing collected.
     // It rides the commit's parallel write wave (the manifest still lands
     // only after every write, bank included, has completed).
-    val bankSave: Seq[() => Unit] = bankAcc.toSeq.map(b =>
-      () => DistBloomBank.save(spark, b, store.bloomPath(round)))
-
     store.commit(round,
       Map("docs" -> docs, "crawl_log" -> crawlLog, "seen" -> seen,
         "metrics" -> sizedForWrite(metrics, 1L, 1L),
         "host_state" -> sizedForWrite(roundStateDelta, lastStateCount, 500000L)),
       knownCounts = Map("seen" -> frontierCount, "crawl_log" -> frontierCount),
       metricsJson = s"""{"next_seq":$nextSeq,"frontier":$frontierCount}""",
-      alsoParallel = bankSave)
+      alsoParallel = Seq(() => DistBloomBank.save(spark, bank, store.bloomPath(round))))
   }
 }
 

@@ -32,11 +32,13 @@ final class SnapshotStore(val root: String) {
 
   def committedRounds(): Seq[Int] = {
     if (!Files.exists(manifestDir)) return Seq.empty
-    Files.list(manifestDir).iterator().asScala
+    val listing = Files.list(manifestDir) // holds a directory handle until closed
+    try listing.iterator().asScala
       .map(_.getFileName.toString)
       .collect { case s if s.startsWith("manifest-") && s.endsWith(".json") =>
         s.stripPrefix("manifest-").stripSuffix(".json").toInt }
-      .toSeq.sorted
+      .toVector.sorted
+    finally listing.close()
   }
 
   def latestRound(): Option[Int] = committedRounds().lastOption
@@ -53,7 +55,10 @@ final class SnapshotStore(val root: String) {
     * would otherwise hold the whole cluster idle in sequence — overlapped,
     * they back-fill executors under the fat docs write. The manifest is
     * written only after every write completes (and any failure propagates
-    * before it), so commit atomicity is unchanged.
+    * before it), so commit atomicity is unchanged. A failed write does not
+    * cut the others short: commit awaits every write before it rethrows the
+    * first failure, so nothing still writes into `round=<r>` once it has
+    * thrown (a retry in the same process would race it).
     */
   def commit(round: Int, tables: Map[String, DataFrame],
       knownCounts: Map[String, Long] = Map.empty, metricsJson: String = "{}",
@@ -64,11 +69,12 @@ final class SnapshotStore(val root: String) {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(writes.size, 6)))
     try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val all = scala.concurrent.Future.sequence(
-        writes.map(w => scala.concurrent.Future(w())))
-      scala.concurrent.Await.result(all, scala.concurrent.duration.Duration.Inf)
+      val pending = writes.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
+        def call(): Unit = w()
+      }))
+      pending.map(f => scala.util.Try(f.get())).collectFirst {
+        case scala.util.Failure(e: java.util.concurrent.ExecutionException) => throw e.getCause
+      }
     } finally pool.shutdown()
     val entries = tables.keys.map { name =>
       s""""$name":{"path":"${tablePath(name, round)}","rows":${knownCounts.getOrElse(name, -1L)}}"""

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   * 10^7 probes — the measured anchor for the analytical 10^10 row
   * (identical construction, BloomFilter.create, scales linearly in keys:
   * 9.585 bits/key at 1% → ~11.2 GiB over width 4096, ~2.9 MB per
-  * 2.44M-key filter).
+  * 2.44M-key filter). The build buffers up to keys/width urls per task to
+  * size each filter to its pid's count, so give the JVM heap for that.
   *
   * Usage: BloomSizing [keys] [width] [fpp] [probes]
   */

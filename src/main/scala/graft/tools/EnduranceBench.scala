@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Long-crawl endurance: run maxRounds ≫ collapseEvery with snapshot
   * persistence ON and record per-round wall time. A flat per-round cost
   * (normalized by frontier size) is the evidence that the seen-chain
-  * collapse + bank-rebuild cycle bounds lineage/plan depth in practice,
+  * collapse cycle bounds lineage/plan depth in practice,
   * and that delta host-state commits keep per-round commit I/O independent
   * of crawl age. Prints ONE JSON line with the per-round records.
   *

@@ -144,8 +144,8 @@ class CrawlParitySpec extends SparkSpec {
     val dir = tempDir("graft-resume-width")
     new Crawler(spark, config.copy(maxRounds = 1), dir).run(spark.createDataset(seeds))
     // change the ENTIRE bank geometry (width 8→5, expected, fpp): the
-    // resumed bank must keep its built geometry for probes AND for the
-    // round-bank merge (mergeInPlace throws on mismatched filter sizes)
+    // resumed crawl builds one filter set from the seen chain at the new
+    // width and probes at that width only (no saved filter is reused)
     val c2 = new Crawler(spark, config.copy(seenPartitions = 5,
       bloomExpectedPerPartition = 50000L, bloomFpp = 0.03), dir)
     c2.run(spark.createDataset(seeds))
@@ -158,10 +158,10 @@ class CrawlParitySpec extends SparkSpec {
   }
 
   test("resume from a geometry-less (old-format) bank: rebuilt from seen, no re-crawl") {
-    // an unusable saved bank must be REBUILT from the seen chain at resume:
-    // if it were left None, the first round-bank fold would install a bank
-    // covering only that round, whose authoritative 'definitely new' would
-    // re-crawl pre-resume URLs from the second post-resume round on
+    // a resume never reads the saved bank: its filter set is built from the
+    // seen chain, so a bank covering only post-resume rounds (whose
+    // authoritative 'definitely new' would re-crawl pre-resume URLs) can
+    // never be installed, whatever format the saved bank has
     import spark.implicits._
     val cfg3 = config.copy(maxRounds = 3)
     val seeds3 = Fixtures.seeds(200)
@@ -189,7 +189,7 @@ class CrawlParitySpec extends SparkSpec {
 
   test("seen-chain collapse + bank rebuild every round leaves parity intact") {
     // collapseEvery=1 drives the (otherwise 8-round) collapse cycle —
-    // including the round-3 bank REBUILD from the collapsed chain — on
+    // including the new filter set built for the collapsed part — on
     // every round of a 3-round crawl; results must be byte-identical
     import spark.implicits._
     val cfgC = config.copy(maxRounds = 3, collapseEvery = 1)
