@@ -89,8 +89,7 @@ object Dedup {
     * Returns (band, a, b).
     */
   def lshCandidatePairs(sigs: DataFrame, k: Int = 8, bands: Int = 4,
-      maxBucket: Int = 10000,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
+      maxBucket: Int = 10000): DataFrame = {
     val rows = k / bands
     val bandCols = (0 until bands).map { b =>
       struct(lit(b).as("band"),
@@ -99,8 +98,7 @@ object Dedup {
     val keyed = sigs
       .select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-    blockedPairs(keyed, Seq("band", "key"), "doc_id", Nil, maxBucket, obs,
-        "lshCandidatePairs")
+    blockedPairs(keyed, Seq("band", "key"), "doc_id", Nil, maxBucket, "lshCandidatePairs")
       .filter(col("a") < col("b"))
       .select(col("band"), col("a"), col("b"))
       .distinct()
@@ -121,11 +119,10 @@ object Dedup {
     * and reports the drops under `label`.
     */
   private[ops] def blockedPairs(keyed: DataFrame, keys: Seq[String], id: String,
-      payload: Seq[(String, String)], maxBucket: Int,
-      obs: Option[Guard.GuardObservation], label: String): DataFrame = {
+      payload: Seq[(String, String)], maxBucket: Int, label: String): DataFrame = {
     val p = keyed.sparkSession.sessionState.conf.numShufflePartitions
     val guarded = Guard.capBuckets(keyed.repartition(p, keys.map(col): _*), keys,
-      maxBucket, obs, label)
+      maxBucket, label)
     def side(s: String) = guarded.select(keys.map(col) ++
       (col(id).as(s) +: payload.map { case (c, n) => col(c).as(n + s) }): _*)
     side("a").join(side("b"), keys)
@@ -149,9 +146,8 @@ object Dedup {
 
   /** Full MinHash-LSH near-dup pipeline: candidates ∧ jaccard ≥ threshold. */
   def minhashDupPairs(docs: DataFrame, k: Int = 8, bands: Int = 4,
-      threshold: Double = 0.7,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
-    val pairs = lshCandidatePairs(minhashSignatures(docs, k), k, bands, obs = obs)
+      threshold: Double = 0.7): DataFrame = {
+    val pairs = lshCandidatePairs(minhashSignatures(docs, k), k, bands)
     verifyJaccard(docs, pairs).filter(col("jaccard") >= threshold)
   }
 
@@ -164,8 +160,7 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, shingleW: Int = 3,
       threshold: Double = 0.5, maxDf: Int = 1000,
-      joinParallelism: Int = 0,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
+      joinParallelism: Int = 0): DataFrame = {
     val spark = docs.sparkSession
     val p = if (joinParallelism > 0) joinParallelism
       else spark.sessionState.conf.numShufflePartitions
@@ -175,7 +170,7 @@ object Dedup {
     val inv = sets.select(col("doc_id"), col("setSize"), explode(col("sh")).as("sh"))
     // inverted-index guard: drop degenerate hub shingles (skipped when
     // capless — the exact-oracle contract query runs capless)
-    val filtered = Guard.capBuckets(inv, Seq("sh"), maxDf, obs, "ngramJaccardPairs")
+    val filtered = Guard.capBuckets(inv, Seq("sh"), maxDf, "ngramJaccardPairs")
     // EXPLICIT fixed-width repartition on the join key. The join inputs are
     // tiny (one row per doc-shingle) but the join OUTPUT is quadratic in
     // per-shingle df — AQE, which sizes partitions from the map-side input
@@ -272,18 +267,18 @@ object Dedup {
     * cap and recall collapses. Pass `corpusSize` (a known or estimated doc
     * count) to fail loudly at that ceiling instead of returning an
     * empty-ish answer (at maxHamming=3/64 bits/maxBucket=10k the ceiling
-    * is ~650M docs; beyond it, shard the corpus or raise maxBucket);
-    * `obs` reports the realized drop fraction of any run.
+    * is ~650M docs; beyond it, shard the corpus or raise maxBucket); the
+    * drop ledger (`Guard.drainDropLedger`) reports the realized drop
+    * fraction of any run.
     */
   def simhashDupPairs(docs: DataFrame, maxHamming: Int = 3, bits: Int = 64,
       maxBucket: Int = 10000,
       signatures: DataFrame => DataFrame = simhashFnvSigs(_),
-      corpusSize: Long = -1L,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
+      corpusSize: Long = -1L): DataFrame = {
     val nBlocks = maxHamming + 1
     require(nBlocks <= bits, s"maxHamming $maxHamming needs $nBlocks blocks > $bits bits")
     simhashBlockedPairs(signatures(docs), Seq("sig" -> "sig"), maxHamming, bits,
-      maxBucket, corpusSize, obs, "simhashDupPairs")
+      maxBucket, corpusSize, "simhashDupPairs")
   }
 
   /** The SimHash pair body shared by the 64- and 128-bit entries, over a
@@ -293,8 +288,7 @@ object Dedup {
     * rest); the verify is the popcount of the XOR summed over the limbs.
     */
   private def simhashBlockedPairs(sigs: DataFrame, limbs: Seq[(String, String)],
-      maxHamming: Int, bits: Int, maxBucket: Int, corpusSize: Long,
-      obs: Option[Guard.GuardObservation], label: String): DataFrame = {
+      maxHamming: Int, bits: Int, maxBucket: Int, corpusSize: Long, label: String): DataFrame = {
     val nBlocks = maxHamming + 1
     val width = bits / nBlocks
     Guard.warnIfUndersized(label, corpusSize, math.pow(2.0, width), maxBucket)
@@ -308,7 +302,7 @@ object Dedup {
     val sigCols = limbs.map(l => col(l._1))
     val keyed = sigs.select(col("doc_id") +: sigCols :+ explode(array(blocks: _*)).as("bk"): _*)
       .select(col("doc_id") +: sigCols :+ col("bk.q").as("q") :+ col("bk.key").as("key"): _*)
-    blockedPairs(keyed, Seq("q", "key"), "doc_id", limbs, maxBucket, obs, label)
+    blockedPairs(keyed, Seq("q", "key"), "doc_id", limbs, maxBucket, label)
       .filter(col("a") < col("b"))
       .select(col("a"), col("b"), limbs.map { case (_, n) =>
         bit_count(col(n + "a").bitwiseXOR(col(n + "b"))) }.reduce(_ + _).as("hamming"))
@@ -399,13 +393,12 @@ object Dedup {
   def simhashDupPairs128(docs: DataFrame, maxHamming: Int = 3,
       maxBucket: Int = 10000,
       signatures: DataFrame => DataFrame = simhashFnv128Sigs(_),
-      corpusSize: Long = -1L,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
+      corpusSize: Long = -1L): DataFrame = {
     val nBlocks = maxHamming + 1
     require(nBlocks >= 2 && nBlocks <= 128,
       s"simhashDupPairs128 needs 1 <= maxHamming <= 127, got $maxHamming")
     simhashBlockedPairs(signatures(docs), Seq("sig_hi" -> "h", "sig_lo" -> "l"),
-      maxHamming, 128, maxBucket, corpusSize, obs, "simhashDupPairs128")
+      maxHamming, 128, maxBucket, corpusSize, "simhashDupPairs128")
   }
 
   /** Corpus-aware SimHash near-dup (mirrors embeddingDupPairsAuto): counts
@@ -420,17 +413,14 @@ object Dedup {
     */
   def simhashDupPairsAuto(docs: DataFrame, maxHamming: Int = 3,
       maxBucket: Int = 10000, headroom: Int = 8,
-      assumeCorpusSize: Long = -1L,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
+      assumeCorpusSize: Long = -1L): DataFrame = {
     val n = if (assumeCorpusSize > 0) assumeCorpusSize else docs.count()
     val w64 = 64 / (maxHamming + 1)
     val fits64 = n.toDouble / math.pow(2.0, w64) <= maxBucket.toDouble / headroom
     if (fits64)
-      simhashDupPairs(docs, maxHamming, bits = 64, maxBucket = maxBucket,
-        corpusSize = n, obs = obs)
+      simhashDupPairs(docs, maxHamming, bits = 64, maxBucket = maxBucket, corpusSize = n)
     else
-      simhashDupPairs128(docs, maxHamming, maxBucket = maxBucket,
-        corpusSize = n, obs = obs)
+      simhashDupPairs128(docs, maxHamming, maxBucket = maxBucket, corpusSize = n)
   }
 
   // ---- embedding cosine near-dup ----------------------------------------------------
@@ -473,18 +463,17 @@ object Dedup {
     * within-bucket join can go quadratic. `embeddingDupPairsAuto` derives
     * `planes` from the corpus count; `corpusSize` (when known) makes a
     * hand-set geometry fail loudly instead of silently losing recall, and
-    * `obs` reports the realized drop fraction.
+    * the drop ledger reports the realized drop fraction.
     */
   def embeddingDupPairs(embeddings: DataFrame, dim: Int, planes: Int = 8,
       threshold: Double = 0.95, seed: Long = 42L, maxBucket: Int = 10000,
-      corpusSize: Long = -1L,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
+      corpusSize: Long = -1L): DataFrame = {
     Guard.warnIfUndersized("embeddingDupPairs", corpusSize,
       math.pow(2.0, planes), maxBucket)
     val bucketed = Par.widen(embeddings).withColumn("bucket",
       Similarity.signBucketCol(col("embedding"), dim, planes, seed))
     blockedPairs(bucketed, Seq("bucket"), "vec_id", Seq("embedding" -> "v"),
-        maxBucket, obs, "embeddingDupPairs")
+        maxBucket, "embeddingDupPairs")
       .filter(col("a") < col("b"))
       .withColumn("cosine", cosineCol(col("va"), col("vb")))
       .filter(col("cosine") >= threshold)
@@ -498,13 +487,11 @@ object Dedup {
     */
   def embeddingDupPairsAuto(embeddings: DataFrame, dim: Int,
       threshold: Double = 0.95, seed: Long = 42L, maxBucket: Int = 10000,
-      targetBucket: Int = 0,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
+      targetBucket: Int = 0): DataFrame = {
     val n = embeddings.count()
     val target = if (targetBucket > 0) targetBucket else math.max(1, maxBucket / 8)
     val planes = Guard.autoPlanes(n, target)
-    embeddingDupPairs(embeddings, dim, planes, threshold, seed, maxBucket,
-      corpusSize = n, obs = obs)
+    embeddingDupPairs(embeddings, dim, planes, threshold, seed, maxBucket, corpusSize = n)
   }
 
   // ---- dup-pair clustering (connected components) ---------------------------

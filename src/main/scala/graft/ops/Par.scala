@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{DataSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Scan-parallelism guard for expensive per-row stages.
   *
@@ -19,10 +22,30 @@ import org.apache.spark.sql.DataFrame
   * deterministic under retries (sort-before-repartition, SPARK-23207) and
   * irrelevant to every consumer here (aggregations / joins / per-row
   * projections).
+  *
+  * The input's width is read off its physical plan (`width`), never from
+  * `df.rdd`: building that RDD makes AQE run every shuffle stage under the
+  * frame while the caller is still planning. A frame topped by an exchange
+  * therefore reports its planned shuffle width, not the width AQE might
+  * coalesce it to at run time.
   */
 object Par {
   def widen(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+    if (width(df.queryExecution.executedPlan) < target) df.repartition(target) else df
+  }
+
+  /** Output partitions of `plan`, launching no job: the declared
+    * partitioning where the plan has one (exchanges, coalesce, range),
+    * the file splits of a scan, the cached plan's under a cache read,
+    * otherwise the widest child's.
+    */
+  private def width(plan: SparkPlan): Int = plan match {
+    case a: AdaptiveSparkPlanExec => width(a.executedPlan)
+    case m: InMemoryTableScanExec => width(m.relation.cachedPlan)
+    case s: DataSourceScanExec => s.inputRDDs().head.getNumPartitions
+    case p if p.outputPartitioning.numPartitions > 0 => p.outputPartitioning.numPartitions
+    case leaf if leaf.children.isEmpty => leaf.execute().getNumPartitions
+    case p => p.children.map(width).max
   }
 }

@@ -212,8 +212,7 @@ object Similarity {
     */
   def bucketedNeighbors(embeddings: DataFrame, dim: Int, k: Int = 5,
       nPlanes: Int = 8, seed: Long = 42L, maxBucket: Int = 10000,
-      corpusSize: Long = -1L,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
+      corpusSize: Long = -1L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     Guard.warnIfUndersized("bucketedNeighbors", corpusSize,
       math.pow(2.0, nPlanes), maxBucket)
@@ -226,7 +225,7 @@ object Similarity {
     // first makes the top-k reproducible across engines (oracle-checkable)
     // at no semantic cost
     val pairs = Dedup.blockedPairs(bucketed, Seq("bucket"), "vec_id",
-        Seq("embedding" -> "v"), maxBucket, obs, "bucketedNeighbors")
+        Seq("embedding" -> "v"), maxBucket, "bucketedNeighbors")
       .filter(col("a") =!= col("b"))
       .withColumn("cosine", round(Dedup.cosineCol(col("va"), col("vb")), 6))
     val w = Window.partitionBy(col("a")).orderBy(col("cosine").desc, col("b"))
@@ -239,12 +238,10 @@ object Similarity {
     * `maxBucket` (see Dedup.embeddingDupPairsAuto).
     */
   def bucketedNeighborsAuto(embeddings: DataFrame, dim: Int, k: Int = 5,
-      seed: Long = 42L, maxBucket: Int = 10000, targetBucket: Int = 0,
-      obs: Option[Guard.GuardObservation] = None): DataFrame = {
+      seed: Long = 42L, maxBucket: Int = 10000, targetBucket: Int = 0): DataFrame = {
     val n = embeddings.count()
     val target = if (targetBucket > 0) targetBucket else math.max(1, maxBucket / 8)
     val nPlanes = Guard.autoPlanes(n, target)
-    bucketedNeighbors(embeddings, dim, k, nPlanes, seed, maxBucket,
-      corpusSize = n, obs = obs)
+    bucketedNeighbors(embeddings, dim, k, nPlanes, seed, maxBucket, corpusSize = n)
   }
 }

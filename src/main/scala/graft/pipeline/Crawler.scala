@@ -270,14 +270,18 @@ final class Crawler(
   /** Rebuild the next round's candidates from committed docs (resume path):
     * outlinks of the latest committed round's docs.
     */
-  private def candidatesFromStore(round: Int): Dataset[Candidate] = {
-    store.read(spark, "docs").map { docs =>
-      docs.filter($"round" === (round - 1))
-        .select($"seq".as("ord0"), posexplode($"outlinks").as(Seq("ord1", "url")), $"keyword")
-        .select($"url", $"keyword", $"ord0", $"ord1".cast("int"))
-        .as[Candidate]
-    }.getOrElse(spark.emptyDataset[Candidate])
-  }
+  private def candidatesFromStore(round: Int): Dataset[Candidate] =
+    store.read(spark, "docs").map(docs => outlinkCandidates(docs.filter($"round" === (round - 1))))
+      .getOrElse(spark.emptyDataset[Candidate])
+
+  /** Candidates from fetched docs: their outlinks in (parent seq, link idx)
+    * order, inheriting the parent's keyword (orchestrator.py:222-223
+    * analogue).
+    */
+  private def outlinkCandidates(docs: DataFrame): Dataset[Candidate] =
+    docs.select($"seq".as("ord0"), $"keyword", posexplode($"outlinks").as(Seq("ord1", "url")))
+      .select($"url", $"keyword", $"ord0", $"ord1".cast("int"))
+      .as[Candidate]
 
   /** One crawl round; returns (next round's candidates, their count). */
   def runRound(round: Int, candidates: Dataset[Candidate]): (Dataset[Candidate], Long) = {
@@ -341,13 +345,7 @@ final class Crawler(
     val results = outcome.where($"_1".isNotNull).select($"_1.*")
     val hostStates = outcome.where($"_2".isNotNull).select($"_2.*")
 
-    // next-round candidates: outlinks in (parent seq, link idx) order,
-    // inheriting the parent's keyword (orchestrator.py:222-223 analogue)
-    val next = results
-      .filter($"status" === "fetched")
-      .select($"seq".as("ord0"), $"keyword", posexplode($"outlinks").as(Seq("ord1", "url")))
-      .select($"url", $"keyword", $"ord0", $"ord1".cast("int"))
-      .as[Candidate]
+    val next = outlinkCandidates(results.filter($"status" === "fetched"))
 
     // Lineage bounding for round-crossing frames. A cached plan NESTS its
     // parents' plans via InMemoryRelation's inner children, so without

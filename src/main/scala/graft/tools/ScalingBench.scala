@@ -11,23 +11,6 @@ import org.apache.spark.sql.SparkSession
   */
 object ScalingBench {
 
-  /** Per-run stage accounting: total task time vs wall separates "work
-    * inflated at high parallelism" (memory contention) from "cores idle"
-    * (tails / scheduling gaps). Enabled with GRAFT_STAGESTATS=1.
-    */
-  final class StageStats extends org.apache.spark.scheduler.SparkListener {
-    @volatile var taskSec = 0.0
-    @volatile var stageWallSec = 0.0
-    @volatile var maxTaskSec = 0.0
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val si = sc.stageInfo
-      taskSec += si.taskMetrics.executorRunTime / 1000.0
-      for (s <- si.submissionTime; c <- si.completionTime)
-        stageWallSec += (c - s) / 1000.0
-    }
-  }
-
   /** Active-core CPU speed probe: saturate `threads` threads with a pure
     * register-only LCG spin (zero memory traffic) and return mean
     * iterations/sec per thread. This measures the HOST's frequency
@@ -127,9 +110,6 @@ object ScalingBench {
     val cfg = graft.core.CrawlConfig(maxRounds = 2, seenPartitions = math.max(cores, 16),
       saltFactor = 64, bloomExpectedPerPartition = 2000000L, persistRounds = false,
       eagerCheckpointFree = true) // single JVM, 2 rounds: eager free is safe here
-    val stats = new StageStats
-    if (sys.env.get("GRAFT_STAGESTATS").contains("1"))
-      spark.sparkContext.addSparkListener(stats)
     // in-run noise samples: the bracketing probes cannot see a burst that
     // starts and ends inside the run — this can (see NoiseSampler)
     val sampler = new NoiseSampler()
@@ -139,9 +119,6 @@ object ScalingBench {
     val sec = (System.nanoTime() - t0) / 1e9
     val noise = sampler.stop()
     val scheduled = crawler.totalScheduled
-    if (sys.env.get("GRAFT_STAGESTATS").contains("1"))
-      println(f"[stage-stats] cores=$cores wall=$sec%.2f taskSec=${stats.taskSec}%.1f " +
-        f"stageWall=${stats.stageWallSec}%.1f cpuUtil=${stats.taskSec / (sec * cores)}%.2f")
     spark.stop()
     // a fresh builder after stop() creates a brand-new context
     org.apache.spark.sql.SparkSession.clearActiveSession()

@@ -382,53 +382,114 @@ class OpsSpec extends SparkSpec {
       bf.feature.forall(_ == 4f / 64f))
   }
 
+  private val ledgerTags = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** Runs `body` under a fresh query tag, waits for the listener bus, drains
+    * the drop ledger and returns the body's value with that tag's records.
+    */
+  def ledgerOf[A](body: => A): (A, Seq[Guard.DropRecord]) = {
+    val tag = s"ops-ledger-${ledgerTags.incrementAndGet()}"
+    val out = Guard.withQueryTag(tag)(body)
+    org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+    (out, Guard.drainDropLedgerDetailed().filter(_.queryTag == tag))
+  }
+
+  // same skew fixture as the skew-guard test: every row lands in ONE
+  // bucket everywhere, so an undersized cap drops 100% of candidate rows
+  lazy val skewedDocs = spark.range(1000)
+    .select($"id".as("doc_id"), lit("the same boilerplate text again").as("text"))
+  lazy val skewedEmb = spark.range(1000).select($"id".as("vec_id"),
+    array((0 until 64).map(i => lit(math.sin(i * 0.1).toFloat)): _*).as("embedding"))
+  // hub-shingle cap: 40 real docs, maxDf=1 drops every shared shingle
+  lazy val hubSample = docs.limit(40).select($"doc_id", $"text").cache()
+
+  /** The five overflow runs, each with its result row count and ledger. */
+  lazy val overflowRuns: Map[String, (Long, Seq[Guard.DropRecord])] = Map(
+    "simhash" -> ledgerOf(Dedup.simhashDupPairs(skewedDocs, maxHamming = 3,
+      maxBucket = 100).count()),
+    "lsh" -> ledgerOf(Dedup.lshCandidatePairs(
+      Dedup.minhashSignatures(skewedDocs, k = 8, shingleW = 3), k = 8, bands = 4,
+      maxBucket = 100).count()),
+    "embedding" -> ledgerOf(Dedup.embeddingDupPairs(skewedEmb, dim = 64,
+      maxBucket = 100).count()),
+    "neighbors" -> ledgerOf(Similarity.bucketedNeighbors(skewedEmb, dim = 64,
+      maxBucket = 100).count()),
+    "ngram_hub" -> ledgerOf(Dedup.ngramJaccardPairs(hubSample, shingleW = 2,
+      threshold = 0.2, maxDf = 1).count()))
+
   test("guard observation: drop metrics fire on an overflow corpus, zero on a safe one") {
-    // same skew fixture as the skew-guard test: every row lands in ONE
-    // bucket everywhere, so an undersized cap drops 100% of candidate rows
-    val skewed = spark.range(1000)
-      .select($"id".as("doc_id"), lit("the same boilerplate text again").as("text"))
-    val simObs = Guard.observation("simhash_overflow")
-    assert(Dedup.simhashDupPairs(skewed, maxHamming = 3, maxBucket = 100,
-      obs = Some(simObs)).count() == 0)
-    assert(simObs.droppedFraction >= 0.99, s"fraction=${simObs.droppedFraction}")
-    assert(simObs.droppedRows > 0 && simObs.droppedBuckets > 0)
-
-    val lshObs = Guard.observation("lsh_overflow")
-    assert(Dedup.lshCandidatePairs(
-      Dedup.minhashSignatures(skewed, k = 8, shingleW = 3), k = 8, bands = 4,
-      maxBucket = 100, obs = Some(lshObs)).count() == 0)
-    assert(lshObs.droppedFraction >= 0.99)
-
-    val skewedEmb = spark.range(1000).select($"id".as("vec_id"),
-      array((0 until 64).map(i => lit(math.sin(i * 0.1).toFloat)): _*).as("embedding"))
-    val embObs = Guard.observation("emb_overflow")
-    assert(Dedup.embeddingDupPairs(skewedEmb, dim = 64, maxBucket = 100,
-      obs = Some(embObs)).count() == 0)
-    assert(embObs.droppedFraction >= 0.99)
-    val bnObs = Guard.observation("bn_overflow")
-    assert(Similarity.bucketedNeighbors(skewedEmb, dim = 64, maxBucket = 100,
-      obs = Some(bnObs)).count() == 0)
-    assert(bnObs.droppedFraction >= 0.99)
-
-    // hub-shingle cap: 40 real docs, maxDf=1 drops every shared shingle
-    val sample = docs.limit(40).select($"doc_id", $"text")
-    val dfObs = Guard.observation("ngram_hub")
-    Dedup.ngramJaccardPairs(sample, shingleW = 2, threshold = 0.2, maxDf = 1,
-      obs = Some(dfObs)).count()
-    assert(dfObs.droppedRows > 0 && dfObs.droppedFraction > 0.0)
+    def only(name: String): Guard.DropRecord = {
+      val recs = overflowRuns(name)._2
+      assert(recs.size == 1, s"$name: $recs")
+      recs.head
+    }
+    for (name <- Seq("simhash", "lsh", "embedding", "neighbors")) {
+      assert(overflowRuns(name)._1 == 0L, name)
+      assert(only(name).fraction >= 0.99, s"$name fraction=${only(name).fraction}")
+    }
+    assert(only("simhash").droppedRows > 0 && only("simhash").droppedBuckets > 0)
+    assert(only("ngram_hub").droppedRows > 0 && only("ngram_hub").fraction > 0.0)
 
     // healthy run: guard present but never fires → metrics all zero drops
-    val okObs = Guard.observation("simhash_ok")
-    Dedup.simhashDupPairs(docs.limit(30).select($"doc_id", $"text"),
-      maxHamming = 0, obs = Some(okObs)).count()
-    assert(okObs.droppedFraction == 0.0 && okObs.droppedRows == 0L)
-    assert(okObs.totalRows > 0)
+    val (_, ok) = ledgerOf(Dedup.simhashDupPairs(docs.limit(30).select($"doc_id", $"text"),
+      maxHamming = 0).count())
+    assert(ok.size == 1 && ok.head.fraction == 0.0 && ok.head.droppedRows == 0L, s"$ok")
+    assert(ok.head.totalRows > 0)
 
-    // capless run: no guard in the plan → observation reports zeros
-    val capless = Guard.observation("ngram_capless")
-    Dedup.ngramJaccardPairs(sample, shingleW = 2, threshold = 0.5,
-      maxDf = Int.MaxValue, obs = Some(capless)).count()
-    assert(capless.totalRows == 0L && capless.droppedFraction == 0.0)
+    // capless run: no guard in the plan → nothing recorded under its tag
+    val (_, capless) = ledgerOf(Dedup.ngramJaccardPairs(hubSample, shingleW = 2,
+      threshold = 0.5, maxDf = Int.MaxValue).count())
+    assert(capless.isEmpty, s"$capless")
+  }
+
+  test("guard ledger: all-dropped runs record exact row and bucket counts; empty input reads 0.0") {
+    def exact(name: String, rows: Long, buckets: Long, droppedRows: Long,
+        droppedBuckets: Long): Unit = {
+      val recs = overflowRuns(name)._2
+      assert(recs.map(r => (r.totalRows, r.droppedRows, r.buckets, r.droppedBuckets)) ==
+        Seq((rows, droppedRows, buckets, droppedBuckets)), name)
+    }
+    // 1000 identical docs: 4 SimHash blocks / 4 LSH bands of 1000 rows each,
+    // one sign bucket of 1000 vectors — every bucket over the cap of 100
+    exact("simhash", 4000, 4, 4000, 4)
+    exact("lsh", 4000, 4, 4000, 4)
+    exact("embedding", 1000, 1, 1000, 1)
+    exact("neighbors", 1000, 1, 1000, 1)
+    Seq("simhash", "lsh", "embedding", "neighbors").foreach(n =>
+      assert(overflowRuns(n)._2.head.fraction == 1.0, n))
+    // the hub cap: every shingle shared by two or more docs is dropped
+    val df = hubSample.select(array_distinct(Dedup.shingleCol($"text", 2)))
+      .collect().toSeq.flatMap(_.getSeq[String](0)).groupBy(identity).map(_._2.size).toSeq
+    assert(df.exists(_ > 1) && df.contains(1), "test vacuous: hub corpus")
+    exact("ngram_hub", df.sum, df.size, df.filter(_ > 1).sum, df.count(_ > 1))
+
+    // an empty input is told apart from a collapse: a record, 0 rows, 0.0
+    val (n, empty) = ledgerOf(Dedup.simhashDupPairs(skewedDocs.filter(lit(false)),
+      maxHamming = 3, maxBucket = 100).count())
+    assert(n == 0L)
+    assert(empty.map(r => (r.totalRows, r.fraction)) == Seq((0L, 0.0)), s"$empty")
+
+    // the pruned run is recounted by the drain on the calling thread: the
+    // listener runs no job of its own
+    val sc = spark.sparkContext
+    val foreignJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!Option(e.properties).exists(_.getProperty("graft.test.tag") == "ledger-caller"))
+          foreignJobs.incrementAndGet()
+    }
+    sc.addSparkListener(jobs)
+    sc.setLocalProperty("graft.test.tag", "ledger-caller")
+    try {
+      val (_, recs) = ledgerOf(Dedup.simhashDupPairs(skewedDocs, maxHamming = 3,
+        maxBucket = 100).count())
+      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      assert(foreignJobs.get == 0, "a job ran off the calling thread")
+      assert(recs.map(_.droppedRows) == Seq(4000L))
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      sc.removeSparkListener(jobs)
+    }
   }
 
   test("blocked-pair operators equal an in-memory brute force minus over-cap buckets") {
@@ -443,20 +504,18 @@ class OpsSpec extends SparkSpec {
       }.toSet
     // capped: pairs and drop counts match the brute force (the corpus has
     // a bucket over the cap and one exactly at it); capless: the brute
-    // force over every bucket, and an all-zero observation
+    // force over every bucket, and nothing recorded in the drop ledger
     def check[K, R](name: String, keys: Seq[(Long, Seq[K])], cap: Int,
-        expected: Int => Set[R], run: (Int, Option[Guard.GuardObservation]) => Set[R]): Unit = {
+        expected: Int => Set[R], run: Int => Set[R]): Unit = {
       val sizes = bucketSizes(keys)
       assert(sizes.exists(_ > cap) && sizes.contains(cap), s"$name corpus")
-      val capped = Guard.observation(s"skeleton_$name")
-      val got = run(cap, Some(capped))
+      val (got, capped) = ledgerOf(run(cap))
       assert(got == expected(cap), name)
-      assert(capped.droppedBuckets == sizes.count(_ > cap), name)
-      assert(capped.droppedRows == sizes.filter(_ > cap).sum, name)
-      val capless = Guard.observation(s"skeleton_${name}_capless")
-      val all = run(Int.MaxValue, Some(capless))
+      assert(capped.map(_.droppedBuckets) == Seq(sizes.count(_ > cap).toLong), s"$name $capped")
+      assert(capped.map(_.droppedRows) == Seq(sizes.filter(_ > cap).sum.toLong), name)
+      val (all, capless) = ledgerOf(run(Int.MaxValue))
       assert(all == expected(Int.MaxValue) && all != got, s"$name capless")
-      assert(capless.metrics.values.forall(_ == 0L), s"$name capless ${capless.metrics}")
+      assert(capless.isEmpty, s"$name capless $capless")
     }
 
     // MinHash-LSH over hand-made signatures: k = bands = 2, so the band
@@ -467,8 +526,8 @@ class OpsSpec extends SparkSpec {
     val lshKeys = sigRows.map { case (id, m0, m1) => id -> Seq((0, m0), (1, m1)) }
     check[(Int, String), (Int, Long, Long)]("lsh", lshKeys, 8,
       cap => sharedPairs(lshKeys, cap).map { case ((band, _), a, b) => (band, a, b) },
-      (cap, obs) => Dedup.lshCandidatePairs(sigRows.toDF("doc_id", "mh_0", "mh_1"),
-          k = 2, bands = 2, maxBucket = cap, obs = obs)
+      cap => Dedup.lshCandidatePairs(sigRows.toDF("doc_id", "mh_0", "mh_1"),
+          k = 2, bands = 2, maxBucket = cap)
         .as[(Int, Long, Long)].collect().toSet)
 
     // SimHash: near-dup families, plus 16 signatures whose block 0 is all
@@ -508,11 +567,11 @@ class OpsSpec extends SparkSpec {
       check[(Int, Long), (Long, Long, Int)](s"simhash$bits", keys, 10,
         cap => sharedPairs(keys, cap).map { case (_, a, b) => (a, b, ham(a, b)) }
           .filter(_._3 <= 3),
-        (cap, obs) => (if (bits == 64)
+        cap => (if (bits == 64)
             Dedup.simhashDupPairs(sigs, maxHamming = 3, maxBucket = cap,
-              signatures = identity, obs = obs)
+              signatures = identity)
           else Dedup.simhashDupPairs128(sigs, maxHamming = 3, maxBucket = cap,
-              signatures = identity, obs = obs))
+              signatures = identity))
           .as[(Long, Long, Int)].collect().toSet)
     }
     simhashCase(64)
@@ -547,8 +606,8 @@ class OpsSpec extends SparkSpec {
     check[Int, (Long, Long, Double)]("embedding", embKeys, embCap,
       cap => sharedPairs(embKeys, cap).map { case (_, a, b) => (a, b, cos(a, b)) }
         .filter(_._3 >= 0.9),
-      (cap, obs) => Dedup.embeddingDupPairs(embDf, dim, planes = 3, threshold = 0.9,
-          maxBucket = cap, obs = obs)
+      cap => Dedup.embeddingDupPairs(embDf, dim, planes = 3, threshold = 0.9,
+          maxBucket = cap)
         .as[(Long, Long, Double)].collect().toSet)
     check[Int, (Long, Long, Double)]("neighbors", embKeys, embCap,
       cap => sharedPairs(embKeys, cap).toSeq
@@ -557,8 +616,8 @@ class OpsSpec extends SparkSpec {
           mates.map { case (_, b) => (a, b, round6(cos(a, b))) }
             .sortBy { case (_, b, c) => (-c, b) }.take(2)
         }.toSet,
-      (cap, obs) => Similarity.bucketedNeighbors(embDf, dim, k = 2, nPlanes = 3,
-          maxBucket = cap, obs = obs)
+      cap => Similarity.bucketedNeighbors(embDf, dim, k = 2, nPlanes = 3,
+          maxBucket = cap)
         .as[(Long, Long, Double)].collect().toSet)
   }
 
@@ -567,8 +626,8 @@ class OpsSpec extends SparkSpec {
     // partial-drop corpus: one hub shingle shared by ALL docs (df=40,
     // over the cap → dropped) plus per-pair group shingles under the cap —
     // the result stays NON-empty, so AQE does not prune the metrics node
-    // (an all-dropped empty result loses the observation to empty-relation
-    // propagation and is covered by the pruned-plan WARN instead)
+    // (an all-dropped empty result is recounted by the drain instead; see
+    // the all-dropped ledger test)
     val hubDocs = spark.range(40).select(
       $"id".cast("string").as("doc_id"),
       concat(lit("hub hub w"), ($"id" / 2).cast("long").cast("string"),
@@ -709,17 +768,16 @@ class OpsSpec extends SparkSpec {
     val planted = base.filter($"vec_id" < 50)
       .select(($"vec_id" + 100000).as("vec_id"), $"embedding")
     val all = base.union(planted).cache()
-    val lossy = Guard.observation("manual_undersized")
-    assert(Dedup.embeddingDupPairs(all, dim = 64, planes = 1, maxBucket = 150,
-      obs = Some(lossy)).count() == 0)
-    assert(lossy.droppedFraction >= 0.99)
-    val auto = Guard.observation("auto_sized")
-    val got = Dedup.embeddingDupPairsAuto(all, dim = 64, threshold = 0.999999,
-      maxBucket = 150, obs = Some(auto))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (lossyRows, lossy) = ledgerOf(Dedup.embeddingDupPairs(all, dim = 64, planes = 1,
+      maxBucket = 150).count())
+    assert(lossyRows == 0)
+    assert(lossy.size == 1 && lossy.head.fraction >= 0.99, s"$lossy")
+    val (got, auto) = ledgerOf(Dedup.embeddingDupPairsAuto(all, dim = 64,
+        threshold = 0.999999, maxBucket = 150)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val wanted = (0L until 50L).map(i => (i, i + 100000)).toSet
     assert(wanted.subsetOf(got), s"missing ${wanted -- got}")
-    assert(auto.droppedFraction == 0.0, s"auto still lossy: ${auto.droppedFraction}")
+    assert(auto.size == 1 && auto.head.fraction == 0.0, s"auto still lossy: $auto")
     assert(Similarity.bucketedNeighborsAuto(all, dim = 64, k = 1, maxBucket = 150)
       .count() > 0)
   }

@@ -71,6 +71,36 @@ class OptimizationR07Spec extends SparkSpec {
     assert(Par.widen(wide) eq wide) // at-scale inputs are untouched
   }
 
+  test("Par.widen decides from the plan: no job for a grouped frame; a one-file scan widens") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val grouped = spark.range(100000).groupBy(($"id" % 97).as("k")).count()
+    val dir = tempDir("graft-widen") + "/one"
+    spark.range(1000).toDF("id").coalesce(1).write.parquet(dir)
+    val scan = spark.read.parquet(dir)
+    org.apache.spark.GraftTestBridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    val (wGrouped, wScan) =
+      try (Par.widen(grouped), Par.widen(scan))
+      finally {
+        org.apache.spark.GraftTestBridge.drainListeners(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(jobs.get == 0, s"widen launched ${jobs.get} jobs")
+    // the grouped frame keeps its planned shuffle width when that is wide
+    // enough, and is widened otherwise
+    val shuffleWidth = spark.sessionState.conf.numShufflePartitions
+    assert((wGrouped eq grouped) == (shuffleWidth >= sc.defaultParallelism))
+    assert(wGrouped.select(sum($"count")).head().getLong(0) == 100000L)
+    assert(scan.rdd.getNumPartitions == 1, "test vacuous: the scan must be one partition")
+    assert(wScan.rdd.getNumPartitions == sc.defaultParallelism)
+    assert(wScan.select(sum($"id")).head().getLong(0) == 499500L)
+  }
+
   test("dupClusters: duplicate and symmetric input pairs yield the same components") {
     // the r07 rounds drop intermediate distincts — multiplicity in the
     // INPUT must still be invisible in the output
