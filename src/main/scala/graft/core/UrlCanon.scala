@@ -74,9 +74,11 @@ object UrlCanon {
     cutAt(cutAt(after.substring(start), '#'), '?')
   }
 
-  /** Stable 64-bit FNV-1a hash of the canonical URL — partitioning key for
-    * the seen-set bloom bank. Deterministic across JVMs (unlike
-    * Object.hashCode) and cheap enough for codegen-adjacent use.
+  /** Stable 64-bit FNV-1a hash of a string — the token hash of SimHash,
+    * the jitter seed of the host clocks, and the seed of the fixtures'
+    * synthetic pages, faults and media bytes. Deterministic across JVMs
+    * (unlike Object.hashCode). Not a routing key: the seen set and its
+    * bloom bank are partitioned by Spark's hash of the canonical URL.
     */
   def hash64(s: String): Long = {
     var h = 0xcbf29ce484222325L
@@ -88,12 +90,6 @@ object UrlCanon {
       i += 1
     }
     h
-  }
-
-  /** Non-negative partition id in [0, p). */
-  def partition(canonUrl: String, p: Int): Int = {
-    val m = (hash64(canonUrl) % p).toInt
-    if (m < 0) m + p else m
   }
 
   private def cutAt(s: String, c: Char): String = {

@@ -59,6 +59,13 @@ final case class CrawlLogEntry(
     status: String,
     attempts: Int)
 
+/** Per-(host, salt lane) scheduler state, checkpointed each round (SURVEY
+  * T2: the reference RateLimiter's retry/suspension dicts live for the
+  * whole crawl — rate_limiter.py:213-303 — so they must survive round
+  * boundaries).
+  */
+final case class HostState(host: String, lane: Int, retryCount: Int, suspended: Boolean, virtualTime: Double, drawCount: Long)
+
 /** Per-host robots/politeness budget (synthetic fixture; the reference has
   * per-domain delays only — rate_limiter.py:74-85 — robots.txt handling is
   * the north-rule extension).
@@ -104,7 +111,7 @@ final case class CrawlConfig(
     jitterMax: Double = 2.0,       // (rate_limiter.py:56-57 defaults)
     maxRounds: Int = 2,
     seenPartitions: Int = 32,      // bloom bank width; scale knob (10^10 URLs → raise)
-    saltFactor: Int = 1,           // >1 splits hot hosts across lanes (bench mode only)
+    saltFactor: Int = 1,           // >1 splits each host across lanes (hot hosts' tail)
     bloomExpectedPerPartition: Long = 1000000L, // cap on one bloom filter's sized keys
     bloomFpp: Double = 0.01,       // target FPP of the whole bank
     collapseEvery: Int = 8,       // seen-chain collapse cycle (rounds)

@@ -58,8 +58,8 @@ object SyntheticFetcher extends Fetcher {
   *  - a suspended host fails all its remaining urls (wait() returns -1).
   *
   * One instance per (host, salt-lane). When a hot host is salted across k
-  * lanes (bench mode), each lane paces at delay*k so the aggregate per-host
-  * budget is preserved (SURVEY §7.4.4).
+  * lanes, each lane paces at delay*k so the aggregate per-host budget is
+  * preserved (SURVEY §7.4.4).
   */
 final class HostClock(delay: Double, maxRetries: Int,
     jitter: Option[(Double, Double)] = None, seedKey: Long = 0L) extends Serializable {
@@ -109,9 +109,29 @@ final class HostClock(delay: Double, maxRetries: Int,
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** This clock's state, as checkpointed for its (host, lane). */
+  def state(host: String, lane: Int): HostState =
+    HostState(host, lane, retryCount, suspended, virtualTime, drawCount)
 }
 
 object HostClock {
+  /** The clock of `s`'s (host, lane) under `cfg`, restored to `s`: the
+    * host's robots crawl-delay (else the default) × saltFactor, jitter when
+    * enabled, seeded per (host, lane). The batch scheduler and its
+    * streaming twin both build their clocks here.
+    */
+  def restore(cfg: CrawlConfig, robots: Map[String, RobotsRule], s: HostState): HostClock = {
+    val delay = robots.get(s.host).map(_.crawlDelay).getOrElse(cfg.defaultDelay) *
+      math.max(1, cfg.saltFactor)
+    val c = new HostClock(delay, cfg.maxRetries,
+      jitter = if (cfg.jitterEnabled) Some((cfg.jitterMin, cfg.jitterMax)) else None,
+      seedKey = UrlCanon.hash64(s.host) ^ s.lane.toLong)
+    c.retryCount = s.retryCount; c.suspended = s.suspended
+    c.virtualTime = s.virtualTime; c.drawCount = s.drawCount
+    c
+  }
+
   /** Uniform [0, 1) from a 64-bit hash (53 mantissa bits). */
   def unitDouble(h: Long): Double = (h >>> 11) * 1.1102230246251565e-16
 }

@@ -1,9 +1,9 @@
 package graft.frontier
 
-import graft.core.UrlCanon
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{BinaryType, BooleanType, IntegerType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.sketch.BloomFilter
@@ -14,32 +14,35 @@ import java.nio.charset.StandardCharsets
   * scale-out realization of the reference's in-memory `seen` dict,
   * /root/reference/crawler/utils/url_deduplicator.py:53-62).
   *
-  * The seen set is hash-partitioned by canonical-URL FNV-64 into `width`
-  * partitions. A FILTER SET holds at most one bloom filter per partition,
-  * each sized to the keys it is built from; a bank is the co-partitioned
-  * union of its filter sets, so a pid may hold several filters and
-  * mightContain is true iff any of them says so. Filters are never
-  * merged, so sets of different sizes can share a bank.
+  * The seen set is routed the way the exact seen chain is: Spark's hash
+  * partitioning of the canonical URL into `width` partitions, so a url's
+  * pid is pmod(murmur3(canon), width). A FILTER SET holds at most one
+  * bloom filter per pid, each sized to the keys it is built from; a bank
+  * is the co-partitioned union of its filter sets, so a pid may hold
+  * several filters and mightContain is true iff any of them says so.
+  * Filters are never merged, so sets of different sizes can share a bank.
   *
-  * DISTRIBUTED LAYOUT (round-2 redesign; round 1 collected the bank to the
-  * driver and broadcast it whole — O(bank) on the driver and O(bank ×
-  * executors) on the network, both scale-killers at the 10^10-key target):
+  * DISTRIBUTED LAYOUT (nothing bank-sized is ever collected or broadcast):
   * the bank lives as an `RDD[(pid, filterBytes)]` under a
-  * `HashPartitioner(width)`, so pid i's blobs sit in partition i and NEVER
+  * `HashPartitioner(width)`, so pid i's blobs sit in partition i and never
   * move:
-  *   - probe: candidates are keyed by pid and `partitionBy`-shuffled to the
-  *     bank's partitioner, then `zipPartitions` probes each candidate
-  *     against its partition's blobs — only the (small) candidate side
-  *     crosses the network, the bank side is narrow;
+  *   - routing: urls reach their pid through a Catalyst exchange
+  *     (`repartition(width, canon)` — an explicit partition count, which
+  *     adaptive execution never coalesces), so they shuffle as Tungsten
+  *     rows; only the filter pass itself is RDD code, because Catalyst's
+  *     `might_contain` takes one constant filter, not a filter per
+  *     partition;
+  *   - build: one filter per routed partition, then the blobs (at most
+  *     `width` records) move onto the bank's partitioner;
+  *   - probe: `zipPartitions` probes each routed candidate partition
+  *     against the same partition of the bank, which stays in place;
   *   - union: sets share the partitioner, so a bank of several sets is a
   *     partitioner-aware union — zero shuffle, zero CPU;
   *   - persistence: one parquet table of (pid, filter, width) rows per
-  *     round — written/read with ordinary distributed I/O, nothing
-  *     driver-resident. A serialized filter records its own bit and hash
-  *     counts; the width column makes load() probe at the width the
-  *     filters were BUILT with (pid = hash(url) mod built-width), since
-  *     probing saved filters at a different modulus would turn bloom
-  *     "false" — which the dedup tier treats as authoritative
+  *     round. A serialized filter records its own bit and hash counts; the
+  *     width column makes load() probe at the width the filters were BUILT
+  *     with, since probing saved filters at a different modulus would turn
+  *     bloom "false" — which the dedup tier treats as authoritative
   *     definitely-new — into silent re-crawls.
   *
   * CORRECTNESS: the bloom is a PRE-FILTER ONLY. `mightContain = false` is
@@ -52,8 +55,8 @@ object DistBloomBank {
 
   /** A bank: its width plus (pid, serialized filter) rows, always
     * partitioned by HashPartitioner(width) with pid i in partition i (Int
-    * hashCode is identity). All probes derive pid from `width`, never from
-    * the current session config.
+    * hashCode is identity). All probes route at `width`, never at the
+    * current session config.
     */
   final case class Bank(width: Int, rdd: RDD[(Int, Array[Byte])]) {
     /** MEMORY_AND_DISK: an evicted MEMORY_ONLY bank partition would
@@ -70,7 +73,13 @@ object DistBloomBank {
   private def deser(b: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new ByteArrayInputStream(b))
 
-  /** Build one filter set from a (canon) DataFrame: shuffle urls to their
+  /** `df` hash-partitioned on `canonCol` into exactly `width` partitions:
+    * partition i holds the rows of pid i.
+    */
+  private def routed(df: DataFrame, canonCol: String, width: Int): DataFrame =
+    df.repartition(width, col(canonCol))
+
+  /** Build one filter set from a (canon) DataFrame: route urls to their
     * pid's partition and build exactly one filter per non-empty pid there,
     * sized to the urls its pid holds, capped at `maxPerFilter`. The build
     * buffers up to `maxPerFilter` urls to count them, so a filter matches
@@ -81,22 +90,20 @@ object DistBloomBank {
     */
   def buildRound(df: DataFrame, canonCol: String, width: Int, maxPerFilter: Long,
       fpp: Double): Bank = {
-    val p = width; val f = fpp; val cap = maxPerFilter
-    Bank(p, df.select(canonCol).rdd
-      .map(r => (UrlCanon.partition(r.getString(0), p), r.getString(0)))
-      .partitionBy(new HashPartitioner(p))
-      .mapPartitions({ it =>
+    val f = fpp; val cap = maxPerFilter
+    Bank(width, routed(df.select(canonCol), canonCol, width).rdd
+      .mapPartitionsWithIndex { (pid, it) =>
         val head = scala.collection.mutable.ArrayBuffer.empty[String]
-        var pid = -1
-        while (head.size < cap && it.hasNext) { val (k, u) = it.next(); pid = k; head += u }
+        while (head.size < cap && it.hasNext) head += it.next().getString(0)
         if (head.isEmpty) Iterator.empty
         else {
           val bf = BloomFilter.create(head.size.toLong, f)
           head.foreach(bf.putString)
-          it.foreach { case (_, u) => bf.putString(u) }
+          it.foreach(r => bf.putString(r.getString(0)))
           Iterator((pid, ser(bf)))
         }
-      }, preservesPartitioning = true))
+      }
+      .partitionBy(new HashPartitioner(width)))
   }
 
   /** The bank of several filter sets of one width — a partitioner-aware
@@ -110,28 +117,22 @@ object DistBloomBank {
   }
 
   /** Adds boolean column `flag` = bank.mightContain(canon). Only the
-    * candidate rows shuffle (to the bank's partitioner — pid computed at
-    * the BANK's width, regardless of session config); each task probes its
-    * partition's blobs in place.
+    * candidate rows shuffle (routed at the BANK's width, regardless of
+    * session config); each task probes its partition's blobs in place.
     */
   def probe(cands: DataFrame, canonCol: String, bank: Bank, flag: String): DataFrame = {
-    val spark = cands.sparkSession
     val schema = cands.schema
     val idx = schema.fieldIndex(canonCol)
-    val p = bank.width
-    val keyed = cands.rdd
-      .map(r => (UrlCanon.partition(r.getString(idx), p), r))
-      .partitionBy(new HashPartitioner(p))
-    val probed = keyed.zipPartitions(bank.rdd, preservesPartitioning = false) { (cit, bit) =>
-      val filters = bit.map(kv => deser(kv._2)).toArray
-      cit.map { case (_, r) =>
-        // encoded once for all of the pid's filters (as mightContainString does)
-        val url = r.getString(idx).getBytes(StandardCharsets.UTF_8)
-        val maybe = filters.exists(_.mightContainBinary(url))
-        Row.fromSeq(r.toSeq :+ maybe)
+    val probed = routed(cands, canonCol, bank.width).rdd
+      .zipPartitions(bank.rdd, preservesPartitioning = false) { (cit, bit) =>
+        val filters = bit.map(kv => deser(kv._2)).toArray
+        cit.map { r =>
+          // encoded once for all of the pid's filters (as mightContainString does)
+          val url = r.getString(idx).getBytes(StandardCharsets.UTF_8)
+          Row.fromSeq(r.toSeq :+ filters.exists(_.mightContainBinary(url)))
+        }
       }
-    }
-    spark.createDataFrame(probed,
+    cands.sparkSession.createDataFrame(probed,
       StructType(schema.fields :+ StructField(flag, BooleanType, nullable = false)))
   }
 
@@ -164,24 +165,4 @@ object DistBloomBank {
       .map(r => (r.getInt(0), r.getAs[Array[Byte]](1)))
       .partitionBy(new HashPartitioner(w))))
   }
-
-  /** Driver-side view for tests/diagnostics ONLY (collects the bank). */
-  def toLocal(bank: Bank): BloomBank = {
-    val filters = Array.fill(bank.width)(Vector.empty[BloomFilter])
-    bank.rdd.collect().foreach { case (pid, b) => filters(pid) :+= deser(b) }
-    new BloomBank(bank.width, filters)
-  }
-}
-
-/** Driver-local bank view — used by tests and the sequential oracle's
-  * cross-checks; the engine itself only ever touches DistBloomBank.
-  * Each slot holds every filter of its pid, one per filter set; an empty
-  * slot means "no urls ever hashed to this pid" (mightContain = false,
-  * exactly).
-  */
-final class BloomBank(val partitions: Int, val filters: Array[Vector[BloomFilter]]) extends Serializable {
-  require(filters.length == partitions)
-
-  def mightContain(canonUrl: String): Boolean =
-    filters(UrlCanon.partition(canonUrl, partitions)).exists(_.mightContainString(canonUrl))
 }

@@ -33,36 +33,15 @@ case class CanonicalizeUrl(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** 64-bit FNV-1a of a string as a native expression (seen-set partitioning
-  * key — pairs with CanonicalizeUrl in the dedup hot path).
-  */
-case class UrlHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    java.lang.Long.valueOf(UrlCanon.hash64(input.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.UrlCanon.hash64($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): UrlHash64 =
-    copy(child = newChild)
-}
-
 object functions {
   import org.apache.spark.sql.GraftColumnBridge
 
-  /** Column API for the native expressions. */
+  /** Column API for the native expression. */
   def canon_url(c: Column): Column =
     GraftColumnBridge.column(CanonicalizeUrl(GraftColumnBridge.expression(c)))
-  def url_hash64(c: Column): Column =
-    GraftColumnBridge.column(UrlHash64(GraftColumnBridge.expression(c)))
 
-  /** SQL registration: SELECT canon_url(url), url_hash64(url). */
-  def register(spark: SparkSession): Unit = {
+  /** SQL registration: SELECT canon_url(url). */
+  def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "canon_url", exprs => CanonicalizeUrl(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "url_hash64", exprs => UrlHash64(exprs.head), "scala_udf")
-  }
 }

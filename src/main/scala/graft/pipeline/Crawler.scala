@@ -18,12 +18,6 @@ import org.apache.spark.sql.expressions.Window
   */
 final case class Candidate(url: String, keyword: String, ord0: Long, ord1: Int)
 
-/** Per-host scheduler state, checkpointed each round (SURVEY T2: the
-  * reference RateLimiter's retry/suspension dicts live for the whole crawl
-  * — rate_limiter.py:213-303 — so they must survive round boundaries).
-  */
-final case class HostState(host: String, lane: Int, retryCount: Int, suspended: Boolean, virtualTime: Double, drawCount: Long)
-
 /** Frontier entry enriched with its salt lane and its (host, lane)'s
   * checkpointed scheduler state. The politeness clock is keyed by
   * (host, lane) — NOT host alone — so outcomes are independent of how
@@ -206,12 +200,11 @@ final class Crawler(
     SeenPart(canon, bloom)
   }
 
-  // The bank's FPP budget, split by load: a bank holds at most one base
-  // part (the collapsed or resumed chain, which holds most keys) plus
-  // collapseEvery round parts, or collapseEvery + 1 round parts before the
-  // first collapse (the round's commit saves the bank before the
-  // collapse). Half the budget to the base and the other half shared by
-  // the round parts keeps the union at or below bloomFpp either way.
+  // The bank's FPP budget, split by load: a bank holds at most
+  // collapseEvery round parts, or one base part (the collapsed or resumed
+  // chain, which holds most keys) plus at most collapseEvery − 1 round
+  // parts. Half the budget to the base and the other half shared by the
+  // round parts keeps the union at or below bloomFpp either way.
   private val baseFpp = config.bloomFpp / 2
   private val roundFpp = config.bloomFpp / (2 * math.max(1, collapseEvery))
 
@@ -376,8 +369,11 @@ final class Crawler(
     }).localCheckpoint(false)
     lastStateCount = mergedState.count()
 
-    // fold the round's frontier into the seen chain. Order of operations
-    // matters for BOTH pathologies here:
+    // fold the round's frontier into the seen chain: a new round part, or,
+    // once the chain holds `collapseEvery` parts, straight into one
+    // collapsed base part (plan depth + per-round join fan-in stay O(1)),
+    // so the round's rows get exactly one filter set either way. Order of
+    // operations matters for BOTH pathologies here:
     //  - localCheckpoint on the narrow projection truncates lineage (see
     //    the host-state note above) — but a LogicalRDD reports UNKNOWN
     //    partitioning, so checkpointing AFTER the repartition would make
@@ -388,10 +384,20 @@ final class Crawler(
     //    per-round anti-joins stay exchange-free on the history side.
     // Lazy checkpoint: the first pass (the part's filter-set build)
     // materializes checkpoint blocks, shuffle and columnar cache in ONE scan.
-    val roundSeen = frontier.select($"canonUrl".as("canon")).toDF()
+    val roundCanon = frontier.select($"canonUrl".as("canon")).toDF()
+    val collapse = seenParts.size >= collapseEvery
+    val folded = (if (collapse) seenParts.map(_.canon) :+ roundCanon else Vector(roundCanon))
+      .reduce(_.unionByName(_))
       .localCheckpoint(false)
       .repartition(seenP, $"canon").persist()
-    seenParts :+= seenPart(roundSeen, roundFpp)
+    val part = seenPart(folded, if (collapse) baseFpp else roundFpp) // materializes folded
+    if (collapse) {
+      // each chain part layers persist over a localCheckpoint: unpersist
+      // drops the cached copy, dropCheckpoint frees the checkpoint blocks
+      // underneath (the collapsed frame re-checkpointed all of it above)
+      seenParts.foreach { p => p.canon.unpersist(); dropCheckpoint(p.canon); p.bloom.unpersist() }
+      seenParts = Vector(part)
+    } else seenParts :+= part
 
     if (config.persistRounds) {
       // the round's observed fetched-row count (outcome is fully
@@ -402,25 +408,6 @@ final class Crawler(
       commitRound(round, frontier, results, newState,
         seqStart + frontierCount, frontierCount,
         if (fetchedDelta > 0) fetchedDelta else frontierCount)
-    }
-
-    // bound the seen chain: collapse into one partitioned cache every
-    // `collapseEvery` rounds (plan depth + per-round join fan-in stay O(1)).
-    // The parts' filter sets are dropped with them and the collapsed part
-    // gets one new set.
-    if (seenParts.size > collapseEvery) {
-      // same checkpoint-below-repartition-below-persist layering as
-      // roundSeen: bounded plan depth AND a partitioning the anti-joins
-      // can reuse
-      val collapsed = seenParts.map(_.canon).reduce(_.unionByName(_))
-        .localCheckpoint(false)
-        .repartition(seenP, $"canon").persist()
-      val base = seenPart(collapsed, baseFpp) // materializes collapsed
-      // each chain part layers persist over a localCheckpoint: unpersist
-      // drops the cached copy, dropCheckpoint frees the checkpoint blocks
-      // underneath (the collapsed frame re-checkpointed all of it above)
-      seenParts.foreach { p => p.canon.unpersist(); dropCheckpoint(p.canon); p.bloom.unpersist() }
-      seenParts = Vector(base)
     }
 
     // next round's candidates are the one frame whose lineage reaches
@@ -493,10 +480,6 @@ final class Crawler(
     // not just URL count). The per-host tail itself is bounded by
     // saltFactor (a hot host's biggest lane is 1/salt of it).
     val p = math.max(16 * spark.sparkContext.defaultParallelism, config.seenPartitions)
-    val salt = config.saltFactor
-    val saltCol =
-      if (salt <= 1) lit(0)
-      else pmod(xxhash64($"canonUrl"), lit(salt)).cast("int")
 
     // carry over the per-(host, lane) scheduler state from the in-flight
     // accumulator (join, not a broadcast global map — the state table
@@ -507,7 +490,7 @@ final class Crawler(
         $"virtualTime".as("initVt"), $"drawCount".as("initDraw"))
 
     val parted = frontier.toDF()
-      .withColumn("lane", saltCol)
+      .withColumn("lane", Crawler.laneCol($"canonUrl", config.saltFactor))
       .join(broadcastIfSmall(priorState), Seq("host", "lane"), "left")
       .na.fill(Map("initRetry" -> 0, "initVt" -> 0.0, "initDraw" -> 0L)).na.fill(false, Seq("initSusp"))
       .repartition(p, $"host", $"lane")
@@ -525,16 +508,8 @@ final class Crawler(
       val clocks = scala.collection.mutable.LinkedHashMap.empty[(String, Int), HostClock]
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val mapped = it.map { e =>
-        val delay = robots.get(e.host).map(_.crawlDelay).getOrElse(cfg.defaultDelay) *
-          math.max(1, cfg.saltFactor)
-        val clock = clocks.getOrElseUpdate((e.host, e.lane), {
-          val c = new HostClock(delay, cfg.maxRetries,
-            jitter = if (cfg.jitterEnabled) Some((cfg.jitterMin, cfg.jitterMax)) else None,
-            seedKey = UrlCanon.hash64(e.host) ^ e.lane.toLong)
-          c.retryCount = e.initRetry; c.suspended = e.initSusp
-          c.virtualTime = e.initVt; c.drawCount = e.initDraw
-          c
-        })
+        val clock = clocks.getOrElseUpdate((e.host, e.lane), HostClock.restore(cfg, robots,
+          HostState(e.host, e.lane, e.initRetry, e.initSusp, e.initVt, e.initDraw)))
         val (status, attempts, html) = clock.fetchOne(f, e.canonUrl)
         val row = if (status == "fetched") {
           PageParser.parse(html, e.canonUrl, cfg.maxCommentPages) match {
@@ -562,8 +537,7 @@ final class Crawler(
       }
       // trailing state rows, materialized lazily after the partition drains
       mapped ++ clocks.iterator.map { case ((host, lane), c) =>
-        (null.asInstanceOf[FetchParseRow],
-          HostState(host, lane, c.retryCount, c.suspended, c.virtualTime, c.drawCount))
+        (null.asInstanceOf[FetchParseRow], c.state(host, lane))
       }
     }
   }
@@ -633,6 +607,17 @@ final class Crawler(
       metricsJson = s"""{"next_seq":$nextSeq,"frontier":$frontierCount}""",
       alsoParallel = Seq(() => DistBloomBank.save(spark, bank, store.bloomPath(round))))
   }
+}
+
+object Crawler {
+  /** A frontier url's salt lane: its host's urls spread over `saltFactor`
+    * lanes by a hash of the canonical url (lane 0 when unsalted). The
+    * politeness clock is keyed by (host, lane) in the batch scheduler and
+    * its streaming twin alike.
+    */
+  def laneCol(canonUrl: Column, saltFactor: Int): Column =
+    if (saltFactor <= 1) lit(0)
+    else pmod(xxhash64(canonUrl), lit(saltFactor)).cast("int")
 }
 
 /** Scalable contiguous sequence assignment: avoids a single-partition

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.core._
 import graft.fetch.{Fetcher, HostClock, SyntheticFetcher}
+import graft.pipeline.Crawler
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -67,48 +68,36 @@ object Streaming {
         })
   }
 
-  /** Serializable per-host scheduler state for GroupState (mirrors
-    * HostClock / the checkpointed host_state table).
-    */
-  final case class HostSchedState(retryCount: Int, suspended: Boolean, virtualTime: Double)
-
   /** T1/T2 as keyed streaming state: the politeness + retry/suspension
-    * state machine via flatMapGroupsWithState keyed by host. Each
-    * micro-batch's URLs for a host are processed in seq order against the
-    * host's persistent GroupState — the streaming twin of the batch
-    * mapPartitions scheduler (same HostClock semantics, state carried by
-    * the streaming checkpoint instead of the snapshot table).
+    * state machine via flatMapGroupsWithState keyed by (host, salt lane),
+    * the batch scheduler's key. Each micro-batch's URLs for a (host, lane)
+    * are processed in seq order against its persistent GroupState — the
+    * streaming twin of the batch mapPartitions scheduler (same clocks,
+    * built by HostClock.restore; the HostState the batch checkpoints in
+    * its snapshot is carried by the streaming checkpoint instead).
     */
   def politenessStream(frontier: Dataset[FrontierEntry],
       fetcher: Fetcher = SyntheticFetcher,
       config: CrawlConfig = CrawlConfig()): Dataset[CrawlLogEntry] = {
     val spark = frontier.sparkSession
     import spark.implicits._
-    val robots = Fixtures.robotsDelayMap
-    val maxRetries = config.maxRetries
-    val defaultDelay = config.defaultDelay
+    val robots = graft.fixtures.Fixtures.robotsMap
 
     frontier
-      .groupByKey(_.host)
+      .select(struct(col("*")).as("_1"), Crawler.laneCol(col("canonUrl"), config.saltFactor).as("_2"))
+      .as[(FrontierEntry, Int)]
+      .groupByKey { case (e, lane) => (e.host, lane) }
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (host: String, rows: Iterator[FrontierEntry], state: GroupState[HostSchedState]) => {
-          val prev = state.getOption.getOrElse(HostSchedState(0, false, 0.0))
-          val clock = new HostClock(robots.getOrElse(host, defaultDelay), maxRetries)
-          clock.retryCount = prev.retryCount
-          clock.suspended = prev.suspended
-          clock.virtualTime = prev.virtualTime
-          val out = rows.toSeq.sortBy(_.seq).map { e =>
+        (key: (String, Int), rows: Iterator[(FrontierEntry, Int)], state: GroupState[HostState]) => {
+          val (host, lane) = key
+          val clock = HostClock.restore(config, robots,
+            state.getOption.getOrElse(HostState(host, lane, 0, false, 0.0, 0L)))
+          val out = rows.map(_._1).toSeq.sortBy(_.seq).map { e =>
             val (status, attempts, _) = clock.fetchOne(fetcher, e.canonUrl)
             CrawlLogEntry(e.round, e.seq, e.url, e.canonUrl, e.host, status, attempts)
           }
-          state.update(HostSchedState(clock.retryCount, clock.suspended, clock.virtualTime))
+          state.update(clock.state(host, lane))
           out.iterator
         })
-  }
-
-  private object Fixtures {
-    /** host → crawl delay, from the robots fixture. */
-    def robotsDelayMap: Map[String, Double] =
-      graft.fixtures.Fixtures.robotsMap.map { case (h, r) => h -> r.crawlDelay }
   }
 }

@@ -5,13 +5,16 @@ import graft.fixtures.Fixtures
 import graft.frontier.DistBloomBank
 import graft.pipeline.Crawler
 import graft.snapshot.SnapshotStore
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  SparkListenerStageSubmitted, SparkListenerTaskEnd}
 
 /** The bloom tier's lifecycle: each seen-chain part carries one filter set
-  * sized to its keys, the bank is the union of the parts' sets, and each
-  * round runs the probe's filter pass once.
+  * sized to its keys, the bank is the union of the parts' sets, each
+  * round runs the probe's filter pass once, and urls reach their filters
+  * through Catalyst exchanges, not RDD shuffles.
   */
 class BloomLifecycleSpec extends SparkSpec {
+  import BloomLifecycleSpec.CrawlRun
 
   val config: CrawlConfig = CrawlConfig(
     maxRounds = 3,
@@ -20,65 +23,136 @@ class BloomLifecycleSpec extends SparkSpec {
 
   lazy val seeds = Fixtures.seeds(400)
 
-  /** Crawls 3 rounds into a new store; returns the store and the number of
-    * tasks that ran the probe's filter pass (the stage zipping candidates
-    * with the bank's blobs).
-    */
-  private def crawl(collapseEvery: Int): (SnapshotStore, Int) = {
-    import spark.implicits._
+  /** Runs `body` with jobs tagged `tag`, feeding their events to `listener`. */
+  private def listening[T](tag: String, listener: SparkListener)(body: => T): T = {
     val sc = spark.sparkContext
-    val tag = s"bloom-lifecycle-$collapseEvery"
-    val probeStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val probeTasks = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag) &&
-            e.stageInfo.rddInfos.exists(r =>
-              r.name.startsWith("ZippedPartitionsRDD") && r.callSite.contains("BloomBank.scala")))
-          probeStages.add(e.stageInfo.stageId)
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (probeStages.contains(e.stageId)) probeTasks.incrementAndGet()
-    }
-    val store = new SnapshotStore(tempDir("graft-bloom-lifecycle"))
     sc.addSparkListener(listener)
     sc.setLocalProperty("graft.test.tag", tag)
-    try new Crawler(spark, config.copy(collapseEvery = collapseEvery), store.root)
-      .run(spark.createDataset(seeds))
+    try body
     finally {
       sc.setLocalProperty("graft.test.tag", null)
       org.apache.spark.GraftTestBridge.drainListeners(sc)
       sc.removeSparkListener(listener)
     }
-    assert(store.latestRound().contains(2), "test vacuous: the crawl must commit 3 rounds")
-    (store, probeTasks.get)
   }
 
-  lazy val everyRound: (SnapshotStore, Int) = crawl(collapseEvery = 1)
-  lazy val default: (SnapshotStore, Int) = crawl(collapseEvery = config.collapseEvery)
+  /** Crawls 3 rounds into a new store; counts the tasks that ran the
+    * probe's filter pass (the stage zipping candidates with the bank's
+    * blobs) and the filter sets built (one mapPartitions pass in
+    * BloomBank.scala per set).
+    */
+  private def crawl(collapseEvery: Int): CrawlRun = {
+    import spark.implicits._
+    val tag = s"bloom-lifecycle-$collapseEvery"
+    val probeStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val probeTasks = new java.util.concurrent.atomic.AtomicInteger()
+    val builds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag)) {
+          val bloomRdds = e.stageInfo.rddInfos.filter(_.callSite.contains("BloomBank.scala"))
+          if (bloomRdds.exists(_.name.startsWith("ZippedPartitionsRDD")))
+            probeStages.add(e.stageInfo.stageId)
+          bloomRdds.filter(_.callSite.startsWith("mapPartitions")).foreach(r => builds.add(r.id))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (probeStages.contains(e.stageId)) probeTasks.incrementAndGet()
+    }
+    val store = new SnapshotStore(tempDir("graft-bloom-lifecycle"))
+    listening(tag, listener) {
+      new Crawler(spark, config.copy(collapseEvery = collapseEvery), store.root)
+        .run(spark.createDataset(seeds))
+    }
+    assert(store.latestRound().contains(2), "test vacuous: the crawl must commit 3 rounds")
+    CrawlRun(store, probeTasks.get, builds.size)
+  }
+
+  lazy val everyRound: CrawlRun = crawl(collapseEvery = 1)
+  lazy val default: CrawlRun = crawl(collapseEvery = config.collapseEvery)
 
   test("the probe's filter pass runs once per probed round: width tasks each") {
     // rounds 1 and 2 are probed (round 0 has no history)
-    assert(default._2 == 2 * config.seenPartitions)
-    assert(everyRound._2 == 2 * config.seenPartitions)
+    assert(default.probeTasks == 2 * config.seenPartitions)
+    assert(everyRound.probeTasks == 2 * config.seenPartitions)
+  }
+
+  test("a round's seen rows get one filter set: a new part's or the collapse's, never both") {
+    // collapseEvery = 1: round 0 starts a part, rounds 1 and 2 fold
+    // straight into the collapsed base part
+    assert(everyRound.filterSetBuilds == 3)
+    assert(default.filterSetBuilds == 3)
   }
 
   for ((name, ce, run) <- Seq(("1", 1, () => everyRound), ("the default", 8, () => default)))
     test(s"last saved bank at collapseEvery = $name: no false negatives, FPP and bits/key sized to its keys") {
       import spark.implicits._
-      val store = run()._1
+      val store = run().store
       val bank = DistBloomBank.load(spark, store.bloomPath(2)).get
       assert(bank.width == config.seenPartitions)
-      val local = DistBloomBank.toLocal(bank)
-      val seen = store.read(spark, "seen").get.select("canonUrl").as[String].collect()
-      assert(seen.length > 500, s"test vacuous: only ${seen.length} seen urls")
-      seen.foreach(u => assert(local.mightContain(u), s"bloom false negative: $u"))
+      val seen = store.read(spark, "seen").get.select($"canonUrl".as("canon"))
+      val nSeen = seen.count()
+      assert(nSeen > 500, s"test vacuous: only $nSeen seen urls")
+      val missed = DistBloomBank.probe(seen, "canon", bank, "maybe").filter(!$"maybe")
+        .select("canon").as[String].take(3)
+      assert(missed.isEmpty, s"bloom false negatives: ${missed.mkString(", ")}")
 
-      val fresh = (0 until 20000).map(i => s"https://never-seen.example.invalid/p/$i")
-      val fpp = fresh.count(local.mightContain).toDouble / fresh.size
+      val fresh = (0 until 20000).map(i => s"https://never-seen.example.invalid/p/$i").toDF("canon")
+      val fpp = DistBloomBank.probe(fresh, "canon", bank, "maybe").filter($"maybe").count()
+        .toDouble / 20000
       assert(fpp <= 1.5 * config.bloomFpp, f"realized FPP $fpp%.4f vs target ${config.bloomFpp}")
 
-      val bitsPerKey = bank.rdd.map(_._2.length.toLong).sum() * 8.0 / seen.length
+      val bitsPerKey = bank.rdd.map(_._2.length.toLong).sum() * 8.0 / nSeen
       val rule = 1.44 * math.log((ce + 1) / config.bloomFpp) / math.log(2)
       assert(bitsPerKey <= 1.5 * rule, f"$bitsPerKey%.1f bits/key vs sizing rule $rule%.1f")
     }
+
+  /** Records written by RDD-API shuffles created in BloomBank.scala while
+    * `body` runs: the map stages feeding a `ShuffledRDD` (Catalyst
+    * exchanges read through `ShuffledRowRDD`s) whose call site is there.
+    */
+  private def bloomRddShuffleRecords(tag: String)(body: => Unit): Long = {
+    val mapSides = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag))
+          e.stageInfos.flatMap(_.rddInfos)
+            .filter(r => r.name == "ShuffledRDD" && r.callSite.contains("BloomBank.scala"))
+            .foreach(_.parentIds.foreach(mapSides.add))
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        // rddInfos.head is the stage's own (last) RDD: what a map stage writes
+        written.put(e.stageInfo.stageId, (e.stageInfo.rddInfos.head.id,
+          e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten))
+    }
+    listening(tag, listener)(body)
+    var total = 0L
+    written.forEach((_, v) => if (mapSides.contains(v._1)) total += v._2)
+    total
+  }
+
+  test("urls reach their filters through Catalyst exchanges: RDD shuffles move only filter blobs") {
+    import spark.implicits._
+    val width = config.seenPartitions
+    val urls = (0 until 4000).map(i => s"https://route.example.org/post/$i").toDF("canon")
+    var bank: DistBloomBank.Bank = null
+    val built = bloomRddShuffleRecords("bloom-routing-build") {
+      bank = DistBloomBank.buildRound(urls, "canon", width, 100000L, 0.01).persist()
+      bank.count()
+    }
+    assert(built > 0, "test vacuous: the build moved no filter blob")
+    assert(built <= width, s"the build's RDD shuffles wrote $built records for width $width")
+
+    val cands = (0 until 3000).map(i => s"https://route.example.org/post/${2 * i}").toDF("canon")
+    var hits = 0L
+    val probed = bloomRddShuffleRecords("bloom-routing-probe") {
+      hits = DistBloomBank.probe(cands, "canon", bank, "maybe").filter($"maybe").count()
+    }
+    assert(probed == 0L, s"the probe's RDD shuffles wrote $probed records")
+    assert(hits >= 2000, s"bloom false negatives: only $hits of 2000 inserted candidates flagged")
+    bank.unpersist()
+  }
+}
+
+object BloomLifecycleSpec {
+  final case class CrawlRun(store: SnapshotStore, probeTasks: Int, filterSetBuilds: Int)
 }

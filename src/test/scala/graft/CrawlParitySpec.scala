@@ -241,12 +241,15 @@ class CrawlParitySpec extends SparkSpec {
   }
 
   test("bloom bank: no false negatives; pre-filter admits all seen urls") {
+    import spark.implicits._
     val store = new graft.snapshot.SnapshotStore(storeRoot)
     val bank = graft.frontier.DistBloomBank
       .load(spark, store.bloomPath(1)).get
     assert(bank.width == config.seenPartitions) // saved banks are self-describing
-    val local = graft.frontier.DistBloomBank.toLocal(bank)
-    oracle.seen.foreach { u => assert(local.mightContain(u), s"bloom false negative: $u") }
+    val missed = graft.frontier.DistBloomBank
+      .probe(oracle.seen.toDF("canon"), "canon", bank, "maybe")
+      .filter(!$"maybe").select("canon").as[String].collect()
+    assert(missed.isEmpty, s"bloom false negatives: ${missed.take(3).mkString(", ")}")
   }
 
   test("saved bank is self-describing: load keeps BUILT width under a changed config") {

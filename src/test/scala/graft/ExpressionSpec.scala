@@ -20,21 +20,17 @@ class ExpressionSpec extends SparkSpec {
     assert(got.toSeq == urls.map(core.UrlCanon.canonicalize))
   }
 
-  test("url_hash64 == UrlCanon.hash64; null propagates") {
-    val got = urls.toDF("url").select(url_hash64($"url")).as[Long].collect()
-    assert(got.toSeq == urls.map(core.UrlCanon.hash64))
+  test("canon_url: null propagates") {
     val n = Seq[(String, Int)]((null, 1)).toDF("url", "x")
       .select(canon_url($"url")).collect()
     assert(n.head.isNullAt(0))
   }
 
-  test("SQL registration: SELECT canon_url(...), url_hash64(...)") {
+  test("SQL registration: SELECT canon_url(...)") {
     register(spark)
     urls.toDF("url").createOrReplaceTempView("urls_v")
-    val got = spark.sql("SELECT canon_url(url) AS c, url_hash64(url) AS h FROM urls_v")
-      .as[(String, Long)].collect()
-    assert(got.map(_._1).toSeq == urls.map(core.UrlCanon.canonicalize))
-    assert(got.map(_._2).toSeq == urls.map(core.UrlCanon.hash64))
+    val got = spark.sql("SELECT canon_url(url) AS c FROM urls_v").as[String].collect()
+    assert(got.toSeq == urls.map(core.UrlCanon.canonicalize))
   }
 
   test("expression participates in whole-stage codegen") {

@@ -6,6 +6,16 @@ import graft.parse.PageParser
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+/** HTTP 429 for the first four attempts of every url on `host` — one past
+  * the default maxRetries, so each (host, lane) clock suspends on its first
+  * url there; every other url goes to the synthetic fetcher.
+  */
+final case class Always429For4(host: String) extends graft.fetch.Fetcher {
+  override def fetch(canonUrl: String, attempt: Int): graft.fetch.FetchResponse =
+    if (UrlCanon.host(canonUrl) == host && attempt <= 4) graft.fetch.FetchResponse(429, "")
+    else graft.fetch.SyntheticFetcher.fetch(canonUrl, attempt)
+}
+
 /** Structured Streaming operators: file-backed streams driven synchronously
   * (memory sink + processAllAvailable) over the fixture corpus; results
   * compared against the batch equivalents.
@@ -80,6 +90,40 @@ class StreamingSpec extends SparkSpec {
 
     val got = spark.table("sched").as[CrawlLogEntry].collect().sortBy(_.seq).toSeq
     assert(got == expected)
+  }
+
+  test("salted politeness stream keys by (host, lane): its rows equal the batch fetchParse rows") {
+    val config = CrawlConfig(saltFactor = 4)
+    val hot = Fixtures.Hosts(0)
+    val fetcher = Always429For4(hot)
+    val entries = (0 until 120).map { i =>
+      val host = Fixtures.Hosts(i % 3)
+      val canon = UrlCanon.canonicalize(Fixtures.cleanUrl(host, i % 4, 700 + i))
+      FrontierEntry(0, i.toLong, canon, canon, host, "kw")
+    }
+    val batch = new pipeline.Crawler(spark, config, tempDir("graft-stream-salted-batch"), fetcher)
+      .fetchParse(0, spark.createDataset(entries)).collect()
+      .flatMap(o => Option(o._1))
+      // the stream logs fetch outcomes only; the batch stage also parses,
+      // and its parse_failed rows were fetched
+      .map(r => (r.seq, if (r.status == "parse_failed") "fetched" else r.status, r.attempts))
+      .sortBy(_._1).toSeq
+    // each of the hot host's lanes suspends on its own first url
+    val hotFailed = batch.count { case (seq, status, attempts) =>
+      entries(seq.toInt).host == hot && status == "fetch_failed" && attempts == 4 }
+    assert(hotFailed > 1, s"test vacuous: $hotFailed hot-host lanes suspended")
+
+    val dir = tempDir("graft-stream-salted") + "/data"
+    spark.createDataset(entries).write.parquet(dir)
+    val schema = spark.read.parquet(dir).schema
+    val stream = spark.readStream.schema(schema).parquet(dir).as[FrontierEntry]
+    val q = graft.streaming.Streaming.politenessStream(stream, fetcher, config)
+      .writeStream.outputMode("append").format("memory").queryName("salted_sched")
+      .trigger(Trigger.AvailableNow()).start()
+    q.processAllAvailable(); q.stop()
+    val got = spark.table("salted_sched").as[CrawlLogEntry].collect()
+      .map(e => (e.seq, e.status, e.attempts)).sortBy(_._1).toSeq
+    assert(got == batch)
   }
 
   test("streaming URL-seen dedup: first discovery wins, once per key across batches") {

@@ -73,11 +73,7 @@ class UrlCanonSpec extends AnyFunSuite {
     assert(UrlCanon.path("https://h.x/#f") == "/")
   }
 
-  test("hash64 is stable and partition() in range (200 cases)") {
+  test("hash64 is stable") {
     assert(UrlCanon.hash64("https://a.example.com") == UrlCanon.hash64("https://a.example.com"))
-    (0 until 200).foreach { i =>
-      val p = UrlCanon.partition("u" + i, 32)
-      assert(p >= 0 && p < 32)
-    }
   }
 }
