@@ -110,7 +110,7 @@ final case class CrawlConfig(
     jitterMin: Double = 0.5,       // U(min,max) added per wait when enabled
     jitterMax: Double = 2.0,       // (rate_limiter.py:56-57 defaults)
     maxRounds: Int = 2,
-    seenPartitions: Int = 32,      // bloom bank width; scale knob (10^10 URLs → raise)
+    seenPartitions: Int = 32,      // the round's partition width; scale knob (10^10 URLs → raise)
     saltFactor: Int = 1,           // >1 splits each host across lanes (hot hosts' tail)
     bloomExpectedPerPartition: Long = 1000000L, // cap on one bloom filter's sized keys
     bloomFpp: Double = 0.01,       // target FPP of the whole bank

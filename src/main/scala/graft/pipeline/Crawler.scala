@@ -188,7 +188,6 @@ final class Crawler(
   private val fetchedAcc = spark.sparkContext.longAccumulator("graft.fetched.rows")
   private var fetchedPrev: Long = 0L
   private val collapseEvery = config.collapseEvery
-  private val seenP = spark.sessionState.conf.numShufflePartitions
 
   /** A chain part and its filter set, built at `fpp`. The set's count is
     * the part's first scan: it materializes the part's cache too.
@@ -221,7 +220,7 @@ final class Crawler(
       // the saved banks are never read back: the seen chain resumes as one
       // base part whose filter set is built at the current config
       seenParts = store.read(spark, "seen").map(df => seenPart(
-        df.select($"canonUrl".as("canon")).repartition(seenP, $"canon").persist(),
+        df.select($"canonUrl".as("canon")).repartition(config.seenPartitions, $"canon").persist(),
         baseFpp)).toVector
       // host_state is committed as per-round DELTAS (only the round's
       // touched (host, lane) rows); the current state is the
@@ -261,10 +260,11 @@ final class Crawler(
   }
 
   /** Rebuild the next round's candidates from committed docs (resume path):
-    * outlinks of the latest committed round's docs.
+    * outlinks of the latest committed round's docs, read from that round's
+    * table alone.
     */
-  private def candidatesFromStore(round: Int): Dataset[Candidate] =
-    store.read(spark, "docs").map(docs => outlinkCandidates(docs.filter($"round" === (round - 1))))
+  private[graft] def candidatesFromStore(round: Int): Dataset[Candidate] =
+    store.read(spark, "docs", minRound = round - 1, maxRound = round - 1).map(outlinkCandidates)
       .getOrElse(spark.emptyDataset[Candidate])
 
   /** Candidates from fetched docs: their outlinks in (parent seq, link idx)
@@ -283,9 +283,11 @@ final class Crawler(
       .withColumn("host", hostCol($"canon")))
 
     // within-round first-wins dedup on canonical URL (W4): keep the
-    // earliest discovery (url_deduplicator.py:40-62 keeps the original URL)
+    // earliest discovery (url_deduplicator.py:40-62 keeps the original URL).
+    // Routed at the round's width, so the window, the bloom probe and the
+    // exact anti-join against the seen chain share one canon partitioning.
     val wDedup = Window.partitionBy($"canon").orderBy($"ord0", $"ord1")
-    val roundUnique = cands
+    val roundUnique = cands.repartition(config.seenPartitions, $"canon")
       .withColumn("rn", row_number().over(wDedup))
       .filter($"rn" === 1).drop("rn")
 
@@ -389,7 +391,7 @@ final class Crawler(
     val folded = (if (collapse) seenParts.map(_.canon) :+ roundCanon else Vector(roundCanon))
       .reduce(_.unionByName(_))
       .localCheckpoint(false)
-      .repartition(seenP, $"canon").persist()
+      .repartition(config.seenPartitions, $"canon").persist()
     val part = seenPart(folded, if (collapse) baseFpp else roundFpp) // materializes folded
     if (collapse) {
       // each chain part layers persist over a localCheckpoint: unpersist
@@ -462,8 +464,8 @@ final class Crawler(
     * per-host scheduler states (retry count / suspension / virtual clock)
     * for the round's checkpoint — exactly-once state via the atomic
     * manifest commit.
-    */
-  /** retainContent=false (bench mode, persistRounds off): pages are still
+    *
+    * retainContent=false (bench mode, persistRounds off): pages are still
     * fetched and fully parsed — the politeness state machine, status
     * accounting and outlink expansion are identical — but the parsed
     * spans/comments/title are not RETAINED in the row, because nothing
@@ -474,12 +476,11 @@ final class Crawler(
     */
   def fetchParse(round: Int, frontier: Dataset[FrontierEntry],
       retainContent: Boolean = true): Dataset[(FetchParseRow, HostState)] = {
-    // 16 partitions per core: a single wave (p == cores) lets the slowest
-    // partition set the stage's wall time; many small partitions amortize
-    // (host,lane) cost imbalance across waves (hosts differ in page weight,
-    // not just URL count). The per-host tail itself is bounded by
-    // saltFactor (a hot host's biggest lane is 1/salt of it).
-    val p = math.max(16 * spark.sparkContext.defaultParallelism, config.seenPartitions)
+    // the round's width, floored at the cluster's parallelism so the fetch
+    // keeps every core busy; every frame built from the fetch output
+    // inherits it. The per-host tail is bounded by saltFactor (a hot
+    // host's biggest lane is 1/salt of it).
+    val p = math.max(config.seenPartitions, spark.sparkContext.defaultParallelism)
 
     // carry over the per-(host, lane) scheduler state from the in-flight
     // accumulator (join, not a broadcast global map — the state table
@@ -553,6 +554,18 @@ final class Crawler(
   private def broadcastIfSmall(df: DataFrame): DataFrame =
     if (lastStateCount < broadcastStateMaxRows) broadcast(df) else df
 
+  /** Cap a table's write fan-out by its (estimated) row count: a round's
+    * tables otherwise inherit the fetch stage's partitioning, one file per
+    * partition per table however small the round — the classic lake
+    * small-file problem. coalesce (no shuffle) — the commit is
+    * write-bound, not compute-bound, and the cap scales back up with
+    * round size.
+    */
+  private def sizedForWrite(df: DataFrame, estRows: Long, rowsPerFile: Long): DataFrame =
+    if (estRows < 0) df
+    else df.coalesce(math.max(1, math.min(spark.sparkContext.defaultParallelism * 4L,
+      math.ceil(estRows.toDouble / rowsPerFile).toLong).toInt))
+
   /** Atomic snapshot commit of the round's five tables + bloom bank (all
     * inputs already computed/cached by runRound — this is write-only).
     * host_state is a DELTA: only the (host, lane) rows the round touched
@@ -560,18 +573,6 @@ final class Crawler(
     * O(total-hosts) I/O for a fractional change); resume folds the deltas
     * latest-round-wins (SnapshotStore.readFoldedLatest).
     */
-  /** Cap a table's write fan-out by its (estimated) row count: a round's
-    * tables otherwise inherit the fetch stage's 16-per-core partitioning,
-    * so a small round writes hundreds of near-empty files per table — the
-    * classic lake small-file problem, and a measured ~6 s per-round commit
-    * floor on this box. coalesce (no shuffle) — the commit is write-bound,
-    * not compute-bound, and the cap scales back up with round size.
-    */
-  private def sizedForWrite(df: DataFrame, estRows: Long, rowsPerFile: Long): DataFrame =
-    if (estRows < 0) df
-    else df.coalesce(math.max(1, math.min(spark.sparkContext.defaultParallelism * 4L,
-      math.ceil(estRows.toDouble / rowsPerFile).toLong).toInt))
-
   private def commitRound(round: Int, frontier: Dataset[FrontierEntry],
       results: DataFrame, roundStateDelta: DataFrame,
       nextSeq: Long, frontierCount: Long, fetchedCount: Long): Unit = {
@@ -583,7 +584,9 @@ final class Crawler(
       .select($"round", $"seq", $"canonUrl".as("doc_id"), $"url", $"host".as("site"),
         $"keyword", $"title", $"author", $"created_at", $"view_count", $"like_count",
         $"spans", $"outlinks", $"comments"),
-      fetchedCount, rowsPerFile = 8000L) // fat rows (~16 KB) → ~128 MB files
+      // the whole store measured 988 B per crawled URL (traced
+      // crawl-revisit, snapshot.bytes_per_url), so a docs file stays ≲ 8 MB
+      fetchedCount, rowsPerFile = 8000L)
     val crawlLog = sizedForWrite(results.select($"round", $"seq", $"url", $"canonUrl",
       $"host", $"status", $"attempts"), frontierCount, rowsPerFile = 500000L)
     val seen = sizedForWrite(frontier.select($"round", $"seq", $"canonUrl", $"host"),

@@ -98,9 +98,12 @@ final class SnapshotStore(val root: String) {
       s""""$key"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
     }
 
-  /** Union of a table across committed rounds ≤ maxRound (time travel). */
-  def read(spark: SparkSession, table: String, maxRound: Int = Int.MaxValue): Option[DataFrame] = {
-    val rounds = committedRounds().filter(_ <= maxRound)
+  /** Union of a table across committed rounds in [minRound, maxRound]
+    * (time travel); rounds outside the range are never read.
+    */
+  def read(spark: SparkSession, table: String, maxRound: Int = Int.MaxValue,
+      minRound: Int = 0): Option[DataFrame] = {
+    val rounds = committedRounds().filter(r => r >= minRound && r <= maxRound)
       .filter(r => Files.exists(Paths.get(tablePath(table, r))))
     if (rounds.isEmpty) None
     else Some(rounds.map(r => spark.read.parquet(tablePath(table, r))).reduce(_.unionByName(_)))
