@@ -34,8 +34,8 @@ object Bench {
     // graders can reject the run without having to reproduce it.
     // (short discarded probe first: the spin loop itself must be JITted,
     // else "before" reads low and fakes the very asymmetry it checks for)
-    graft.tools.ScalingBench.cpuSpeedPerThread(cpus.toInt, millis = 500)
-    val spinBefore = graft.tools.ScalingBench.cpuSpeedPerThread(cpus.toInt, millis = 2000)
+    graft.tools.NoiseSampler.cpuSpeedPerThread(cpus.toInt, millis = 500)
+    val spinBefore = graft.tools.NoiseSampler.cpuSpeedPerThread(cpus.toInt, millis = 2000)
 
     // warm the session (JIT + codegen + parquet footer caches), and build
     // the q33 stored ANN index outside the timed battery — the index is
@@ -93,8 +93,7 @@ object Bench {
     val seeds = spark.range(nSeeds)
       .map(i => graft.fixtures.Fixtures.benchSeed(i, postRange = 200000, nHosts = 1024))
     val cfg = graft.core.CrawlConfig(maxRounds = 2, seenPartitions = cpus.toInt,
-      saltFactor = 32, bloomExpectedPerPartition = 2000000L,
-      eagerCheckpointFree = true) // single JVM, 2 rounds: eager free is safe
+      saltFactor = 32, bloomExpectedPerPartition = 2000000L)
     // TWO attempts, min wins: a single-shot crawl is hostage to one
     // co-tenant DRAM burst (BENCH_r04/r05 both dipped ~15-30% on ambient
     // pressure while min-of-attempts builder records held). Both attempts'
@@ -118,7 +117,7 @@ object Bench {
     val (crawlSec, crawlNoise) = if (sec1 <= sec2) (sec1, noise1) else (sec2, noise2)
     val urlsPerSec = scheduled / crawlSec
 
-    val spinAfter = graft.tools.ScalingBench.cpuSpeedPerThread(cpus.toInt, millis = 2000)
+    val spinAfter = graft.tools.NoiseSampler.cpuSpeedPerThread(cpus.toInt, millis = 2000)
 
     val qs = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }.mkString("{", ",", "}")
     val total = results.map(_._2).sum

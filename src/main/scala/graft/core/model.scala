@@ -115,13 +115,9 @@ final case class CrawlConfig(
     bloomExpectedPerPartition: Long = 1000000L, // cap on one bloom filter's sized keys
     bloomFpp: Double = 0.01,       // target FPP of the whole bank
     collapseEvery: Int = 8,       // seen-chain collapse cycle (rounds)
-    persistRounds: Boolean = true, // false = bench mode: no snapshot writes
-    // Free localCheckpoint blocks eagerly once superseded (instead of
-    // waiting for the ContextCleaner). A localCheckpoint'ed RDD cannot
-    // recompute, so an eager free turns any later cache-block loss in a
-    // downstream persist()-only consumer into a hard job failure — safe
-    // only in single-JVM bench runs where no executor can be lost and the
-    // round ends before memory pressure can evict. Default OFF.
+    // Ignored: every crawl frees superseded checkpoints eagerly (see
+    // Crawler.dropCheckpoint). Kept only so callers that still pass it by
+    // name compile; to be dropped with them.
     eagerCheckpointFree: Boolean = false)
 
 /** Per-round, per-partition fetch/dedup metrics (north-rule lineage). */

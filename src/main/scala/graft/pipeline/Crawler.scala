@@ -129,22 +129,19 @@ final class Crawler(
     * the blocks are reclaimed only when the ContextCleaner notices the
     * RDD is garbage (GC-latency-bound on long crawls with large rounds).
     *
-    * GATED behind `config.eagerCheckpointFree` (default OFF): the
-    * downstream consumers (seqCache, mergedState, the collapsed seen
-    * chain) hold the data via persist() only, so if a cache block is
-    * evicted under memory pressure — or an executor is lost on a real
-    * cluster — a recomputable cache miss becomes a hard job failure once
-    * the checkpoint blocks underneath are gone. Single-JVM benches (no
-    * executor loss, rounds end before eviction pressure) turn it on to
-    * cut GC-latency-bound block retention; production leaves the
-    * ContextCleaner in charge. Non-checkpointed frames have no
-    * `LogicalRDD` leaf → no-op either way.
+    * Safe because no consumer of a freed checkpoint ever recomputes
+    * through it: every one persists at a disk-backed level (`persist()`
+    * defaults to MEMORY_AND_DISK, the bloom bank uses MEMORY_AND_DISK, the
+    * fetch outcome DISK_ONLY, and a localCheckpoint itself is
+    * MEMORY_AND_DISK), so a block evicted under memory pressure spills to
+    * disk instead of being dropped. A lost executor loses the checkpoint
+    * blocks whether they were freed or not; resume is the cure for that.
+    * Non-checkpointed frames have no `LogicalRDD` leaf → no-op.
     */
   private def dropCheckpoint(df: Dataset[_]): Unit =
-    if (config.eagerCheckpointFree)
-      df.queryExecution.analyzed.collectFirst {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach(_.unpersist(blocking = false))
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach(_.unpersist(blocking = false))
 
   /** Robots disallow filter: left-join the rules, drop candidates whose
     * path starts with any disallowed prefix (no rules → allowed).
@@ -320,14 +317,11 @@ final class Crawler(
 
     // politeness-scheduled fused fetch+parse (host scheduler state carried
     // over from the previous round's checkpoint). The fetch output (spans +
-    // outlinks) is the round's heavyweight intermediate: in full mode it is
-    // spilled columnar to disk (the snapshot write follows anyway and heap
-    // eviction would trigger a full re-fetch); in bench mode (no
-    // persistence) it stays memory-first.
-    val outcome = fetchParse(round, frontier,
-      retainContent = config.persistRounds).persist(
-      if (config.persistRounds) org.apache.spark.storage.StorageLevel.DISK_ONLY
-      else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // outlinks) is the round's heavyweight intermediate: it is spilled
+    // columnar to disk (the snapshot write follows anyway and heap
+    // eviction would trigger a full re-fetch).
+    val outcome = fetchParse(round, frontier)
+      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     // Column-level split of the (row, state) tuple stream, NOT a typed
     // flatMap: a flatMap re-decodes every cached fat row (spans/comments
     // Vectors) into JVM objects and re-encodes it — and every consumer
@@ -401,16 +395,14 @@ final class Crawler(
       seenParts = Vector(part)
     } else seenParts :+= part
 
-    if (config.persistRounds) {
-      // the round's observed fetched-row count (outcome is fully
-      // materialized by the host-state count above, so the accumulator
-      // already carries this round's adds)
-      val fetchedDelta = math.max(0L, fetchedAcc.value - fetchedPrev)
-      fetchedPrev = fetchedAcc.value
-      commitRound(round, frontier, results, newState,
-        seqStart + frontierCount, frontierCount,
-        if (fetchedDelta > 0) fetchedDelta else frontierCount)
-    }
+    // the round's observed fetched-row count (outcome is fully
+    // materialized by the host-state count above, so the accumulator
+    // already carries this round's adds)
+    val fetchedDelta = math.max(0L, fetchedAcc.value - fetchedPrev)
+    fetchedPrev = fetchedAcc.value
+    commitRound(round, frontier, results, newState,
+      seqStart + frontierCount, frontierCount,
+      if (fetchedDelta > 0) fetchedDelta else frontierCount)
 
     // next round's candidates are the one frame whose lineage reaches
     // through the outcome cache — checkpointing here is what keeps round
@@ -464,18 +456,8 @@ final class Crawler(
     * per-host scheduler states (retry count / suspension / virtual clock)
     * for the round's checkpoint — exactly-once state via the atomic
     * manifest commit.
-    *
-    * retainContent=false (bench mode, persistRounds off): pages are still
-    * fetched and fully parsed — the politeness state machine, status
-    * accounting and outlink expansion are identical — but the parsed
-    * spans/comments/title are not RETAINED in the row, because nothing
-    * downstream reads them when no snapshot is committed. Retaining them
-    * only inflates the round cache by the corpus size (≈10 GB at 3M
-    * 16 KB pages), a memory-bandwidth cost that is pure overhead in a
-    * fetch+dedup throughput measurement.
     */
-  def fetchParse(round: Int, frontier: Dataset[FrontierEntry],
-      retainContent: Boolean = true): Dataset[(FetchParseRow, HostState)] = {
+  def fetchParse(round: Int, frontier: Dataset[FrontierEntry]): Dataset[(FetchParseRow, HostState)] = {
     // the round's width, floored at the cluster's parallelism so the fetch
     // keeps every core busy; every frame built from the fetch output
     // inherits it. The per-host tail is bounded by saltFactor (a hot
@@ -501,7 +483,6 @@ final class Crawler(
       .as[FrontierWithState]
 
     val rb = robotsB; val cb = cfgB; val f = fetcher; val r = round
-    val retain = retainContent
     val facc = fetchedAcc
     parted.mapPartitions { it =>
       val cfg = cb.value
@@ -516,16 +497,11 @@ final class Crawler(
           PageParser.parse(html, e.canonUrl, cfg.maxCommentPages) match {
             case Some(parsed) =>
               facc.add(1L)
-              if (retain)
-                FetchParseRow(r, e.seq, e.url, e.canonUrl, e.host, e.keyword, "fetched",
-                  attempts, parsed.title, parsed.author,
-                  parsed.createdAt.map(java.sql.Timestamp.valueOf).orNull,
-                  parsed.viewCount, parsed.likeCount, parsed.spans, parsed.outlinks,
-                  parsed.comments, pid)
-              else // bench mode: parse happened, content not retained
-                FetchParseRow(r, e.seq, e.url, e.canonUrl, e.host, e.keyword, "fetched",
-                  attempts, "", "", null, parsed.viewCount, parsed.likeCount,
-                  Seq.empty, parsed.outlinks, Seq.empty, pid)
+              FetchParseRow(r, e.seq, e.url, e.canonUrl, e.host, e.keyword, "fetched",
+                attempts, parsed.title, parsed.author,
+                parsed.createdAt.map(java.sql.Timestamp.valueOf).orNull,
+                parsed.viewCount, parsed.likeCount, parsed.spans, parsed.outlinks,
+                parsed.comments, pid)
             case None =>
               FetchParseRow(r, e.seq, e.url, e.canonUrl, e.host, e.keyword, "parse_failed",
                 attempts, "", "", null, 0, 0, Seq.empty, Seq.empty, Seq.empty, pid)
@@ -562,8 +538,7 @@ final class Crawler(
     * round size.
     */
   private def sizedForWrite(df: DataFrame, estRows: Long, rowsPerFile: Long): DataFrame =
-    if (estRows < 0) df
-    else df.coalesce(math.max(1, math.min(spark.sparkContext.defaultParallelism * 4L,
+    df.coalesce(math.max(1, math.min(spark.sparkContext.defaultParallelism * 4L,
       math.ceil(estRows.toDouble / rowsPerFile).toLong).toInt))
 
   /** Atomic snapshot commit of the round's five tables + bloom bank (all

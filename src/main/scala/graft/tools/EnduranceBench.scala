@@ -40,9 +40,7 @@ object EnduranceBench {
       .map(i => graft.fixtures.Fixtures.benchSeed(i, postRange = 2000000, nHosts = nHosts))
     val cfg = graft.core.CrawlConfig(maxRounds = rounds,
       seenPartitions = cores.toInt, saltFactor = 32,
-      bloomExpectedPerPartition = 2000000L, collapseEvery = collapseEvery,
-      persistRounds = true,
-      eagerCheckpointFree = true) // single JVM: eager free is safe here
+      bloomExpectedPerPartition = 2000000L, collapseEvery = collapseEvery)
 
     // Untimed warm-up, same rule as ScalingBench: the first big run in a
     // JVM/VM pays one-off JIT + lazy page-provisioning costs (tmpfs
@@ -58,10 +56,7 @@ object EnduranceBench {
       // the warm-up's snapshot store is dead weight sharing the timed
       // run's filesystem (tmpfs-backed /tmp would pressure the very run
       // this warm-up stabilizes) — delete it before the timed loop
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(warmStore))
-      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close() // Files.walk holds a directory handle until closed
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(warmStore))
     }
 
     val crawler = new graft.pipeline.Crawler(spark, cfg, store)

@@ -6,6 +6,8 @@ import graft.oracle.SequentialOracle
 import graft.pipeline.Crawler
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** THE north-rule correctness gate (BASELINE.json): the Spark pipeline's
   * committed crawl-order log, URL-seen set, and interleaved span-doc table
   * must exactly equal the sequential oracle replaying the reference
@@ -223,21 +225,45 @@ class CrawlParitySpec extends SparkSpec {
     assert(seen == oracle3.seen)
   }
 
-  test("eagerCheckpointFree (bench mode) leaves the committed log byte-identical") {
-    // the flag only changes WHEN superseded localCheckpoint blocks are
-    // freed (eagerly vs ContextCleaner) — never what is computed. A crawl
-    // with it ON must commit exactly the log of the default-OFF storeRoot.
+  test("superseded checkpoints are freed eagerly and every persisted frame is disk-backed") {
+    // each round frees the checkpoints it supersedes at once, so what a
+    // crawl holds persisted stays flat in its round count (collapseEvery =
+    // 1: steady from round 1 on). That is safe only because no persisted
+    // frame ever drops a block it would have to recompute through a freed
+    // checkpoint: every level the crawl persists at (checkpoints, caches,
+    // the bank, the fetch outcome) must spill to disk.
     import spark.implicits._
-    val dir = tempDir("graft-parity-eager")
-    new Crawler(spark, config.copy(eagerCheckpointFree = true), dir)
-      .run(spark.createDataset(seeds))
-    val eager = spark.read
-      .parquet(s"$dir/data/crawl_log/round=0", s"$dir/data/crawl_log/round=1")
-      .orderBy("seq").as[CrawlLogEntry].collect().toVector
-    val default = spark.read
-      .parquet(s"$storeRoot/data/crawl_log/round=0", s"$storeRoot/data/crawl_log/round=1")
-      .orderBy("seq").as[CrawlLogEntry].collect().toVector
-    assert(eager == default)
+    val sc = spark.sparkContext
+    val tag = "checkpoint-policy"
+    val levels = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.storage.StorageLevel]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag))
+          e.stageInfo.rddInfos.foreach(i => levels.add(i.storageLevel))
+    }
+    val before = sc.getPersistentRDDs.keySet
+    val crawler = new Crawler(spark, config.copy(maxRounds = 4, collapseEvery = 1),
+      tempDir("graft-checkpoint-policy"))
+    var cands = crawler.seedCandidates(spark.createDataset(Fixtures.seeds(200)))
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.tag", tag)
+    val held = try (0 until 4).map { round =>
+      val (next, n) = crawler.runRound(round, cands)
+      assert(round == 3 || n > 0, s"test vacuous: round $round discovered no candidates")
+      cands = next
+      (sc.getPersistentRDDs -- before).map { case (id, r) => id -> r.getStorageLevel }
+    } finally {
+      sc.setLocalProperty("graft.test.tag", null)
+      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(held(3).size <= held(1).size,
+      s"persisted RDDs after 4 rounds: ${held(3).size}, after 2: ${held(1).size}")
+    held.flatten.foreach { case (id, l) => assert(l.useDisk, s"RDD $id persisted at $l") }
+    val persistedLevels = levels.asScala.filter(_.isValid).toSet
+    persistedLevels.foreach(l => assert(l.useDisk, s"a crawl stage read an RDD persisted at $l"))
+    assert(persistedLevels.exists(l => l.useDisk && !l.useMemory),
+      "test vacuous: the DISK_ONLY fetch outcome was never read")
   }
 
   test("bloom bank: no false negatives; pre-filter admits all seen urls") {
