@@ -119,13 +119,3 @@ final case class CrawlConfig(
     // Crawler.dropCheckpoint). Kept only so callers that still pass it by
     // name compile; to be dropped with them.
     eagerCheckpointFree: Boolean = false)
-
-/** Per-round, per-partition fetch/dedup metrics (north-rule lineage). */
-final case class PartitionMetrics(
-    round: Int,
-    partitionId: Int,
-    hosts: Long,
-    fetched: Long,
-    failed: Long,
-    suspendedHosts: Long,
-    virtualSeconds: Double)

@@ -74,8 +74,10 @@ final case class FetchParseRow(
   *       suspension after max_retries, reset on success)
   *     → fused fetch+parse (parser registry w/ generic fallback,
   *       content_crawler.py:180-238) emitting interleaved span docs
-  *     → snapshot commit: docs ∪ crawl_log ∪ seen ∪ metrics + bloom bank,
-  *       atomic manifest (resumable; partial rounds invisible).
+  *     → snapshot commit: docs ∪ crawl_log ∪ seen ∪ metrics ∪ host_state,
+  *       atomic manifest (resumable; partial rounds invisible)
+  *     → the round's committed seen rows read back into the seen chain and
+  *       its bloom bank (the same read a resume does), bank saved.
   *
   * Scale design notes (100 TB / 10^10-URL frontier):
   *   - the only global ordering is the seq assignment, done without a
@@ -153,25 +155,25 @@ final class Crawler(
       .filter(!coalesce(expr("exists(__disallow, d -> startswith(__path, d))"), lit(false)))
       .drop("__disallow", "__path")
 
-  // Cross-round in-flight state. During a run, the seen set / bloom bank /
-  // host scheduler state / next sequence id flow in memory (cached
-  // DataFrames/RDDs + a few driver scalars); the snapshot store is
-  // WRITE-ONLY while running and read only at RESUME. This avoids
-  // re-reading each round what the previous round just wrote — at cluster
-  // scale that read lands on distributed storage and is pure waste.
+  // Cross-round state. A round reads its inputs back from what the
+  // previous rounds committed, the same way a resume does: its candidates
+  // are the outlinks of the last committed round's docs
+  // (candidatesFromStore) and every seen-chain part is read from the
+  // committed `seen` table (seenPart). Only the host scheduler state and
+  // the next sequence id flow in memory between rounds.
   //
-  // The seen set is a CHAIN of per-round DataFrames, each persisted
-  // pre-partitioned on `canon`, so the per-round exact anti-join re-uses
-  // the cached partitioning instead of re-shuffling the whole accumulated
-  // history every round (round-1 kept one ever-growing union — its
-  // lineage AND its shuffle grew with total-seen). The chain is collapsed
-  // into one partitioned cache every `collapseEvery` rounds to bound plan
-  // depth. Each chain part carries one bloom filter set built from it; the
-  // bloom bank is the union of the parts' sets (see DistBloomBank —
-  // nothing bank-sized ever lands on the driver or gets broadcast). The
-  // chain and the bank change together in exactly three places: round
-  // append, collapse and resume.
-  private case class SeenPart(canon: DataFrame, bloom: DistBloomBank.Bank)
+  // The seen set is a CHAIN of parts, each persisted pre-partitioned on
+  // `canon`, so the per-round exact anti-join re-uses the cached
+  // partitioning instead of re-shuffling the whole accumulated history
+  // every round. A round's rows start a new round part, or, once the chain
+  // holds `collapseEvery` parts, the chain collapses into one base part
+  // read from every committed round (plan depth and the per-round join
+  // fan-in stay O(1)). Each part carries one bloom filter set built from
+  // it; the bloom bank is the union of the parts' sets (see DistBloomBank —
+  // nothing bank-sized ever lands on the driver or gets broadcast).
+  private case class SeenPart(canon: DataFrame, bloom: DistBloomBank.Bank) {
+    def free(): Unit = { canon.unpersist(); bloom.unpersist() }
+  }
   private var seenParts: Vector[SeenPart] = Vector.empty
   private var stateAcc: Option[DataFrame] = None
   private var lastStateCount: Long = 0L
@@ -186,15 +188,19 @@ final class Crawler(
   private var fetchedPrev: Long = 0L
   private val collapseEvery = config.collapseEvery
 
-  /** A chain part and its filter set, built at `fpp`. The set's count is
-    * the part's first scan: it materializes the part's cache too.
+  /** The chain part of the committed `seen` rows of rounds [from, to] and
+    * its filter set, built at `fpp`. The set's count is the part's first
+    * scan: it materializes the part's cache too.
     */
-  private def seenPart(canon: DataFrame, fpp: Double): SeenPart = {
-    val bloom = DistBloomBank.buildRound(canon, "canon", config.seenPartitions,
-      config.bloomExpectedPerPartition, fpp).persist()
-    bloom.count()
-    SeenPart(canon, bloom)
-  }
+  private def seenPart(from: Int, to: Int, fpp: Double): Option[SeenPart] =
+    store.read(spark, "seen", minRound = from, maxRound = to).map { seen =>
+      val canon = seen.select($"canonUrl".as("canon"))
+        .repartition(config.seenPartitions, $"canon").persist()
+      val bloom = DistBloomBank.buildRound(canon, "canon", config.seenPartitions,
+        config.bloomExpectedPerPartition, fpp).persist()
+      bloom.count()
+      SeenPart(canon, bloom)
+    }
 
   // The bank's FPP budget, split by load: a bank holds at most
   // collapseEvery round parts, or one base part (the collapsed or resumed
@@ -209,16 +215,16 @@ final class Crawler(
   /** Total URLs scheduled (= fetched+deduped) so far in this run. */
   def totalScheduled: Long = nextSeqAcc
 
-  /** Entry: run all rounds (resuming from the last committed round). */
-  def run(seeds: Dataset[SeedRecord]): Unit = {
+  /** Entry: run all rounds (resuming from the last committed round). Frees
+    * every cache and checkpoint it holds when it returns.
+    */
+  def run(seeds: Dataset[SeedRecord]): Unit = try {
     val resumeFrom = store.latestRound().map(_ + 1).getOrElse(0)
     if (resumeFrom > 0) { // resume: load cross-round state from the store
       val last = resumeFrom - 1
       // the saved banks are never read back: the seen chain resumes as one
       // base part whose filter set is built at the current config
-      seenParts = store.read(spark, "seen").map(df => seenPart(
-        df.select($"canonUrl".as("canon")).repartition(config.seenPartitions, $"canon").persist(),
-        baseFpp)).toVector
+      seenParts = seenPart(0, last, baseFpp).toVector
       // host_state is committed as per-round DELTAS (only the round's
       // touched (host, lane) rows); the current state is the
       // latest-round-wins fold — paid once here, not per commit
@@ -230,16 +236,17 @@ final class Crawler(
       nextSeqAcc = store.manifestMetric(last, "next_seq").getOrElse(0L)
     }
     var round = resumeFrom
-    var candidates: Dataset[Candidate] =
-      if (round == 0) seedCandidates(seeds)
-      else candidatesFromStore(round)
-    var haveCandidates = round == 0 || !candidates.isEmpty
-    while (round < config.maxRounds && haveCandidates) {
-      val (next, nextCount) = runRound(round, candidates)
-      candidates = next
-      haveCandidates = nextCount > 0
+    var candidates = if (round == 0) seedCandidates(seeds) else candidatesFromStore(round)
+    while (round < config.maxRounds && (round == 0 || !candidates.isEmpty)) {
+      runRound(round, candidates)
       round += 1
+      candidates = candidatesFromStore(round)
     }
+  } finally {
+    seenParts.foreach(_.free())
+    seenParts = Vector.empty
+    stateAcc.foreach { s => s.unpersist(); dropCheckpoint(s) }
+    stateAcc = None
   }
 
   /** Round-0 candidates: relevance-scored seeds (threshold filter before
@@ -256,25 +263,23 @@ final class Crawler(
       .as[Candidate]
   }
 
-  /** Rebuild the next round's candidates from committed docs (resume path):
-    * outlinks of the latest committed round's docs, read from that round's
-    * table alone.
+  /** Round `round`'s candidates (every round after round 0, resumed or
+    * not): the outlinks of round `round − 1`'s committed docs, read from
+    * that round's table alone, in (parent seq, link idx) order, inheriting
+    * the parent's keyword (orchestrator.py:222-223 analogue).
     */
   private[graft] def candidatesFromStore(round: Int): Dataset[Candidate] =
-    store.read(spark, "docs", minRound = round - 1, maxRound = round - 1).map(outlinkCandidates)
+    store.read(spark, "docs", minRound = round - 1, maxRound = round - 1)
+      .map(_.select($"seq".as("ord0"), $"keyword", posexplode($"outlinks").as(Seq("ord1", "url")))
+        .select($"url", $"keyword", $"ord0", $"ord1".cast("int"))
+        .as[Candidate])
       .getOrElse(spark.emptyDataset[Candidate])
 
-  /** Candidates from fetched docs: their outlinks in (parent seq, link idx)
-    * order, inheriting the parent's keyword (orchestrator.py:222-223
-    * analogue).
+  /** One crawl round: schedule, fetch and commit `candidates`, then fold
+    * the committed seen rows into the chain. The next round's candidates
+    * are `candidatesFromStore(round + 1)`.
     */
-  private def outlinkCandidates(docs: DataFrame): Dataset[Candidate] =
-    docs.select($"seq".as("ord0"), $"keyword", posexplode($"outlinks").as(Seq("ord1", "url")))
-      .select($"url", $"keyword", $"ord0", $"ord1".cast("int"))
-      .as[Candidate]
-
-  /** One crawl round; returns (next round's candidates, their count). */
-  def runRound(round: Int, candidates: Dataset[Candidate]): (Dataset[Candidate], Long) = {
+  def runRound(round: Int, candidates: Dataset[Candidate]): Unit = {
     val cands = filterAllowed(candidates.toDF()
       .withColumn("canon", canonU($"url"))
       .withColumn("host", hostCol($"canon")))
@@ -301,17 +306,9 @@ final class Crawler(
       Sequencer.addSeq(fresh, Seq(col("ord0"), col("ord1")), "seq", seqStart)
     fresh.unpersist() // seqCache is materialized by addSeq's count pass
     probed.foreach(dropCheckpoint)
-    // the consumed candidates frame (last round's materializedNext, a
-    // localCheckpoint) has flowed into the now-materialized seqCache —
-    // free its checkpoint blocks now instead of waiting for the
-    // ContextCleaner (Dataset.unpersist alone is a no-op here; see
-    // dropCheckpoint). Round-0 seed candidates carry no checkpoint and
-    // fall through both calls harmlessly.
-    candidates.unpersist()
-    dropCheckpoint(candidates)
-    val sequenced = sequencedRaw // host column flows from the candidate stage
 
-    val frontier = sequenced.select(
+    // the host column flows from the candidate stage
+    val frontier = sequencedRaw.select(
       lit(round).as("round"), $"seq", $"url", $"canon".as("canonUrl"), $"host", $"keyword")
       .as[FrontierEntry]
 
@@ -334,29 +331,20 @@ final class Crawler(
     val results = outcome.where($"_1".isNotNull).select($"_1.*")
     val hostStates = outcome.where($"_2".isNotNull).select($"_2.*")
 
-    val next = outlinkCandidates(results.filter($"status" === "fetched"))
-
-    // Lineage bounding for round-crossing frames. A cached plan NESTS its
-    // parents' plans via InMemoryRelation's inner children, so without
-    // intervention round N's logical tree contains round N-1's, which
-    // contains round N-2's … — compute stays bounded (caches cut
-    // recomputation) but the plan TREE grows without bound, and the
-    // driver's per-action plan-description walk (SQL listener events)
-    // went superlinear by round ~4 (observed: 457 s in ExplainUtils).
-    // Two growth modes, two treatments:
-    //  - the SEEN CHAIN is referenced 5-8× by every later round (the
-    //    anti-join fan-in) — multiplicative tree growth. Flattened EVERY
-    //    round via a lazy localCheckpoint under its repartition+persist
-    //    (see roundSeen below).
-    //  - candidates and host-state CROSS-REFERENCE each other through the
-    //    outcome plan (outcome_k nests candidates_{k-1} AND state_{k-1}),
-    //    so they too grow multiplicatively between flattens — measured:
-    //    deferring their flattening to collapse rounds made per-round
-    //    commit cost climb 7→14.5→70 s across one cycle and reset after.
-    //    Flattened EVERY round (lazy localCheckpoint; the existing count
-    //    is the single materializing pass — no extra scan vs persist).
-    // A lost checkpoint block fails the run instead of silently
-    // recomputing — resume covers that.
+    // Lineage bounding for the host state, the one frame that crosses
+    // rounds in memory. A cached plan NESTS its parents' plans via
+    // InMemoryRelation's inner children, and state_k references state_{k-1}
+    // twice (the anti-join below, and the outcome, whose fetch joined it as
+    // prior state), so without intervention its logical tree grows
+    // multiplicatively — compute stays bounded (caches cut recomputation)
+    // but the driver's per-action plan-description walk (SQL listener
+    // events) went superlinear by round ~4 (observed: 457 s in
+    // ExplainUtils), and deferring the flatten to collapse rounds made
+    // per-round commit cost climb 7→14.5→70 s across one cycle. Flattened
+    // EVERY round (lazy localCheckpoint; the count is the single
+    // materializing pass — no extra scan vs persist). A lost checkpoint
+    // block fails the run instead of silently recomputing — resume covers
+    // that.
     val newState = hostStates
     val mergedState = (stateAcc match {
       case Some(old) => old.join(newState.select("host", "lane"), Seq("host", "lane"), "left_anti")
@@ -364,36 +352,6 @@ final class Crawler(
       case None => newState
     }).localCheckpoint(false)
     lastStateCount = mergedState.count()
-
-    // fold the round's frontier into the seen chain: a new round part, or,
-    // once the chain holds `collapseEvery` parts, straight into one
-    // collapsed base part (plan depth + per-round join fan-in stay O(1)),
-    // so the round's rows get exactly one filter set either way. Order of
-    // operations matters for BOTH pathologies here:
-    //  - localCheckpoint on the narrow projection truncates lineage (see
-    //    the host-state note above) — but a LogicalRDD reports UNKNOWN
-    //    partitioning, so checkpointing AFTER the repartition would make
-    //    every later anti-join re-shuffle the whole chain part (verified:
-    //    the join plans an Exchange over Scan ExistingRDD);
-    //  - repartition + persist ON TOP of the checkpoint keeps the
-    //    canon-hash layout visible through InMemoryRelation, so the
-    //    per-round anti-joins stay exchange-free on the history side.
-    // Lazy checkpoint: the first pass (the part's filter-set build)
-    // materializes checkpoint blocks, shuffle and columnar cache in ONE scan.
-    val roundCanon = frontier.select($"canonUrl".as("canon")).toDF()
-    val collapse = seenParts.size >= collapseEvery
-    val folded = (if (collapse) seenParts.map(_.canon) :+ roundCanon else Vector(roundCanon))
-      .reduce(_.unionByName(_))
-      .localCheckpoint(false)
-      .repartition(config.seenPartitions, $"canon").persist()
-    val part = seenPart(folded, if (collapse) baseFpp else roundFpp) // materializes folded
-    if (collapse) {
-      // each chain part layers persist over a localCheckpoint: unpersist
-      // drops the cached copy, dropCheckpoint frees the checkpoint blocks
-      // underneath (the collapsed frame re-checkpointed all of it above)
-      seenParts.foreach { p => p.canon.unpersist(); dropCheckpoint(p.canon); p.bloom.unpersist() }
-      seenParts = Vector(part)
-    } else seenParts :+= part
 
     // the round's observed fetched-row count (outcome is fully
     // materialized by the host-state count above, so the accumulator
@@ -403,25 +361,28 @@ final class Crawler(
     commitRound(round, frontier, results, newState,
       seqStart + frontierCount, frontierCount,
       if (fetchedDelta > 0) fetchedDelta else frontierCount)
-
-    // next round's candidates are the one frame whose lineage reaches
-    // through the outcome cache — checkpointing here is what keeps round
-    // N+1's plans independent of round N's
-    // flattened every round (see the lineage note above — candidates are
-    // one leg of the multiplicative outcome/state cross-reference)
-    val materializedNext = next.localCheckpoint(false)
-    val nextCount = materializedNext.count()
-    val oldState = stateAcc
-    stateAcc = Some(mergedState)
-    // the replaced state is either a resume-time persist (unpersist works)
-    // or last round's localCheckpoint (needs dropCheckpoint) — mergedState
-    // was eagerly counted above, so its blocks are fully materialized and
-    // the old frame has no remaining consumer
-    oldState.foreach { s => s.unpersist(); dropCheckpoint(s) }
-    nextSeqAcc = seqStart + frontierCount
     outcome.unpersist()
     seqCache.unpersist()
-    (materializedNext, nextCount)
+
+    // fold the round's committed seen rows into the chain: a new round
+    // part, or, once the chain holds `collapseEvery` parts, one collapsed
+    // base part read from every committed round, so the round's rows get
+    // exactly one filter set either way
+    val collapse = seenParts.size >= collapseEvery
+    if (collapse) seenParts.foreach(_.free())
+    val part = seenPart(if (collapse) 0 else round, round, if (collapse) baseFpp else roundFpp)
+    seenParts = (if (collapse) Vector.empty else seenParts) ++ part
+    // saved after the commit, for diagnostics: no crawl reads a saved bank
+    // back, so a round whose bank write never ran resumes the same.
+    // Distributed parquet write of (pid, filter) rows — nothing collected.
+    DistBloomBank.save(spark, bank, store.bloomPath(round))
+
+    // the replaced state is either a resume-time persist (unpersist works)
+    // or last round's localCheckpoint (needs dropCheckpoint) — mergedState
+    // was eagerly counted above, so the old frame has no remaining consumer
+    stateAcc.foreach { s => s.unpersist(); dropCheckpoint(s) }
+    stateAcc = Some(mergedState)
+    nextSeqAcc = seqStart + frontierCount
   }
 
   /** Bloom pre-filter (distributed partition-aligned probe — only the
@@ -541,8 +502,8 @@ final class Crawler(
     df.coalesce(math.max(1, math.min(spark.sparkContext.defaultParallelism * 4L,
       math.ceil(estRows.toDouble / rowsPerFile).toLong).toInt))
 
-  /** Atomic snapshot commit of the round's five tables + bloom bank (all
-    * inputs already computed/cached by runRound — this is write-only).
+  /** Atomic snapshot commit of the round's five tables (all inputs
+    * already computed/cached by runRound — this is write-only).
     * host_state is a DELTA: only the (host, lane) rows the round touched
     * (at 10^8 hosts a full-state rewrite per round would be
     * O(total-hosts) I/O for a fractional change); resume folds the deltas
@@ -572,18 +533,12 @@ final class Crawler(
       sum(when($"status" === "fetched", 1L).otherwise(0L)).as("fetched"),
       sum(when($"status" =!= "fetched", 1L).otherwise(0L)).as("failed"))
 
-    // bank saved before the manifest: an orphan bank of an uncommitted
-    // round is never read (readers resolve the bank via committed rounds).
-    // Distributed parquet write of (pid, filter) rows — nothing collected.
-    // It rides the commit's parallel write wave (the manifest still lands
-    // only after every write, bank included, has completed).
     store.commit(round,
       Map("docs" -> docs, "crawl_log" -> crawlLog, "seen" -> seen,
         "metrics" -> sizedForWrite(metrics, 1L, 1L),
         "host_state" -> sizedForWrite(roundStateDelta, lastStateCount, 500000L)),
       knownCounts = Map("seen" -> frontierCount, "crawl_log" -> frontierCount),
-      metricsJson = s"""{"next_seq":$nextSeq,"frontier":$frontierCount}""",
-      alsoParallel = Seq(() => DistBloomBank.save(spark, bank, store.bloomPath(round))))
+      metricsJson = s"""{"next_seq":$nextSeq,"frontier":$frontierCount}""")
   }
 }
 

@@ -49,9 +49,8 @@ final class SnapshotStore(val root: String) {
     * already-cached data; tables without one get -1 (never re-read parquet
     * just for a manifest statistic).
     *
-    * The per-table writes (and any `alsoParallel` extra writes, e.g. the
-    * bloom bank) run CONCURRENTLY from a small driver thread pool (guide
-    * §2.6): most round tables are single-file writes whose lone task
+    * The per-table writes run CONCURRENTLY from a small driver thread pool
+    * (guide §2.6): most round tables are single-file writes whose lone task
     * would otherwise hold the whole cluster idle in sequence — overlapped,
     * they back-fill executors under the fat docs write. The manifest is
     * written only after every write completes (and any failure propagates
@@ -61,17 +60,15 @@ final class SnapshotStore(val root: String) {
     * thrown (a retry in the same process would race it).
     */
   def commit(round: Int, tables: Map[String, DataFrame],
-      knownCounts: Map[String, Long] = Map.empty, metricsJson: String = "{}",
-      alsoParallel: Seq[() => Unit] = Seq.empty): Unit = {
-    val writes: Seq[() => Unit] = tables.toSeq.map { case (name, df) =>
-      () => df.write.mode(SaveMode.Overwrite).parquet(tablePath(name, round))
-    } ++ alsoParallel
+      knownCounts: Map[String, Long] = Map.empty, metricsJson: String = "{}"): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(writes.size, 6)))
+      math.max(1, math.min(tables.size, 6)))
     try {
-      val pending = writes.map(w => pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = w()
-      }))
+      val pending = tables.toSeq.map { case (name, df) =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = df.write.mode(SaveMode.Overwrite).parquet(tablePath(name, round))
+        })
+      }
       pending.map(f => scala.util.Try(f.get())).collectFirst {
         case scala.util.Failure(e: java.util.concurrent.ExecutionException) => throw e.getCause
       }
@@ -98,15 +95,16 @@ final class SnapshotStore(val root: String) {
       s""""$key"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
     }
 
-  /** Union of a table across committed rounds in [minRound, maxRound]
-    * (time travel); rounds outside the range are never read.
+  /** A table across committed rounds in [minRound, maxRound] (time
+    * travel), read as one scan over the rounds' directories; rounds outside
+    * the range are never read.
     */
   def read(spark: SparkSession, table: String, maxRound: Int = Int.MaxValue,
       minRound: Int = 0): Option[DataFrame] = {
     val rounds = committedRounds().filter(r => r >= minRound && r <= maxRound)
       .filter(r => Files.exists(Paths.get(tablePath(table, r))))
     if (rounds.isEmpty) None
-    else Some(rounds.map(r => spark.read.parquet(tablePath(table, r))).reduce(_.unionByName(_)))
+    else Some(spark.read.parquet(rounds.map(tablePath(table, _)): _*))
   }
 
   /** Latest-round-wins fold of a DELTA table: each round commits only the

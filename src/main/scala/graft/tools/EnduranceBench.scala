@@ -73,7 +73,9 @@ object EnduranceBench {
     var prevScheduled = 0L
     while (round < rounds && have) {
       val t0 = System.nanoTime()
-      val (next, n) = crawler.runRound(round, candidates)
+      crawler.runRound(round, candidates)
+      candidates = crawler.candidatesFromStore(round + 1)
+      val n = candidates.count()
       val wall = (System.nanoTime() - t0) / 1e9
       val cum = crawler.totalScheduled
       val roundUrls = cum - prevScheduled
@@ -82,7 +84,6 @@ object EnduranceBench {
         f""""next_candidates":$n,"cum_scheduled":$cum,""" +
         f""""urls_per_sec":${roundUrls / wall}%.0f}"""
       println(s"[endurance] ${recs.last}")
-      candidates = next
       have = n > 0
       round += 1
     }

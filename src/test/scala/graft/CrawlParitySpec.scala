@@ -248,9 +248,9 @@ class CrawlParitySpec extends SparkSpec {
     sc.addSparkListener(listener)
     sc.setLocalProperty("graft.test.tag", tag)
     val held = try (0 until 4).map { round =>
-      val (next, n) = crawler.runRound(round, cands)
-      assert(round == 3 || n > 0, s"test vacuous: round $round discovered no candidates")
-      cands = next
+      crawler.runRound(round, cands)
+      cands = crawler.candidatesFromStore(round + 1)
+      assert(round == 3 || !cands.isEmpty, s"test vacuous: round $round discovered no candidates")
       (sc.getPersistentRDDs -- before).map { case (id, r) => id -> r.getStorageLevel }
     } finally {
       sc.setLocalProperty("graft.test.tag", null)
@@ -259,11 +259,27 @@ class CrawlParitySpec extends SparkSpec {
     }
     assert(held(3).size <= held(1).size,
       s"persisted RDDs after 4 rounds: ${held(3).size}, after 2: ${held(1).size}")
+    // the seen part's cache and filter set, and the host-state checkpoint
+    held.drop(1).foreach(h => assert(h.size <= 3, s"${h.size} persisted RDDs held between rounds"))
     held.flatten.foreach { case (id, l) => assert(l.useDisk, s"RDD $id persisted at $l") }
     val persistedLevels = levels.asScala.filter(_.isValid).toSet
     persistedLevels.foreach(l => assert(l.useDisk, s"a crawl stage read an RDD persisted at $l"))
     assert(persistedLevels.exists(l => l.useDisk && !l.useMemory),
       "test vacuous: the DISK_ONLY fetch outcome was never read")
+  }
+
+  test("run frees every cache and checkpoint it persisted when it returns") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val dir = tempDir("graft-run-frees")
+    val seedDs = spark.createDataset(Fixtures.seeds(200))
+    val before = sc.getPersistentRDDs.keySet
+    def leaked = sc.getPersistentRDDs.keySet -- before
+    new Crawler(spark, config, dir).run(seedDs)
+    assert(leaked.isEmpty, s"a fresh run left ${leaked.size} persisted RDDs")
+    new Crawler(spark, config.copy(maxRounds = 3), dir).run(seedDs) // resumes round 2
+    assert(new graft.snapshot.SnapshotStore(dir).latestRound().contains(2))
+    assert(leaked.isEmpty, s"a resumed run left ${leaked.size} persisted RDDs")
   }
 
   test("bloom bank: no false negatives; pre-filter admits all seen urls") {
