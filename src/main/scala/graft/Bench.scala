@@ -36,6 +36,7 @@ object Bench {
     // else "before" reads low and fakes the very asymmetry it checks for)
     graft.tools.NoiseSampler.cpuSpeedPerThread(cpus.toInt, millis = 500)
     val spinBefore = graft.tools.NoiseSampler.cpuSpeedPerThread(cpus.toInt, millis = 2000)
+    val hostFloor = graft.tools.NoiseSampler.hostFloor()
 
     // warm the session (JIT + codegen + parquet footer caches), and build
     // the q33 stored ANN index outside the timed battery — the index is
@@ -126,12 +127,11 @@ object Bench {
     // probes ("before" can read low when JVM startup work is still
     // settling), FLOORED at the clean-host band — when both bracketing
     // probes are themselves burst-depressed, flagging against them lets a
-    // fully-noisy window self-approve (see NoiseSampler.CleanHostFloor).
+    // fully-noisy window self-approve (see NoiseSampler.hostFloor).
     // local[$cpus] fully subscribes this box, so the margins are
     // the loose full-subscription ones (see NoiseSampler.flaggedVsIdle) —
     // clean-host self-squeeze measured: median 0.96×idle, p25 0.69×idle.
-    val idleRef = math.max(math.max(spinBefore, spinAfter),
-      graft.tools.NoiseSampler.CleanHostFloor)
+    val idleRef = math.max(math.max(spinBefore, spinAfter), hostFloor)
     val batteryFlag = batteryNoise.flaggedVsIdle(idleRef, medianFrac = 0.80, p25Frac = 0.50)
     val crawlFlag = crawlNoise.flaggedVsIdle(idleRef, medianFrac = 0.80, p25Frac = 0.50)
     def jmap(m: Map[String, Double]) = m.toSeq.sortBy(_._1)
@@ -141,6 +141,7 @@ object Bench {
       f""""crawl_attempt_secs":[$sec1%.2f,$sec2%.2f],""" +
       f""""queries_total_sec":$total%.2f,"queries":$qs,"cold_index_builds":$cold,""" +
       f""""spin_before_mps":${spinBefore / 1e6}%.1f,"spin_after_mps":${spinAfter / 1e6}%.1f,""" +
+      f""""host_floor_mps":${hostFloor / 1e6}%.1f,""" +
       s""""inrun_noise_battery":${batteryNoise.json(batteryFlag)},""" +
       s""""inrun_noise_crawl":${crawlNoise.json(crawlFlag)},""" +
       s""""inrun_noise_crawl_attempts":[${noise1.json(noise1.flaggedVsIdle(idleRef, medianFrac = 0.80, p25Frac = 0.50))},""" +

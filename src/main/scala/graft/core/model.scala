@@ -115,7 +115,7 @@ final case class CrawlConfig(
     bloomExpectedPerPartition: Long = 1000000L, // cap on one bloom filter's sized keys
     bloomFpp: Double = 0.01,       // target FPP of the whole bank
     collapseEvery: Int = 8,       // seen-chain collapse cycle (rounds)
-    // Ignored: every crawl frees superseded checkpoints eagerly (see
-    // Crawler.dropCheckpoint). Kept only so callers that still pass it by
-    // name compile; to be dropped with them.
+    // Ignored: the crawl holds no checkpoint to free (between rounds it
+    // keeps only the seen chain's caches; see Crawler). Kept only so
+    // callers that still pass it by name compile; to be dropped with them.
     eagerCheckpointFree: Boolean = false)

@@ -116,6 +116,10 @@ object DistBloomBank {
     else Bank(sets.head.width, sets.head.rdd.sparkContext.union(sets.map(_.rdd)))
   }
 
+  /** The accumulator a probe adds 1 to per filter pass it runs (a read of
+    * probed rows from a cache adds nothing). */
+  val ProbePasses = "graft.bloom.probe_passes"
+
   /** Adds boolean column `flag` = bank.mightContain(canon). Only the
     * candidate rows shuffle (routed at the BANK's width, regardless of
     * session config); each task probes its partition's blobs in place.
@@ -123,8 +127,10 @@ object DistBloomBank {
   def probe(cands: DataFrame, canonCol: String, bank: Bank, flag: String): DataFrame = {
     val schema = cands.schema
     val idx = schema.fieldIndex(canonCol)
+    val passes = cands.sparkSession.sparkContext.longAccumulator(ProbePasses)
     val probed = routed(cands, canonCol, bank.width).rdd
       .zipPartitions(bank.rdd, preservesPartitioning = false) { (cit, bit) =>
+        passes.add(1L)
         val filters = bit.map(kv => deser(kv._2)).toArray
         cit.map { r =>
           // encoded once for all of the pid's filters (as mightContainString does)

@@ -74,8 +74,9 @@ final case class FetchParseRow(
   *       suspension after max_retries, reset on success)
   *     → fused fetch+parse (parser registry w/ generic fallback,
   *       content_crawler.py:180-238) emitting interleaved span docs
-  *     → snapshot commit: docs ∪ crawl_log ∪ seen ∪ metrics ∪ host_state,
-  *       atomic manifest (resumable; partial rounds invisible)
+  *     → snapshot commit: docs ∪ crawl_log ∪ seen ∪ metrics ∪ host_state
+  *       (a delta, or every collapseEvery rounds a full base), atomic
+  *       manifest (resumable; partial rounds invisible)
   *     → the round's committed seen rows read back into the seen chain and
   *       its bloom bank (the same read a resume does), bank saved.
   *
@@ -125,26 +126,6 @@ final class Crawler(
     spark.createDataFrame(rules).toDF("host", "__disallow")
   }
 
-  /** Free a localCheckpoint'ed frame's blocks NOW. `Dataset.unpersist()`
-    * is a no-op on a checkpointed frame — its plan is a `LogicalRDD`
-    * that was never registered with the CacheManager — so without this
-    * the blocks are reclaimed only when the ContextCleaner notices the
-    * RDD is garbage (GC-latency-bound on long crawls with large rounds).
-    *
-    * Safe because no consumer of a freed checkpoint ever recomputes
-    * through it: every one persists at a disk-backed level (`persist()`
-    * defaults to MEMORY_AND_DISK, the bloom bank uses MEMORY_AND_DISK, the
-    * fetch outcome DISK_ONLY, and a localCheckpoint itself is
-    * MEMORY_AND_DISK), so a block evicted under memory pressure spills to
-    * disk instead of being dropped. A lost executor loses the checkpoint
-    * blocks whether they were freed or not; resume is the cure for that.
-    * Non-checkpointed frames have no `LogicalRDD` leaf → no-op.
-    */
-  private def dropCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   /** Robots disallow filter: left-join the rules, drop candidates whose
     * path starts with any disallowed prefix (no rules → allowed).
     */
@@ -158,9 +139,11 @@ final class Crawler(
   // Cross-round state. A round reads its inputs back from what the
   // previous rounds committed, the same way a resume does: its candidates
   // are the outlinks of the last committed round's docs
-  // (candidatesFromStore) and every seen-chain part is read from the
-  // committed `seen` table (seenPart). Only the host scheduler state and
-  // the next sequence id flow in memory between rounds.
+  // (candidatesFromStore), its host scheduler state is the committed
+  // host_state fold (committedState), and every seen-chain part is read
+  // from the committed `seen` table (seenPart). Only the seen chain's
+  // caches, which recompute from that read, and the next sequence id are
+  // held between rounds.
   //
   // The seen set is a CHAIN of parts, each persisted pre-partitioned on
   // `canon`, so the per-round exact anti-join re-uses the cached
@@ -175,8 +158,6 @@ final class Crawler(
     def free(): Unit = { canon.unpersist(); bloom.unpersist() }
   }
   private var seenParts: Vector[SeenPart] = Vector.empty
-  private var stateAcc: Option[DataFrame] = None
-  private var lastStateCount: Long = 0L
   private var nextSeqAcc: Long = 0L
   // observed fetched-row counter, bumped by the fetch stage's executors;
   // commitRound sizes the docs table's write fan-out from the ROUND DELTA
@@ -212,27 +193,35 @@ final class Crawler(
 
   private def bank: DistBloomBank.Bank = DistBloomBank.union(seenParts.map(_.bloom))
 
+  /** The latest round ≤ `round` whose host_state is a base, as its
+    * manifest records it; 0 for a store that records none (its round 0 is
+    * a base: it folds from there).
+    */
+  private def stateBase(round: Int): Int =
+    store.manifestMetric(round, "state_base").getOrElse(0L).toInt
+
+  /** The host scheduler state committed through round `last`: the latest
+    * base host_state table plus the deltas committed after it, folded
+    * latest-round-wins (empty before round 0). Every round's fetch reads
+    * it, resumed or not.
+    */
+  private def committedState(last: Int): DataFrame =
+    store.readFoldedLatest(spark, "host_state", Seq("host", "lane"), last, stateBase(last))
+      .getOrElse(spark.emptyDataset[HostState].toDF())
+
   /** Total URLs scheduled (= fetched+deduped) so far in this run. */
   def totalScheduled: Long = nextSeqAcc
 
   /** Entry: run all rounds (resuming from the last committed round). Frees
-    * every cache and checkpoint it holds when it returns.
+    * every cache it holds when it returns.
     */
   def run(seeds: Dataset[SeedRecord]): Unit = try {
     val resumeFrom = store.latestRound().map(_ + 1).getOrElse(0)
-    if (resumeFrom > 0) { // resume: load cross-round state from the store
+    if (resumeFrom > 0) { // resume: the seen chain and the sequence id
       val last = resumeFrom - 1
       // the saved banks are never read back: the seen chain resumes as one
       // base part whose filter set is built at the current config
       seenParts = seenPart(0, last, baseFpp).toVector
-      // host_state is committed as per-round DELTAS (only the round's
-      // touched (host, lane) rows); the current state is the
-      // latest-round-wins fold — paid once here, not per commit
-      val st = store.readFoldedLatest(spark, "host_state", Seq("host", "lane"))
-        .map(_.persist())
-        .getOrElse(spark.emptyDataset[HostState].toDF().persist())
-      lastStateCount = st.count()
-      stateAcc = Some(st)
       nextSeqAcc = store.manifestMetric(last, "next_seq").getOrElse(0L)
     }
     var round = resumeFrom
@@ -245,8 +234,6 @@ final class Crawler(
   } finally {
     seenParts.foreach(_.free())
     seenParts = Vector.empty
-    stateAcc.foreach { s => s.unpersist(); dropCheckpoint(s) }
-    stateAcc = None
   }
 
   /** Round-0 candidates: relevance-scored seeds (threshold filter before
@@ -305,15 +292,15 @@ final class Crawler(
     val (sequencedRaw, frontierCount, seqCache) =
       Sequencer.addSeq(fresh, Seq(col("ord0"), col("ord1")), "seq", seqStart)
     fresh.unpersist() // seqCache is materialized by addSeq's count pass
-    probed.foreach(dropCheckpoint)
+    probed.foreach(_.unpersist())
 
     // the host column flows from the candidate stage
     val frontier = sequencedRaw.select(
       lit(round).as("round"), $"seq", $"url", $"canon".as("canonUrl"), $"host", $"keyword")
       .as[FrontierEntry]
 
-    // politeness-scheduled fused fetch+parse (host scheduler state carried
-    // over from the previous round's checkpoint). The fetch output (spans +
+    // politeness-scheduled fused fetch+parse (host scheduler state read
+    // from what the previous rounds committed). The fetch output (spans +
     // outlinks) is the round's heavyweight intermediate: it is spilled
     // columnar to disk (the snapshot write follows anyway and heap
     // eviction would trigger a full re-fetch).
@@ -329,39 +316,30 @@ final class Crawler(
     // Tuple encoding preserves element nullness, so `_1 IS NOT NULL`
     // selects exactly the rows Option(o._1) kept.
     val results = outcome.where($"_1".isNotNull).select($"_1.*")
-    val hostStates = outcome.where($"_2".isNotNull).select($"_2.*")
+    val delta = outcome.where($"_2".isNotNull).select($"_2.*")
 
-    // Lineage bounding for the host state, the one frame that crosses
-    // rounds in memory. A cached plan NESTS its parents' plans via
-    // InMemoryRelation's inner children, and state_k references state_{k-1}
-    // twice (the anti-join below, and the outcome, whose fetch joined it as
-    // prior state), so without intervention its logical tree grows
-    // multiplicatively — compute stays bounded (caches cut recomputation)
-    // but the driver's per-action plan-description walk (SQL listener
-    // events) went superlinear by round ~4 (observed: 457 s in
-    // ExplainUtils), and deferring the flatten to collapse rounds made
-    // per-round commit cost climb 7→14.5→70 s across one cycle. Flattened
-    // EVERY round (lazy localCheckpoint; the count is the single
-    // materializing pass — no extra scan vs persist). A lost checkpoint
-    // block fails the run instead of silently recomputing — resume covers
-    // that.
-    val newState = hostStates
-    val mergedState = (stateAcc match {
-      case Some(old) => old.join(newState.select("host", "lane"), Seq("host", "lane"), "left_anti")
-        .unionByName(newState)
-      case None => newState
-    }).localCheckpoint(false)
-    lastStateCount = mergedState.count()
+    // host_state commits the round's delta (the (host, lane) rows it
+    // touched) or, once collapseEvery rounds have passed since the last
+    // base, a new base: the full folded state. So committedState folds at
+    // most collapseEvery tables. Counting the table the round commits is
+    // the one pass that materializes the fetch outcome.
+    val lastBase = stateBase(round - 1)
+    val rebase = round - lastBase >= collapseEvery
+    val hostState = (if (!rebase) delta
+      else committedState(round - 1).join(delta.select("host", "lane"), Seq("host", "lane"), "left_anti")
+        .unionByName(delta)).persist() // counted, then written
+    val hostStateRows = hostState.count()
 
     // the round's observed fetched-row count (outcome is fully
     // materialized by the host-state count above, so the accumulator
     // already carries this round's adds)
     val fetchedDelta = math.max(0L, fetchedAcc.value - fetchedPrev)
     fetchedPrev = fetchedAcc.value
-    commitRound(round, frontier, results, newState,
+    commitRound(round, frontier, results, hostState, hostStateRows, if (rebase) round else lastBase,
       seqStart + frontierCount, frontierCount,
       if (fetchedDelta > 0) fetchedDelta else frontierCount)
     outcome.unpersist()
+    hostState.unpersist()
     seqCache.unpersist()
 
     // fold the round's committed seen rows into the chain: a new round
@@ -376,35 +354,29 @@ final class Crawler(
     // back, so a round whose bank write never ran resumes the same.
     // Distributed parquet write of (pid, filter) rows — nothing collected.
     DistBloomBank.save(spark, bank, store.bloomPath(round))
-
-    // the replaced state is either a resume-time persist (unpersist works)
-    // or last round's localCheckpoint (needs dropCheckpoint) — mergedState
-    // was eagerly counted above, so the old frame has no remaining consumer
-    stateAcc.foreach { s => s.unpersist(); dropCheckpoint(s) }
-    stateAcc = Some(mergedState)
     nextSeqAcc = seqStart + frontierCount
   }
 
   /** Bloom pre-filter (distributed partition-aligned probe — only the
     * candidates shuffle, the bank never moves) + exact left-anti joins
     * against the cached seen chain. mightContain=false short-circuits the
-    * exact tier entirely; false positives are re-checked exactly, never
-    * dropped. Each chain part is persisted already hash-partitioned on
-    * `canon`, so the per-round anti-joins never re-shuffle history — only
-    * the (bloom-surviving, small) candidate side moves. On a real cluster
-    * the exact tier would be an Iceberg table bucketed by canon-hash with
-    * storage-partitioned joins; the cached-partitioned chain is the
-    * in-memory equivalent.
+    * exact tier entirely: only the bloom positives enter the joins, and a
+    * false positive is re-checked exactly, never dropped. Each chain part
+    * is persisted already hash-partitioned on `canon`, so the per-round
+    * anti-joins never re-shuffle history — only the (bloom-surviving,
+    * small) candidate side moves. On a real cluster the exact tier would
+    * be an Iceberg table bucketed by canon-hash with storage-partitioned
+    * joins; the cached-partitioned chain is the in-memory equivalent.
     *
-    * Returns the fresh candidates and the probed frame, a checkpoint the
-    * caller frees once the fresh candidates are materialized.
+    * Returns the fresh candidates and the probed frame, a cache the caller
+    * frees once the fresh candidates are materialized.
     */
   private def antiJoinSeen(cands: DataFrame): (DataFrame, Option[DataFrame]) =
     if (seenParts.isEmpty) (cands, None) // first round of a fresh run
     else {
-      // materialized once (its rows are narrow): both union branches below
-      // read it, and a lazy plan would run the probe pass once per branch
-      val flagged = DistBloomBank.probe(cands, "canon", bank, "maybe_seen").localCheckpoint()
+      // cached (its rows are narrow) so the probe pass runs once, though
+      // both union branches below read it; a lost block recomputes
+      val flagged = DistBloomBank.probe(cands, "canon", bank, "maybe_seen").persist()
       val definitelyNew = flagged.filter(!$"maybe_seen")
       val confirmed = seenParts.foldLeft(flagged.filter($"maybe_seen")) {
         (df, part) => df.join(part.canon, Seq("canon"), "left_anti")
@@ -425,17 +397,16 @@ final class Crawler(
     // host's biggest lane is 1/salt of it).
     val p = math.max(config.seenPartitions, spark.sparkContext.defaultParallelism)
 
-    // carry over the per-(host, lane) scheduler state from the in-flight
-    // accumulator (join, not a broadcast global map — the state table
-    // scales with #hosts; Spark still broadcasts it while it is small)
-    val priorState: DataFrame = stateAcc
-      .getOrElse(spark.emptyDataset[HostState].toDF())
+    // the per-(host, lane) scheduler state committed through the previous
+    // round (a join, not a broadcast global map: the state table scales
+    // with #hosts; the planner broadcasts its parquet read while it is small)
+    val priorState = committedState(round - 1)
       .select($"host", $"lane", $"retryCount".as("initRetry"), $"suspended".as("initSusp"),
         $"virtualTime".as("initVt"), $"drawCount".as("initDraw"))
 
     val parted = frontier.toDF()
       .withColumn("lane", Crawler.laneCol($"canonUrl", config.saltFactor))
-      .join(broadcastIfSmall(priorState), Seq("host", "lane"), "left")
+      .join(priorState, Seq("host", "lane"), "left")
       .na.fill(Map("initRetry" -> 0, "initVt" -> 0.0, "initDraw" -> 0L)).na.fill(false, Seq("initSusp"))
       .repartition(p, $"host", $"lane")
       .sortWithinPartitions($"seq")
@@ -480,17 +451,6 @@ final class Crawler(
     }
   }
 
-  /** Broadcast-hint the host-state side only while it is measurably small.
-    * The table grows with distinct (host, lane) — unconditional broadcast
-    * (round 1's behavior) would ship an unbounded table to every executor
-    * at a 10^10-URL frontier. Above the gate the plain join shuffles
-    * host-state once on (host, lane) — the same key the frontier is about
-    * to repartition on anyway.
-    */
-  private val broadcastStateMaxRows = 1000000L
-  private def broadcastIfSmall(df: DataFrame): DataFrame =
-    if (lastStateCount < broadcastStateMaxRows) broadcast(df) else df
-
   /** Cap a table's write fan-out by its (estimated) row count: a round's
     * tables otherwise inherit the fetch stage's partitioning, one file per
     * partition per table however small the round — the classic lake
@@ -504,13 +464,15 @@ final class Crawler(
 
   /** Atomic snapshot commit of the round's five tables (all inputs
     * already computed/cached by runRound — this is write-only).
-    * host_state is a DELTA: only the (host, lane) rows the round touched
+    * host_state is a DELTA, only the (host, lane) rows the round touched
     * (at 10^8 hosts a full-state rewrite per round would be
-    * O(total-hosts) I/O for a fractional change); resume folds the deltas
-    * latest-round-wins (SnapshotStore.readFoldedLatest).
+    * O(total-hosts) I/O for a fractional change), except when `baseRound`
+    * is `round`: then it is a BASE, the full folded state. The manifest
+    * records `baseRound` as `state_base`, so a reader folds that base and
+    * the deltas after it (committedState).
     */
   private def commitRound(round: Int, frontier: Dataset[FrontierEntry],
-      results: DataFrame, roundStateDelta: DataFrame,
+      results: DataFrame, hostState: DataFrame, hostStateRows: Long, baseRound: Int,
       nextSeq: Long, frontierCount: Long, fetchedCount: Long): Unit = {
     // docs holds only status='fetched' rows, so it is sized by the round's
     // OBSERVED fetched count (executor accumulator), not the frontier
@@ -536,9 +498,10 @@ final class Crawler(
     store.commit(round,
       Map("docs" -> docs, "crawl_log" -> crawlLog, "seen" -> seen,
         "metrics" -> sizedForWrite(metrics, 1L, 1L),
-        "host_state" -> sizedForWrite(roundStateDelta, lastStateCount, 500000L)),
-      knownCounts = Map("seen" -> frontierCount, "crawl_log" -> frontierCount),
-      metricsJson = s"""{"next_seq":$nextSeq,"frontier":$frontierCount}""")
+        "host_state" -> sizedForWrite(hostState, hostStateRows, 500000L)),
+      knownCounts = Map("seen" -> frontierCount, "crawl_log" -> frontierCount,
+        "host_state" -> hostStateRows),
+      metricsJson = s"""{"next_seq":$nextSeq,"frontier":$frontierCount,"state_base":$baseRound}""")
   }
 }
 

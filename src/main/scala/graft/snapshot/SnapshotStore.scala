@@ -101,32 +101,38 @@ final class SnapshotStore(val root: String) {
     */
   def read(spark: SparkSession, table: String, maxRound: Int = Int.MaxValue,
       minRound: Int = 0): Option[DataFrame] = {
-    val rounds = committedRounds().filter(r => r >= minRound && r <= maxRound)
-      .filter(r => Files.exists(Paths.get(tablePath(table, r))))
+    val rounds = roundsOf(table, minRound, maxRound)
     if (rounds.isEmpty) None
     else Some(spark.read.parquet(rounds.map(tablePath(table, _)): _*))
   }
 
-  /** Latest-round-wins fold of a DELTA table: each round commits only the
-    * keys it touched; the current state is, per key, the row from the
-    * highest committed round. One shuffle on the key at read time — paid
-    * only at resume, so per-round commit I/O stays O(|touched keys|)
-    * instead of O(|all keys ever|) (the Iceberg analogue is a
-    * merge-on-read position/equality delete fold).
+  /** Committed rounds in [minRound, maxRound] that wrote `table`. */
+  private def roundsOf(table: String, minRound: Int, maxRound: Int): Seq[Int] =
+    committedRounds().filter(r => r >= minRound && r <= maxRound)
+      .filter(r => Files.exists(Paths.get(tablePath(table, r))))
+
+  /** Latest-round-wins fold of a DELTA table over the committed rounds in
+    * [minRound, maxRound]: a round commits only the keys it touched, or a
+    * base holding every key; per key, the row from the highest round wins.
+    * Reading from the latest base (minRound) bounds the fold, so per-round
+    * commit I/O stays O(|touched keys|) between bases (the Iceberg
+    * analogue is a merge-on-read equality-delete fold). The rounds are
+    * read as one scan, each row tagged with its round from its file path,
+    * and folded by one window on the key: its exchange is the one a join
+    * or repartition on the key would plan anyway, so over a state too big
+    * to broadcast the fold adds no shuffle. A one-round range is a plain
+    * read.
     */
   def readFoldedLatest(spark: SparkSession, table: String, keyCols: Seq[String],
-      maxRound: Int = Int.MaxValue): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit, row_number}
-    val rounds = committedRounds().filter(_ <= maxRound)
-      .filter(r => Files.exists(Paths.get(tablePath(table, r))))
-    if (rounds.isEmpty) return None
-    val tagged = rounds.map(r =>
-      spark.read.parquet(tablePath(table, r)).withColumn("__r", lit(r)))
-      .reduce(_.unionByName(_))
+      maxRound: Int = Int.MaxValue, minRound: Int = 0): Option[DataFrame] = {
+    import org.apache.spark.sql.functions.{col, regexp_extract, row_number}
+    val rounds = roundsOf(table, minRound, maxRound)
+    if (rounds.size <= 1) return rounds.headOption.map(r => spark.read.parquet(tablePath(table, r)))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols.map(col): _*).orderBy(col("__r").desc)
-    Some(tagged.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn", "__r"))
+    Some(spark.read.parquet(rounds.map(tablePath(table, _)): _*)
+      .withColumn("__r", regexp_extract(col("_metadata.file_path"), "round=(\\d+)/[^/]+$", 1).cast("int"))
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn", "__r"))
   }
 
   /** Bulk load with provenance: the reference dashboard tags every loaded

@@ -64,6 +64,7 @@ object EnduranceBench {
     var round = 0
     var have = true
     val recs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val hostFloor = NoiseSampler.hostFloor() // the in-run flag's idle reference
     // in-run noise samples: a 4-minute endurance run straddles the host's
     // burst waves more often than not; per-round walls without a noise
     // channel cannot distinguish lineage growth from a burst arriving
@@ -93,7 +94,8 @@ object EnduranceBench {
       f""""total_sec":$totalSec%.1f,"total_scheduled":${crawler.totalScheduled},""" +
       f""""urls_per_sec":${crawler.totalScheduled / totalSec}%.0f,""" +
       s""""collapse_every":$collapseEvery,"cores":$cores,"seeds":$nSeeds,""" +
-      s""""inrun_noise":${noise.json(noise.flaggedVsIdle(NoiseSampler.CleanHostFloor))},""" +
+      f""""host_floor_mps":${hostFloor / 1e6}%.1f,""" +
+      s""""inrun_noise":${noise.json(noise.flaggedVsIdle(hostFloor))},""" +
       s""""per_round":[${recs.mkString(",")}]}""")
     spark.stop()
   }

@@ -85,17 +85,19 @@ object NoiseSampler {
     (0 until threads).map(counts.get).sum.toDouble / threads / sec
   }
 
-  /** Clean-host floor for the idle reference (iterations/sec). The
-    * register-spin probe on this box reads ~700-800 M/s whenever the host
-    * is actually idle (measured across four rounds of bracketing probes);
-    * a bracketing probe BELOW this band means the "idle" measurement
-    * itself ate a burst — flagging against it would let a fully-noisy
-    * window self-approve (observed: a crawl with in-run median 514 M/s
-    * passed because its bracketing probes read 204/339). Callers floor
-    * their idleRef at this constant so the flag criteria never reference
-    * a depressed baseline.
+  /** The host's own clean-host floor for the idle reference (iterations/
+    * sec): the highest of three 1 s idle single-thread probes after a
+    * discarded JIT probe (a burst only lowers a reading). Tools take it
+    * once per run, floor their idleRef at it and print it as
+    * `host_floor_mps`: flagging against burst-depressed bracketing probes
+    * let a fully-noisy window self-approve (in-run median 514 M/s against
+    * probes of 204/339). A burst through all three probes lowers the floor
+    * too, which the printed value shows.
     */
-  val CleanHostFloor: Double = 700e6
+  def hostFloor(): Double = {
+    cpuSpeedPerThread(1, 500)
+    Seq.fill(3)(cpuSpeedPerThread(1, 1000)).max
+  }
 
   /** min/p25/median in iterations/sec (divide by 1e6 for the M/s the
     * bracketing probes print).

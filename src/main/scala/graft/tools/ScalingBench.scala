@@ -93,6 +93,7 @@ object ScalingBench {
     val nSeeds = args.lift(0).map(_.toLong).getOrElse(400000L)
     val lo = args.lift(1).map(_.toInt).getOrElse(8)
     val hi = args.lift(2).map(_.toInt).getOrElse(32)
+    val hostFloor = NoiseSampler.hostFloor() // idle: no Spark session yet
 
     // Warm-up at FULL size: the first big run in a JVM/VM pays one-off
     // host costs a small warm-up cannot absorb — JIT plus the microVM
@@ -139,9 +140,9 @@ object ScalingBench {
     val hiNoise = runs.filter(_._1 == hi).minBy(_._2)._4
     def spread(xs: Seq[Double]): Double = if (xs.isEmpty) 1.0 else xs.max / xs.min
     // idleRef floored at the clean-host band: depressed bracketing probes
-    // must tighten the verdict, never loosen it (NoiseSampler.CleanHostFloor)
-    val loFlag = loNoise.flaggedVsIdle(math.max(spdLo.max, NoiseSampler.CleanHostFloor))
-    val hiFlag = hiNoise.flaggedVsIdle(math.max(spdHi.max, NoiseSampler.CleanHostFloor))
+    // must tighten the verdict, never loosen it (NoiseSampler.hostFloor)
+    val loFlag = loNoise.flaggedVsIdle(math.max(spdLo.max, hostFloor))
+    val hiFlag = hiNoise.flaggedVsIdle(math.max(spdHi.max, hostFloor))
     val contaminated = loFlag || hiFlag
 
     val thrLo = urls / loSec
@@ -189,7 +190,7 @@ object ScalingBench {
       f""""urls_per_sec_lo":$thrLo%.1f,"urls_per_sec_hi":$thrHi%.1f,""" +
       s""""inrun_noise_lo":${loNoise.json(loFlag)},"inrun_noise_hi":${hiNoise.json(hiFlag)},""" +
       f""""probe_spread_lo":${spread(spdLo.toSeq)}%.3f,"probe_spread_hi":${spread(spdHi.toSeq)}%.3f,""" +
-      s""""contaminated":$contaminated,""" +
+      f""""host_floor_mps":${hostFloor / 1e6}%.1f,"contaminated":$contaminated,""" +
       f""""note":"value = raw wall-clock efficiency (the number of record); envelope_normalized divides out the WORSE of the measured per-thread register-spin / 16MB-copy throughput ratios between the two active-core counts (this single box downclocks/saturates shared cache+DRAM as active cores grow; adding cluster NODES adds whole memory systems instead)"}""")
   }
 }

@@ -37,26 +37,30 @@ class BloomLifecycleSpec extends SparkSpec {
   }
 
   /** Crawls 3 rounds into a new store; counts the tasks that ran the
-    * probe's filter pass (the stage zipping candidates with the bank's
-    * blobs) and the filter sets built (one mapPartitions pass in
-    * BloomBank.scala per set).
+    * probe's filter pass (those reporting a non-zero update of the probe's
+    * pass accumulator: a task that only reads the probed rows from a
+    * cache reports none, though its stage's lineage lists the probe) and
+    * the filter sets built (one mapPartitions pass in BloomBank.scala per
+    * set).
     */
   private def crawl(collapseEvery: Int): CrawlRun = {
     import spark.implicits._
     val tag = s"bloom-lifecycle-$collapseEvery"
-    val probeStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val taggedStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val probeTasks = new java.util.concurrent.atomic.AtomicInteger()
     val builds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag)) {
-          val bloomRdds = e.stageInfo.rddInfos.filter(_.callSite.contains("BloomBank.scala"))
-          if (bloomRdds.exists(_.name.startsWith("ZippedPartitionsRDD")))
-            probeStages.add(e.stageInfo.stageId)
-          bloomRdds.filter(_.callSite.startsWith("mapPartitions")).foreach(r => builds.add(r.id))
+          taggedStages.add(e.stageInfo.stageId)
+          e.stageInfo.rddInfos
+            .filter(r => r.callSite.contains("BloomBank.scala") && r.callSite.startsWith("mapPartitions"))
+            .foreach(r => builds.add(r.id))
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (probeStages.contains(e.stageId)) probeTasks.incrementAndGet()
+        if (taggedStages.contains(e.stageId) &&
+            e.taskInfo.accumulables.exists(_.name.contains(DistBloomBank.ProbePasses)))
+          probeTasks.incrementAndGet()
     }
     val store = new SnapshotStore(tempDir("graft-bloom-lifecycle"))
     listening(tag, listener) {

@@ -226,12 +226,11 @@ class CrawlParitySpec extends SparkSpec {
   }
 
   test("superseded checkpoints are freed eagerly and every persisted frame is disk-backed") {
-    // each round frees the checkpoints it supersedes at once, so what a
-    // crawl holds persisted stays flat in its round count (collapseEvery =
-    // 1: steady from round 1 on). That is safe only because no persisted
-    // frame ever drops a block it would have to recompute through a freed
-    // checkpoint: every level the crawl persists at (checkpoints, caches,
-    // the bank, the fetch outcome) must spill to disk.
+    // each round frees what it supersedes at once, so what a crawl holds
+    // persisted stays flat in its round count (collapseEvery = 1: steady
+    // from round 1 on), and every level the crawl persists at (caches,
+    // the bank, the fetch outcome) must spill to disk rather than drop a
+    // block under memory pressure.
     import spark.implicits._
     val sc = spark.sparkContext
     val tag = "checkpoint-policy"
@@ -259,13 +258,77 @@ class CrawlParitySpec extends SparkSpec {
     }
     assert(held(3).size <= held(1).size,
       s"persisted RDDs after 4 rounds: ${held(3).size}, after 2: ${held(1).size}")
-    // the seen part's cache and filter set, and the host-state checkpoint
-    held.drop(1).foreach(h => assert(h.size <= 3, s"${h.size} persisted RDDs held between rounds"))
+    // the seen part's cache and its filter set: nothing else crosses rounds
+    held.drop(1).foreach(h => assert(h.size <= 2, s"${h.size} persisted RDDs held between rounds"))
     held.flatten.foreach { case (id, l) => assert(l.useDisk, s"RDD $id persisted at $l") }
     val persistedLevels = levels.asScala.filter(_.isValid).toSet
     persistedLevels.foreach(l => assert(l.useDisk, s"a crawl stage read an RDD persisted at $l"))
     assert(persistedLevels.exists(l => l.useDisk && !l.useMemory),
       "test vacuous: the DISK_ONLY fetch outcome was never read")
+  }
+
+  for (ce <- Seq(1, 8))
+    test(s"a crawl that loses every persisted block between rounds still matches the oracle (collapseEvery = $ce)") {
+      // what a lost executor does to the blocks a crawl holds between
+      // rounds: nothing held may be a block the crawl cannot recompute
+      import spark.implicits._
+      val sc = spark.sparkContext
+      val cfg = config.copy(maxRounds = 3, collapseEvery = ce)
+      val seeds3 = Fixtures.seeds(200)
+      val dir = tempDir("graft-lost-blocks")
+      val before = sc.getPersistentRDDs.keySet
+      val crawler = new Crawler(spark, cfg, dir)
+      var cands = crawler.seedCandidates(spark.createDataset(seeds3))
+      (0 until 3).foreach { round =>
+        crawler.runRound(round, cands)
+        val held = sc.getPersistentRDDs -- before
+        assert(held.nonEmpty, s"test vacuous: the crawl held nothing after round $round")
+        held.values.foreach(_.unpersist(blocking = true))
+        cands = crawler.candidatesFromStore(round + 1)
+      }
+      val store = new graft.snapshot.SnapshotStore(dir)
+      val got = store.read(spark, "crawl_log").get.orderBy("seq").as[CrawlLogEntry].collect().toVector
+      assert(got == SequentialOracle.run(seeds3, cfg).crawlLog.sortBy(_.seq))
+      // the state a round reads folds at most collapseEvery tables: a base
+      // every collapseEvery rounds, and the fold from the latest base
+      // equals the fold of every round
+      val bases = (0 until 3).map(r => store.manifestMetric(r, "state_base").get.toInt)
+      assert(bases == (0 until 3).map(r => r - r % ce))
+      val keys = Seq("host", "lane")
+      val all = store.readFoldedLatest(spark, "host_state", keys).get
+      val fromBase = store.readFoldedLatest(spark, "host_state", keys, 2, bases(2)).get
+      assert(all.exceptAll(fromBase).isEmpty && fromBase.exceptAll(all).isEmpty)
+    }
+
+  test("the bloom pre-filtered anti-join keeps parity under sort-merge joins") {
+    // broadcasts off: the bloom positives enter each chain part's
+    // sort-merge anti-join, and the negatives bypass it
+    import spark.implicits._
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val dir = tempDir("graft-parity-smj")
+    spark.listenerManager.register(listener)
+    spark.conf.set(key, "-1")
+    try new Crawler(spark, config, dir).run(spark.createDataset(seeds))
+    finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    val antiJoins = plans.asScala.flatMap(_.linesIterator).filter(_.contains("LeftAnti")).toSeq
+    assert(antiJoins.exists(_.contains("SortMergeJoin")), "test vacuous: no sort-merge anti-join ran")
+    assert(!antiJoins.exists(_.contains("BroadcastHashJoin")), "an anti-join still broadcast")
+    val store = new graft.snapshot.SnapshotStore(dir)
+    val got = store.read(spark, "crawl_log").get.orderBy("seq").as[CrawlLogEntry].collect().toVector
+    assert(got == oracle.crawlLog.sortBy(_.seq))
+    val seen = store.read(spark, "seen").get.orderBy("seq").select("canonUrl").as[String].collect().toVector
+    assert(seen == oracle.seen)
   }
 
   test("run frees every cache and checkpoint it persisted when it returns") {
