@@ -74,9 +74,9 @@ object Bench {
     val batteryNoise = batterySampler.stop()
     // guard telemetry (default-on): the session listener has been recording
     // recall-guard drop fractions for every guarded op the battery ran; the
-    // listener bus is async — wait for it to go quiet (bounded), don't
-    // guess with a fixed sleep (under load a fixed beat can drain BEFORE
-    // the last query's metrics arrive and silently understate drops)
+    // listener bus is async — wait until it has delivered every event,
+    // don't guess with a fixed sleep (under load a fixed beat can drain
+    // BEFORE the last query's metrics arrive and silently understate drops)
     graft.ops.Guard.awaitLedgerQuiescent()
     val guardRecords = graft.ops.Guard.drainDropLedgerDetailed()
     val guardDrops = guardRecords.groupBy(_.label)
@@ -128,12 +128,11 @@ object Bench {
     // settling), FLOORED at the clean-host band — when both bracketing
     // probes are themselves burst-depressed, flagging against them lets a
     // fully-noisy window self-approve (see NoiseSampler.hostFloor).
-    // local[$cpus] fully subscribes this box, so the margins are
-    // the loose full-subscription ones (see NoiseSampler.flaggedVsIdle) —
-    // clean-host self-squeeze measured: median 0.96×idle, p25 0.69×idle.
+    // local[$cpus] fully subscribes this box, so the margins are the
+    // loose full-subscription ones (see NoiseSampler.flaggedVsIdle).
     val idleRef = math.max(math.max(spinBefore, spinAfter), hostFloor)
-    val batteryFlag = batteryNoise.flaggedVsIdle(idleRef, medianFrac = 0.80, p25Frac = 0.50)
-    val crawlFlag = crawlNoise.flaggedVsIdle(idleRef, medianFrac = 0.80, p25Frac = 0.50)
+    val batteryFlag = batteryNoise.flaggedVsIdle(idleRef, cpus.toInt)
+    val crawlFlag = crawlNoise.flaggedVsIdle(idleRef, cpus.toInt)
     def jmap(m: Map[String, Double]) = m.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + f"\":$v%.4f" }.mkString("{", ",", "}")
     println(s"""{"metric":"urls_fetched_deduped_per_sec","value":$urlsPerSec,"unit":"urls/sec",""" +
@@ -144,8 +143,8 @@ object Bench {
       f""""host_floor_mps":${hostFloor / 1e6}%.1f,""" +
       s""""inrun_noise_battery":${batteryNoise.json(batteryFlag)},""" +
       s""""inrun_noise_crawl":${crawlNoise.json(crawlFlag)},""" +
-      s""""inrun_noise_crawl_attempts":[${noise1.json(noise1.flaggedVsIdle(idleRef, medianFrac = 0.80, p25Frac = 0.50))},""" +
-      s"""${noise2.json(noise2.flaggedVsIdle(idleRef, medianFrac = 0.80, p25Frac = 0.50))}],""" +
+      s""""inrun_noise_crawl_attempts":[${noise1.json(noise1.flaggedVsIdle(idleRef, cpus.toInt))},""" +
+      s"""${noise2.json(noise2.flaggedVsIdle(idleRef, cpus.toInt))}],""" +
       s""""guard_drops":${jmap(guardDrops)},""" +
       s""""guard_drops_by_query":${jmap(guardDropsByQuery)},""" +
       f""""sf":"$sfDir","cores":$cpus}""")

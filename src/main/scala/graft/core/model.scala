@@ -66,6 +66,11 @@ final case class CrawlLogEntry(
   */
 final case class HostState(host: String, lane: Int, retryCount: Int, suspended: Boolean, virtualTime: Double, drawCount: Long)
 
+object HostState {
+  /** The state of a (host, lane) never fetched before. */
+  def initial(host: String, lane: Int): HostState = HostState(host, lane, 0, false, 0.0, 0L)
+}
+
 /** Per-host robots/politeness budget (synthetic fixture; the reference has
   * per-domain delays only — rate_limiter.py:74-85 — robots.txt handling is
   * the north-rule extension).

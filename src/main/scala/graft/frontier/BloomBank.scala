@@ -23,21 +23,20 @@ import java.nio.charset.StandardCharsets
   * Filters are never merged, so sets of different sizes can share a bank.
   *
   * DISTRIBUTED LAYOUT (nothing bank-sized is ever collected or broadcast):
-  * the bank lives as an `RDD[(pid, filterBytes)]` under a
-  * `HashPartitioner(width)`, so pid i's blobs sit in partition i and never
-  * move:
+  * the bank lives as an `RDD[(pid, filterBytes)]` of `width` partitions,
+  * pid i's blobs in partition i, and never moves:
   *   - routing: urls reach their pid through a Catalyst exchange
   *     (`repartition(width, canon)` — an explicit partition count, which
   *     adaptive execution never coalesces), so they shuffle as Tungsten
   *     rows; only the filter pass itself is RDD code, because Catalyst's
   *     `might_contain` takes one constant filter, not a filter per
   *     partition;
-  *   - build: one filter per routed partition, then the blobs (at most
-  *     `width` records) move onto the bank's partitioner;
+  *   - build: one filter per routed partition, emitted in that partition,
+  *     so a blob is born where its pid's urls were routed (no RDD shuffle);
   *   - probe: `zipPartitions` probes each routed candidate partition
   *     against the same partition of the bank, which stays in place;
-  *   - union: sets share the partitioner, so a bank of several sets is a
-  *     partitioner-aware union — zero shuffle, zero CPU;
+  *   - union: the sets are zipped by partition index — zero shuffle, zero
+  *     CPU;
   *   - persistence: one parquet table of (pid, filter, width) rows per
   *     round. A serialized filter records its own bit and hash counts; the
   *     width column makes load() probe at the width the filters were BUILT
@@ -53,10 +52,9 @@ import java.nio.charset.StandardCharsets
   */
 object DistBloomBank {
 
-  /** A bank: its width plus (pid, serialized filter) rows, always
-    * partitioned by HashPartitioner(width) with pid i in partition i (Int
-    * hashCode is identity). All probes route at `width`, never at the
-    * current session config.
+  /** A bank: its width plus (pid, serialized filter) rows in `width`
+    * partitions, pid i in partition i. All probes route at `width`, never
+    * at the current session config.
     */
   final case class Bank(width: Int, rdd: RDD[(Int, Array[Byte])]) {
     /** MEMORY_AND_DISK: an evicted MEMORY_ONLY bank partition would
@@ -102,18 +100,18 @@ object DistBloomBank {
           it.foreach(r => bf.putString(r.getString(0)))
           Iterator((pid, ser(bf)))
         }
-      }
-      .partitionBy(new HashPartitioner(width)))
+      })
   }
 
-  /** The bank of several filter sets of one width — a partitioner-aware
-    * union, narrow on every set (no shuffle, no merge).
+  /** The bank of several filter sets of one width: the sets zipped by
+    * partition index, narrow on every set (no shuffle, no merge).
     */
   def union(sets: Seq[Bank]): Bank = {
-    require(sets.nonEmpty && sets.forall(_.width == sets.head.width),
-      s"filter sets must share one width: ${sets.map(_.width).mkString(",")}")
-    if (sets.size == 1) sets.head
-    else Bank(sets.head.width, sets.head.rdd.sparkContext.union(sets.map(_.rdd)))
+    require(sets.nonEmpty && sets.forall(b => b.width == sets.head.width &&
+      b.rdd.getNumPartitions == b.width), s"filter sets must share one width in as many " +
+      s"partitions: ${sets.map(b => s"${b.width}/${b.rdd.getNumPartitions}").mkString(",")}")
+    Bank(sets.head.width,
+      sets.map(_.rdd).reduce(_.zipPartitions(_, preservesPartitioning = true)(_ ++ _)))
   }
 
   /** The accumulator a probe adds 1 to per filter pass it runs (a read of

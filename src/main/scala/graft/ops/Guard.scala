@@ -84,7 +84,6 @@ object Guard {
   private val ledger =
     new java.util.concurrent.ConcurrentHashMap[String, DropRecord]()
   private val LedgerMax = 4096
-  @volatile private var ledgerLastUpdateNanos = 0L
 
   /** A guard whose metrics AQE pruned from the executed plan: its
     * bucket-count aggregation as a plan, recounted by the next drain.
@@ -162,22 +161,14 @@ object Guard {
     out.toSeq
   }
 
-  /** Wait for the async listener bus to go quiet: returns once no ledger
-    * update has arrived for `quietMs`, or after `deadlineMs` total. A
-    * battery with zero guarded queries returns after one quiet window —
-    * strictly better than a fixed sleep sized for the worst case.
+  /** Wait until the listener bus has delivered every event posted so far,
+    * so every query that has returned is in the ledger (or queued for the
+    * drain's recount), however far behind a slow listener keeps the bus.
     */
-  def awaitLedgerQuiescent(quietMs: Long = 500, deadlineMs: Long = 15000): Unit = {
-    val t0 = System.nanoTime()
-    var last = ledgerLastUpdateNanos
-    var quietSince = System.nanoTime()
-    while ((System.nanoTime() - t0) / 1e6 < deadlineMs) {
-      val cur = ledgerLastUpdateNanos
-      val now = System.nanoTime()
-      if (cur != last) { last = cur; quietSince = now }
-      else if ((now - quietSince) / 1e6 >= quietMs) return
-      Thread.sleep(50)
-    }
+  def awaitLedgerQuiescent(): Unit = {
+    import org.apache.spark.sql.SparkSession
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .foreach(s => org.apache.spark.GraftBridge.drainListeners(s.sparkContext))
   }
 
   /** graft_guard_<label>_<n> → <label> */
@@ -197,7 +188,6 @@ object Guard {
     val key = if (ledger.size() < LedgerMax || ledger.containsKey(name)) name
       else s"graft_guard_${r.label}_overflow"
     ledger.merge(key, r, (a, b) => if (b.fraction >= a.fraction) b else a)
-    ledgerLastUpdateNanos = System.nanoTime()
     if (r.droppedRows > 0L)
       log.warn(f"[${r.label}${if (tag.isEmpty) "" else s" @$tag"}] recall guard dropped " +
         f"${100.0 * r.fraction}%.1f%% of candidate rows (${r.droppedRows} of " +
@@ -242,7 +232,6 @@ object Guard {
                   "input); the next drop-ledger drain recounts them from full lineage")
                 pruned.putIfAbsent(c.name, Pruned(qe.sparkSession,
                   Aggregate(Nil, c.metrics, c.child), tagOf.getOrDefault(c.name, "")))
-                ledgerLastUpdateNanos = System.nanoTime()
               }
             }
           }

@@ -19,7 +19,8 @@ import org.apache.spark.sql.expressions.Window
 final case class Candidate(url: String, keyword: String, ord0: Long, ord1: Int)
 
 /** Frontier entry enriched with its salt lane and its (host, lane)'s
-  * checkpointed scheduler state. The politeness clock is keyed by
+  * committed scheduler state (None before the (host, lane) was first
+  * fetched). The politeness clock is keyed by
   * (host, lane) — NOT host alone — so outcomes are independent of how
   * lanes co-locate into partitions (determinism across parallelism
   * levels); each lane paces at delay×saltFactor to preserve the per-host
@@ -27,7 +28,7 @@ final case class Candidate(url: String, keyword: String, ord0: Long, ord1: Int)
   */
 final case class FrontierWithState(
     round: Int, seq: Long, url: String, canonUrl: String, host: String, keyword: String,
-    lane: Int, initRetry: Int, initSusp: Boolean, initVt: Double, initDraw: Long)
+    lane: Int, state: Option[HostState])
 
 /** Output of the fused fetch+parse stage for one frontier entry. */
 final case class FetchParseRow(
@@ -46,8 +47,7 @@ final case class FetchParseRow(
     like_count: Int,
     spans: Seq[Span],
     outlinks: Seq[String],
-    comments: Seq[ParsedComment],
-    partitionId: Int)
+    comments: Seq[ParsedComment])
 
 /** The Spark-native crawl engine (BASELINE.json north rule): URL frontier +
   * fetch scheduler over snapshot-versioned span-document tables.
@@ -140,10 +140,10 @@ final class Crawler(
   // previous rounds committed, the same way a resume does: its candidates
   // are the outlinks of the last committed round's docs
   // (candidatesFromStore), its host scheduler state is the committed
-  // host_state fold (committedState), and every seen-chain part is read
-  // from the committed `seen` table (seenPart). Only the seen chain's
-  // caches, which recompute from that read, and the next sequence id are
-  // held between rounds.
+  // host_state fold (committedState), its first sequence id is the
+  // previous manifest's `next_seq`, and every seen-chain part is read from
+  // the committed `seen` table (seenPart). Only the seen chain's caches,
+  // which recompute from that read, are held between rounds.
   //
   // The seen set is a CHAIN of parts, each persisted pre-partitioned on
   // `canon`, so the per-round exact anti-join re-uses the cached
@@ -158,7 +158,6 @@ final class Crawler(
     def free(): Unit = { canon.unpersist(); bloom.unpersist() }
   }
   private var seenParts: Vector[SeenPart] = Vector.empty
-  private var nextSeqAcc: Long = 0L
   // observed fetched-row counter, bumped by the fetch stage's executors;
   // commitRound sizes the docs table's write fan-out from the ROUND DELTA
   // of this instead of assuming every frontier row fetched (sizedForWrite
@@ -209,21 +208,17 @@ final class Crawler(
     store.readFoldedLatest(spark, "host_state", Seq("host", "lane"), last, stateBase(last))
       .getOrElse(spark.emptyDataset[HostState].toDF())
 
-  /** Total URLs scheduled (= fetched+deduped) so far in this run. */
-  def totalScheduled: Long = nextSeqAcc
+  /** Total URLs scheduled (= fetched+deduped) into the store so far. */
+  def totalScheduled: Long = store.latestRound().flatMap(store.manifestMetric(_, "next_seq")).getOrElse(0L)
 
   /** Entry: run all rounds (resuming from the last committed round). Frees
     * every cache it holds when it returns.
     */
   def run(seeds: Dataset[SeedRecord]): Unit = try {
     val resumeFrom = store.latestRound().map(_ + 1).getOrElse(0)
-    if (resumeFrom > 0) { // resume: the seen chain and the sequence id
-      val last = resumeFrom - 1
-      // the saved banks are never read back: the seen chain resumes as one
-      // base part whose filter set is built at the current config
-      seenParts = seenPart(0, last, baseFpp).toVector
-      nextSeqAcc = store.manifestMetric(last, "next_seq").getOrElse(0L)
-    }
+    // resume: the saved banks are never read back; the seen chain resumes
+    // as one base part whose filter set is built at the current config
+    if (resumeFrom > 0) seenParts = seenPart(0, resumeFrom - 1, baseFpp).toVector
     var round = resumeFrom
     var candidates = if (round == 0) seedCandidates(seeds) else candidatesFromStore(round)
     while (round < config.maxRounds && (round == 0 || !candidates.isEmpty)) {
@@ -287,8 +282,8 @@ final class Crawler(
     val (deduped, probed) = antiJoinSeen(roundUnique)
     val fresh = deduped.persist()
 
-    // global sequence assignment, continuing from the in-flight counter
-    val seqStart = nextSeqAcc
+    // global sequence assignment, continuing from the previous round's commit
+    val seqStart = if (round == 0) 0L else store.manifestMetric(round - 1, "next_seq").getOrElse(0L)
     val (sequencedRaw, frontierCount, seqCache) =
       Sequencer.addSeq(fresh, Seq(col("ord0"), col("ord1")), "seq", seqStart)
     fresh.unpersist() // seqCache is materialized by addSeq's count pass
@@ -354,7 +349,6 @@ final class Crawler(
     // back, so a round whose bank write never ran resumes the same.
     // Distributed parquet write of (pid, filter) rows — nothing collected.
     DistBloomBank.save(spark, bank, store.bloomPath(round))
-    nextSeqAcc = seqStart + frontierCount
   }
 
   /** Bloom pre-filter (distributed partition-aligned probe — only the
@@ -399,19 +393,17 @@ final class Crawler(
 
     // the per-(host, lane) scheduler state committed through the previous
     // round (a join, not a broadcast global map: the state table scales
-    // with #hosts; the planner broadcasts its parquet read while it is small)
+    // with #hosts; the planner broadcasts its parquet read while it is
+    // small), rebuilt into the row it is stored as after the exchange, so
+    // the exchange does not carry host and lane twice
     val priorState = committedState(round - 1)
-      .select($"host", $"lane", $"retryCount".as("initRetry"), $"suspended".as("initSusp"),
-        $"virtualTime".as("initVt"), $"drawCount".as("initDraw"))
 
     val parted = frontier.toDF()
       .withColumn("lane", Crawler.laneCol($"canonUrl", config.saltFactor))
       .join(priorState, Seq("host", "lane"), "left")
-      .na.fill(Map("initRetry" -> 0, "initVt" -> 0.0, "initDraw" -> 0L)).na.fill(false, Seq("initSusp"))
       .repartition(p, $"host", $"lane")
       .sortWithinPartitions($"seq")
-      .select($"round", $"seq", $"url", $"canonUrl", $"host", $"keyword", $"lane",
-        $"initRetry", $"initSusp", $"initVt", $"initDraw")
+      .withColumn("state", when($"retryCount".isNotNull, struct(priorState.columns.map(col): _*)))
       .as[FrontierWithState]
 
     val rb = robotsB; val cb = cfgB; val f = fetcher; val r = round
@@ -420,10 +412,9 @@ final class Crawler(
       val cfg = cb.value
       val robots = rb.value
       val clocks = scala.collection.mutable.LinkedHashMap.empty[(String, Int), HostClock]
-      val pid = org.apache.spark.TaskContext.getPartitionId()
       val mapped = it.map { e =>
         val clock = clocks.getOrElseUpdate((e.host, e.lane), HostClock.restore(cfg, robots,
-          HostState(e.host, e.lane, e.initRetry, e.initSusp, e.initVt, e.initDraw)))
+          e.state.getOrElse(HostState.initial(e.host, e.lane))))
         val (status, attempts, html) = clock.fetchOne(f, e.canonUrl)
         val row = if (status == "fetched") {
           PageParser.parse(html, e.canonUrl, cfg.maxCommentPages) match {
@@ -433,14 +424,14 @@ final class Crawler(
                 attempts, parsed.title, parsed.author,
                 parsed.createdAt.map(java.sql.Timestamp.valueOf).orNull,
                 parsed.viewCount, parsed.likeCount, parsed.spans, parsed.outlinks,
-                parsed.comments, pid)
+                parsed.comments)
             case None =>
               FetchParseRow(r, e.seq, e.url, e.canonUrl, e.host, e.keyword, "parse_failed",
-                attempts, "", "", null, 0, 0, Seq.empty, Seq.empty, Seq.empty, pid)
+                attempts, "", "", null, 0, 0, Seq.empty, Seq.empty, Seq.empty)
           }
         } else {
           FetchParseRow(r, e.seq, e.url, e.canonUrl, e.host, e.keyword, status, attempts,
-            "", "", null, 0, 0, Seq.empty, Seq.empty, Seq.empty, pid)
+            "", "", null, 0, 0, Seq.empty, Seq.empty, Seq.empty)
         }
         (row, null.asInstanceOf[HostState])
       }
@@ -489,7 +480,9 @@ final class Crawler(
       $"host", $"status", $"attempts"), frontierCount, rowsPerFile = 500000L)
     val seen = sizedForWrite(frontier.select($"round", $"seq", $"canonUrl", $"host"),
       frontierCount, rowsPerFile = 500000L)
-    val metrics = results.groupBy($"partitionId").agg(
+    // results is a narrow read of the fetch outcome's cache, whose
+    // partitions are the fetch partitions
+    val metrics = results.groupBy(spark_partition_id().as("partitionId")).agg(
       lit(round).as("round"),
       countDistinct($"host").as("hosts"),
       sum(when($"status" === "fetched", 1L).otherwise(0L)).as("fetched"),

@@ -91,7 +91,7 @@ object Streaming {
         (key: (String, Int), rows: Iterator[(FrontierEntry, Int)], state: GroupState[HostState]) => {
           val (host, lane) = key
           val clock = HostClock.restore(config, robots,
-            state.getOption.getOrElse(HostState(host, lane, 0, false, 0.0, 0L)))
+            state.getOption.getOrElse(HostState.initial(host, lane)))
           val out = rows.map(_._1).toSeq.sortBy(_.seq).map { e =>
             val (status, attempts, _) = clock.fetchOne(fetcher, e.canonUrl)
             CrawlLogEntry(e.round, e.seq, e.url, e.canonUrl, e.host, status, attempts)

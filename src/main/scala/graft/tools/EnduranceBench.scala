@@ -95,7 +95,7 @@ object EnduranceBench {
       f""""urls_per_sec":${crawler.totalScheduled / totalSec}%.0f,""" +
       s""""collapse_every":$collapseEvery,"cores":$cores,"seeds":$nSeeds,""" +
       f""""host_floor_mps":${hostFloor / 1e6}%.1f,""" +
-      s""""inrun_noise":${noise.json(noise.flaggedVsIdle(hostFloor))},""" +
+      s""""inrun_noise":${noise.json(noise.flaggedVsIdle(hostFloor, cores.toInt))},""" +
       s""""per_round":[${recs.mkString(",")}]}""")
     spark.stop()
   }

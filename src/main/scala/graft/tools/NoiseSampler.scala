@@ -113,21 +113,23 @@ object NoiseSampler {
     * transient squeezes — GC pauses, stage-boundary scheduling bursts —
     * which crater min/p25 on a perfectly clean host.
     *
-    * `flaggedVsIdle(idleRef)`: median fell >`medianFrac` below the
+    * `flaggedVsIdle(idleRef, threads)`: median fell below a margin of the
     * bracketing single-thread idle probe (a burst covering most of the
-    * run — the observed co-tenant bursts run ~10 min), or p25 fell below
-    * `p25Frac` of idle (a burst covering ≥¼ of it). Callers pick margins
-    * for their subscription level: runs with spare vCPUs (ScalingBench's
-    * local[6]/local[24] on 32) can use tight margins; a fully-subscribed
-    * local[32] run needs looser ones for the self-squeeze on p25.
+    * run — the observed co-tenant bursts run ~10 min), or p25 below one (a
+    * burst covering ≥¼ of it). A run of `threads` busy threads that leaves
+    * vCPUs spare gets tight margins (0.85/0.70); one that busies every vCPU
+    * gets the loose ones its self-squeeze needs (0.80/0.50: a clean
+    * local[32] run read median 0.96×idle, p25 0.69×idle).
     */
   final case class Report(n: Int, min: Double, p25: Double, median: Double) {
     def minMps: Double = min / 1e6
     def medianMps: Double = median / 1e6
-    def flaggedVsIdle(idleRef: Double, medianFrac: Double = 0.85,
-        p25Frac: Double = 0.70): Boolean =
+    def flaggedVsIdle(idleRef: Double, threads: Int): Boolean = {
+      val (medianFrac, p25Frac) =
+        if (threads >= Runtime.getRuntime.availableProcessors) (0.80, 0.50) else (0.85, 0.70)
       n >= 4 && idleRef > 0 &&
         (median < medianFrac * idleRef || p25 < p25Frac * idleRef)
+    }
     def json(flagged: Boolean): String =
       if (n == 0) """{"n":0}"""
       else f"""{"n":$n,"min_mps":$minMps%.1f,"p25_mps":${p25 / 1e6}%.1f,""" +

@@ -119,8 +119,8 @@ object ScalingBench {
       println(f"""[scaling-rep $r] lo=$ls%.2fs hi=$hs%.2fs urls=$lu """ +
         f"""spin_lo=${spdLo.last / 1e6}%.1fM/s spin_hi=${spdHi.last / 1e6}%.1fM/s """ +
         f"""mem_lo=${memLo.last}%.0fMB/s mem_hi=${memHi.last}%.0fMB/s """ +
-        s"""inrun_lo=${ln.json(ln.flaggedVsIdle(spdLo.last))} """ +
-        s"""inrun_hi=${hn.json(hn.flaggedVsIdle(spdHi.last))}""")
+        s"""inrun_lo=${ln.json(ln.flaggedVsIdle(spdLo.last, lo))} """ +
+        s"""inrun_hi=${hn.json(hn.flaggedVsIdle(spdHi.last, hi))}""")
       Seq((lo, ls, lu, ln), (hi, hs, hu, hn))
     }
     val loSec = runs.filter(_._1 == lo).map(_._2).min
@@ -141,8 +141,8 @@ object ScalingBench {
     def spread(xs: Seq[Double]): Double = if (xs.isEmpty) 1.0 else xs.max / xs.min
     // idleRef floored at the clean-host band: depressed bracketing probes
     // must tighten the verdict, never loosen it (NoiseSampler.hostFloor)
-    val loFlag = loNoise.flaggedVsIdle(math.max(spdLo.max, hostFloor))
-    val hiFlag = hiNoise.flaggedVsIdle(math.max(spdHi.max, hostFloor))
+    val loFlag = loNoise.flaggedVsIdle(math.max(spdLo.max, hostFloor), lo)
+    val hiFlag = hiNoise.flaggedVsIdle(math.max(spdHi.max, hostFloor), hi)
     val contaminated = loFlag || hiFlag
 
     val thrLo = urls / loSec

@@ -1,7 +1,7 @@
 package org.apache.spark
 
-/** Test access to Spark internals that have no public equivalent. */
-object GraftTestBridge {
+/** Access to Spark internals that have no public equivalent. */
+object GraftBridge {
   /** Blocks until every posted listener event has been delivered. */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

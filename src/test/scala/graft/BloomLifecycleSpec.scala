@@ -8,10 +8,12 @@ import graft.snapshot.SnapshotStore
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
 
+import scala.jdk.CollectionConverters._
+
 /** The bloom tier's lifecycle: each seen-chain part carries one filter set
   * sized to its keys, the bank is the union of the parts' sets, each
   * round runs the probe's filter pass once, and urls reach their filters
-  * through Catalyst exchanges, not RDD shuffles.
+  * through Catalyst exchanges: the crawl runs no RDD shuffle.
   */
 class BloomLifecycleSpec extends SparkSpec {
   import BloomLifecycleSpec.CrawlRun
@@ -31,7 +33,7 @@ class BloomLifecycleSpec extends SparkSpec {
     try body
     finally {
       sc.setLocalProperty("graft.test.tag", null)
-      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      org.apache.spark.GraftBridge.drainListeners(sc)
       sc.removeSparkListener(listener)
     }
   }
@@ -39,9 +41,10 @@ class BloomLifecycleSpec extends SparkSpec {
   /** Crawls 3 rounds into a new store; counts the tasks that ran the
     * probe's filter pass (those reporting a non-zero update of the probe's
     * pass accumulator: a task that only reads the probed rows from a
-    * cache reports none, though its stage's lineage lists the probe) and
-    * the filter sets built (one mapPartitions pass in BloomBank.scala per
-    * set).
+    * cache reports none, though its stage's lineage lists the probe), the
+    * filter sets built (one mapPartitions pass in BloomBank.scala per set)
+    * and the shuffles its stages read: the call sites of RDD-API ones
+    * (`ShuffledRDD`) and the number of Catalyst ones (`ShuffledRowRDD`).
     */
   private def crawl(collapseEvery: Int): CrawlRun = {
     import spark.implicits._
@@ -49,6 +52,8 @@ class BloomLifecycleSpec extends SparkSpec {
     val taggedStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val probeTasks = new java.util.concurrent.atomic.AtomicInteger()
     val builds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val rddShuffles = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val rowShuffles = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag)) {
@@ -56,6 +61,8 @@ class BloomLifecycleSpec extends SparkSpec {
           e.stageInfo.rddInfos
             .filter(r => r.callSite.contains("BloomBank.scala") && r.callSite.startsWith("mapPartitions"))
             .foreach(r => builds.add(r.id))
+          e.stageInfo.rddInfos.filter(_.name == "ShuffledRDD").foreach(r => rddShuffles.add(r.callSite))
+          e.stageInfo.rddInfos.filter(_.name == "ShuffledRowRDD").foreach(r => rowShuffles.add(r.id))
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (taggedStages.contains(e.stageId) &&
@@ -68,7 +75,7 @@ class BloomLifecycleSpec extends SparkSpec {
         .run(spark.createDataset(seeds))
     }
     assert(store.latestRound().contains(2), "test vacuous: the crawl must commit 3 rounds")
-    CrawlRun(store, probeTasks.get, builds.size)
+    CrawlRun(store, probeTasks.get, builds.size, rddShuffles.asScala.toSeq, rowShuffles.size)
   }
 
   lazy val everyRound: CrawlRun = crawl(collapseEvery = 1)
@@ -78,6 +85,15 @@ class BloomLifecycleSpec extends SparkSpec {
     // rounds 1 and 2 are probed (round 0 has no history)
     assert(default.probeTasks == 2 * config.seenPartitions)
     assert(everyRound.probeTasks == 2 * config.seenPartitions)
+  }
+
+  test("a 3-round crawl runs no RDD-API shuffle: every exchange is Catalyst's") {
+    // an RDD's call site names the first frame outside Spark: the graft
+    // line that asked for the shuffle
+    for (run <- Seq(everyRound, default)) {
+      assert(run.rowShuffles > 0, "test vacuous: no Catalyst exchange was read")
+      assert(run.rddShuffles.isEmpty, s"RDD-API shuffles at ${run.rddShuffles.mkString(", ")}")
+    }
   }
 
   test("a round's seen rows get one filter set: a new part's or the collapse's, never both") {
@@ -110,53 +126,59 @@ class BloomLifecycleSpec extends SparkSpec {
       assert(bitsPerKey <= 1.5 * rule, f"$bitsPerKey%.1f bits/key vs sizing rule $rule%.1f")
     }
 
-  /** Records written by RDD-API shuffles created in BloomBank.scala while
-    * `body` runs: the map stages feeding a `ShuffledRDD` (Catalyst
-    * exchanges read through `ShuffledRowRDD`s) whose call site is there.
+  /** Records written while `body` runs by the map stages of RDD-API
+    * shuffles created in BloomBank.scala (feeding a `ShuffledRDD`) and of
+    * Catalyst exchanges (feeding a `ShuffledRowRDD`), in that order.
     */
-  private def bloomRddShuffleRecords(tag: String)(body: => Unit): Long = {
-    val mapSides = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  private def shuffleRecords(tag: String)(body: => Unit): (Long, Long) = {
+    val rddMapSides = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val rowMapSides = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val written = new java.util.concurrent.ConcurrentHashMap[Int, (Int, Long)]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("graft.test.tag") == tag))
-          e.stageInfos.flatMap(_.rddInfos)
-            .filter(r => r.name == "ShuffledRDD" && r.callSite.contains("BloomBank.scala"))
-            .foreach(_.parentIds.foreach(mapSides.add))
+          e.stageInfos.flatMap(_.rddInfos).foreach { r =>
+            if (r.name == "ShuffledRDD" && r.callSite.contains("BloomBank.scala"))
+              r.parentIds.foreach(rddMapSides.add)
+            if (r.name == "ShuffledRowRDD") r.parentIds.foreach(rowMapSides.add)
+          }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         // rddInfos.head is the stage's own (last) RDD: what a map stage writes
         written.put(e.stageInfo.stageId, (e.stageInfo.rddInfos.head.id,
           e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten))
     }
     listening(tag, listener)(body)
-    var total = 0L
-    written.forEach((_, v) => if (mapSides.contains(v._1)) total += v._2)
-    total
+    def total(mapSides: java.util.Set[Int]): Long =
+      written.values.asScala.collect { case (id, n) if mapSides.contains(id) => n }.sum
+    (total(rddMapSides), total(rowMapSides))
   }
 
-  test("urls reach their filters through Catalyst exchanges: RDD shuffles move only filter blobs") {
+  test("urls reach their filters through Catalyst exchanges: the build and the probe run no RDD shuffle") {
     import spark.implicits._
     val width = config.seenPartitions
     val urls = (0 until 4000).map(i => s"https://route.example.org/post/$i").toDF("canon")
     var bank: DistBloomBank.Bank = null
-    val built = bloomRddShuffleRecords("bloom-routing-build") {
+    val (builtRdd, builtRows) = shuffleRecords("bloom-routing-build") {
       bank = DistBloomBank.buildRound(urls, "canon", width, 100000L, 0.01).persist()
       bank.count()
     }
-    assert(built > 0, "test vacuous: the build moved no filter blob")
-    assert(built <= width, s"the build's RDD shuffles wrote $built records for width $width")
+    assert(builtRows == 4000L, s"test vacuous: the build's exchanges wrote $builtRows of 4000 urls")
+    assert(builtRdd == 0L, s"the build's RDD shuffles wrote $builtRdd records")
 
     val cands = (0 until 3000).map(i => s"https://route.example.org/post/${2 * i}").toDF("canon")
     var hits = 0L
-    val probed = bloomRddShuffleRecords("bloom-routing-probe") {
+    val (probedRdd, probedRows) = shuffleRecords("bloom-routing-probe") {
       hits = DistBloomBank.probe(cands, "canon", bank, "maybe").filter($"maybe").count()
     }
-    assert(probed == 0L, s"the probe's RDD shuffles wrote $probed records")
+    // (the count's exchange adds a partial count per partition)
+    assert(probedRows >= 3000L, s"test vacuous: the probe's exchanges wrote $probedRows of 3000 urls")
+    assert(probedRdd == 0L, s"the probe's RDD shuffles wrote $probedRdd records")
     assert(hits >= 2000, s"bloom false negatives: only $hits of 2000 inserted candidates flagged")
     bank.unpersist()
   }
 }
 
 object BloomLifecycleSpec {
-  final case class CrawlRun(store: SnapshotStore, probeTasks: Int, filterSetBuilds: Int)
+  final case class CrawlRun(store: SnapshotStore, probeTasks: Int, filterSetBuilds: Int,
+      rddShuffles: Seq[String], rowShuffles: Int)
 }

@@ -253,7 +253,7 @@ class CrawlParitySpec extends SparkSpec {
       (sc.getPersistentRDDs -- before).map { case (id, r) => id -> r.getStorageLevel }
     } finally {
       sc.setLocalProperty("graft.test.tag", null)
-      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      org.apache.spark.GraftBridge.drainListeners(sc)
       sc.removeSparkListener(listener)
     }
     assert(held(3).size <= held(1).size,
@@ -318,7 +318,7 @@ class CrawlParitySpec extends SparkSpec {
     try new Crawler(spark, config, dir).run(spark.createDataset(seeds))
     finally {
       prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-      org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+      org.apache.spark.GraftBridge.drainListeners(spark.sparkContext)
       spark.listenerManager.unregister(listener)
     }
     val antiJoins = plans.asScala.flatMap(_.linesIterator).filter(_.contains("LeftAnti")).toSeq
@@ -423,5 +423,16 @@ class CrawlParitySpec extends SparkSpec {
     assert(m.count() > 0)
     val fetched = m.agg(sum("fetched")).head().getLong(0)
     assert(fetched == oracle.crawlLog.count(_.status == "fetched"))
+    // one row per fetch partition: Spark's partition id of the fetch outcome
+    val width = math.max(config.seenPartitions, spark.sparkContext.defaultParallelism)
+    for (round <- 0 to 1) {
+      val rm = spark.read.parquet(s"$storeRoot/data/metrics/round=$round")
+      val ids = rm.select("partitionId").collect().map(_.getInt(0)).toSeq
+      assert(ids.nonEmpty && ids.distinct.size == ids.size, s"round $round: $ids")
+      assert(ids.forall(i => i >= 0 && i < width), s"round $round: $ids vs width $width")
+      val roundFetched = rm.agg(sum("fetched")).head().getLong(0)
+      assert(roundFetched == spark.read.parquet(s"$storeRoot/data/docs/round=$round").count(),
+        s"round $round")
+    }
   }
 }

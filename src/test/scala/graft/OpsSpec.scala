@@ -390,7 +390,7 @@ class OpsSpec extends SparkSpec {
   def ledgerOf[A](body: => A): (A, Seq[Guard.DropRecord]) = {
     val tag = s"ops-ledger-${ledgerTags.incrementAndGet()}"
     val out = Guard.withQueryTag(tag)(body)
-    org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+    org.apache.spark.GraftBridge.drainListeners(spark.sparkContext)
     (out, Guard.drainDropLedgerDetailed().filter(_.queryTag == tag))
   }
 
@@ -483,7 +483,7 @@ class OpsSpec extends SparkSpec {
     try {
       val (_, recs) = ledgerOf(Dedup.simhashDupPairs(skewedDocs, maxHamming = 3,
         maxBucket = 100).count())
-      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      org.apache.spark.GraftBridge.drainListeners(sc)
       assert(foreignJobs.get == 0, "a job ran off the calling thread")
       assert(recs.map(_.droppedRows) == Seq(4000L))
     } finally {
@@ -697,6 +697,38 @@ class OpsSpec extends SparkSpec {
     Guard.awaitLedgerQuiescent()
     val agg = Guard.drainDropLedger()
     assert(agg.get("ngramJaccardPairs").exists(_ > 0.0), s"got $agg")
+  }
+
+  test("guard ledger: awaitLedgerQuiescent waits out a listener bus a slow listener holds up") {
+    // the listener sleeps on every job end, so the query's SQL-end event,
+    // which carries its guard metrics, waits in the queue behind them.
+    // Without adaptive execution the query runs one job, not one per
+    // exchange: the queue stays shorter than the bus's own wait bound.
+    val sc = spark.sparkContext
+    val aqe = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.getOption(aqe)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        jobs.incrementAndGet()
+        Thread.sleep(1000)
+      }
+    }
+    org.apache.spark.GraftBridge.drainListeners(sc)
+    sc.addSparkListener(slow)
+    spark.conf.set(aqe, "false")
+    try {
+      Guard.withQueryTag("slow-bus") {
+        Dedup.simhashDupPairs(docs.limit(30).select($"doc_id", $"text"), maxHamming = 0).count()
+      }
+      Guard.awaitLedgerQuiescent()
+      val recs = Guard.drainDropLedgerDetailed().filter(_.queryTag == "slow-bus")
+      assert(jobs.get > 0, "test vacuous: the slow listener saw no job end")
+      assert(recs.size == 1 && recs.head.totalRows > 0, s"$recs after ${jobs.get} jobs")
+    } finally {
+      prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+      sc.removeSparkListener(slow)
+    }
   }
 
   test("simhash128: lo limb equals the 64-bit signature; auto path keeps recall past the 64-bit ceiling") {

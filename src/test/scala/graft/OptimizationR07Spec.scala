@@ -82,12 +82,12 @@ class OptimizationR07Spec extends SparkSpec {
     val dir = tempDir("graft-widen") + "/one"
     spark.range(1000).toDF("id").coalesce(1).write.parquet(dir)
     val scan = spark.read.parquet(dir)
-    org.apache.spark.GraftTestBridge.drainListeners(sc)
+    org.apache.spark.GraftBridge.drainListeners(sc)
     sc.addSparkListener(listener)
     val (wGrouped, wScan) =
       try (Par.widen(grouped), Par.widen(scan))
       finally {
-        org.apache.spark.GraftTestBridge.drainListeners(sc)
+        org.apache.spark.GraftBridge.drainListeners(sc)
         sc.removeSparkListener(listener)
       }
     assert(jobs.get == 0, s"widen launched ${jobs.get} jobs")

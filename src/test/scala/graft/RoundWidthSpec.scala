@@ -54,7 +54,7 @@ class RoundWidthSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try new Crawler(spark, config, store.root, StageRecordingFetcher).run(spark.createDataset(seeds))
     finally {
       sc.setLocalProperty("graft.test.tag", null)
-      org.apache.spark.GraftTestBridge.drainListeners(sc)
+      org.apache.spark.GraftBridge.drainListeners(sc)
       sc.removeSparkListener(listener)
     }
     assert(store.latestRound().contains(1), "test vacuous: the crawl must commit 2 rounds")
@@ -116,7 +116,7 @@ class RoundWidthSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       new Crawler(spark, cfg, dir).run(crawlSeeds)
       new Crawler(spark, cfg.copy(maxRounds = 3), dir).run(crawlSeeds)
     } finally {
-      org.apache.spark.GraftTestBridge.drainListeners(spark.sparkContext)
+      org.apache.spark.GraftBridge.drainListeners(spark.sparkContext)
       spark.listenerManager.unregister(listener)
       prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
