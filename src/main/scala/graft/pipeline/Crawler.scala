@@ -77,15 +77,16 @@ final case class FetchParseRow(
   *     → snapshot commit: docs ∪ crawl_log ∪ seen ∪ metrics ∪ host_state
   *       (a delta, or every collapseEvery rounds a full base), atomic
   *       manifest (resumable; partial rounds invisible)
-  *     → the round's committed seen rows read back into the seen chain and
-  *       its bloom bank (the same read a resume does), bank saved.
+  *     → the seen chain brought to the one its manifests name (the same
+  *       path a resume takes), its bloom bank saved.
   *
   * Scale design notes (100 TB / 10^10-URL frontier):
   *   - the only global ordering is the seq assignment, done without a
   *     global sort collapse (range shuffle + tiny offset map);
-  *   - dedup joins shuffle on canon-url hash; the bloom pre-filter removes
-  *     the (vastly dominant at steady state) already-seen candidates before
-  *     the join, so the anti-join's build side is only the maybe-seen set;
+  *   - dedup joins shuffle on canon-url hash; only bloom positives (every
+  *     already-seen candidate plus the false positives) go through the
+  *     exact anti-join, and definitely-new candidates (bloom negatives)
+  *     skip it;
   *   - fetch partitions are keyed by host (optionally salted for hot hosts,
   *     each lane pacing at delay×saltFactor to preserve the per-host
   *     budget), so per-host politeness state never crosses executors;
@@ -141,54 +142,68 @@ final class Crawler(
   // are the outlinks of the last committed round's docs
   // (candidatesFromStore), its host scheduler state is the committed
   // host_state fold (committedState), its first sequence id is the
-  // previous manifest's `next_seq`, and every seen-chain part is read from
-  // the committed `seen` table (seenPart). Only the seen chain's caches,
-  // which recompute from that read, are held between rounds.
+  // previous manifest's `next_seq`, and its seen chain is the one the
+  // manifests name (syncSeen). Only the seen chain's caches, which
+  // recompute from the store, are held between rounds.
   //
   // The seen set is a CHAIN of parts, each persisted pre-partitioned on
   // `canon`, so the per-round exact anti-join re-uses the cached
   // partitioning instead of re-shuffling the whole accumulated history
-  // every round. A round's rows start a new round part, or, once the chain
-  // holds `collapseEvery` parts, the chain collapses into one base part
-  // read from every committed round (plan depth and the per-round join
-  // fan-in stay O(1)). Each part carries one bloom filter set built from
-  // it; the bloom bank is the union of the parts' sets (see DistBloomBank —
-  // nothing bank-sized ever lands on the driver or gets broadcast).
-  private case class SeenPart(canon: DataFrame, bloom: DistBloomBank.Bank) {
+  // every round. The chain follows host_state's base: one base part for
+  // the rounds up to the latest state base plus one round part per later
+  // round, so it collapses into a new base part every collapseEvery rounds
+  // (plan depth and the per-round join fan-in stay O(1)). Each part
+  // carries one bloom filter set built from it; the bloom bank is the
+  // union of the parts' sets (see DistBloomBank — nothing bank-sized ever
+  // lands on the driver or gets broadcast).
+  private case class SeenPart(rounds: (Int, Int), canon: DataFrame, bloom: DistBloomBank.Bank) {
     def free(): Unit = { canon.unpersist(); bloom.unpersist() }
   }
   private var seenParts: Vector[SeenPart] = Vector.empty
-  // observed fetched-row counter, bumped by the fetch stage's executors;
-  // commitRound sizes the docs table's write fan-out from the ROUND DELTA
-  // of this instead of assuming every frontier row fetched (sizedForWrite
-  // otherwise overshoots file count when failure rates are high). An
-  // estimate only: a recomputed outcome partition double-counts — fine
-  // for file sizing, never used for correctness.
-  private val fetchedAcc = spark.sparkContext.longAccumulator("graft.fetched.rows")
-  private var fetchedPrev: Long = 0L
   private val collapseEvery = config.collapseEvery
 
+  // The bank's FPP budget, split by load: a bank holds one base part (the
+  // part that starts at round 0, which holds most keys) plus at most
+  // collapseEvery − 1 round parts. Half the budget to the base and the
+  // other half shared by the round parts keeps the union at or below
+  // bloomFpp.
+  private val baseFpp = config.bloomFpp / 2
+  private val roundFpp = config.bloomFpp / (2 * math.max(1, collapseEvery))
+
   /** The chain part of the committed `seen` rows of rounds [from, to] and
-    * its filter set, built at `fpp`. The set's count is the part's first
-    * scan: it materializes the part's cache too.
+    * its filter set, built at the base's FPP if it starts at round 0, else
+    * at a round part's. The set's count is the part's first scan: it
+    * materializes the part's cache too.
     */
-  private def seenPart(from: Int, to: Int, fpp: Double): Option[SeenPart] =
+  private def seenPart(from: Int, to: Int): Option[SeenPart] =
     store.read(spark, "seen", minRound = from, maxRound = to).map { seen =>
       val canon = seen.select($"canonUrl".as("canon"))
         .repartition(config.seenPartitions, $"canon").persist()
       val bloom = DistBloomBank.buildRound(canon, "canon", config.seenPartitions,
-        config.bloomExpectedPerPartition, fpp).persist()
+        config.bloomExpectedPerPartition, if (from == 0) baseFpp else roundFpp).persist()
       bloom.count()
-      SeenPart(canon, bloom)
+      SeenPart((from, to), canon, bloom)
     }
 
-  // The bank's FPP budget, split by load: a bank holds at most
-  // collapseEvery round parts, or one base part (the collapsed or resumed
-  // chain, which holds most keys) plus at most collapseEvery − 1 round
-  // parts. Half the budget to the base and the other half shared by the
-  // round parts keeps the union at or below bloomFpp either way.
-  private val baseFpp = config.bloomFpp / 2
-  private val roundFpp = config.bloomFpp / (2 * math.max(1, collapseEvery))
+  /** Brings the cached seen chain to the one the manifests name for the
+    * rounds committed through `last`: one base part for rounds
+    * [0, stateBase(last)] plus one round part per later round. Frees the
+    * parts it no longer names and builds the missing ones, so a fresh, a
+    * running and a resumed crawl hold the same chain, and save the same
+    * bank, after the same round. Before round 0 the base's read finds no
+    * committed round: the chain is empty. A store whose manifests record
+    * no `state_base` folds from round 0 and so gets one part per round:
+    * correct, but its chain is not bounded.
+    */
+  private def syncSeen(last: Int): Unit = {
+    val base = stateBase(last)
+    val named = (0, base) +: (base + 1 to last).map(r => (r, r))
+    val (kept, stale) = seenParts.partition(p => named.contains(p.rounds))
+    stale.foreach(_.free())
+    seenParts = named.toVector.flatMap { case (from, to) =>
+      kept.find(_.rounds == (from, to)).orElse(seenPart(from, to))
+    }
+  }
 
   private def bank: DistBloomBank.Bank = DistBloomBank.union(seenParts.map(_.bloom))
 
@@ -215,11 +230,7 @@ final class Crawler(
     * every cache it holds when it returns.
     */
   def run(seeds: Dataset[SeedRecord]): Unit = try {
-    val resumeFrom = store.latestRound().map(_ + 1).getOrElse(0)
-    // resume: the saved banks are never read back; the seen chain resumes
-    // as one base part whose filter set is built at the current config
-    if (resumeFrom > 0) seenParts = seenPart(0, resumeFrom - 1, baseFpp).toVector
-    var round = resumeFrom
+    var round = store.latestRound().map(_ + 1).getOrElse(0)
     var candidates = if (round == 0) seedCandidates(seeds) else candidatesFromStore(round)
     while (round < config.maxRounds && (round == 0 || !candidates.isEmpty)) {
       runRound(round, candidates)
@@ -257,11 +268,13 @@ final class Crawler(
         .as[Candidate])
       .getOrElse(spark.emptyDataset[Candidate])
 
-  /** One crawl round: schedule, fetch and commit `candidates`, then fold
-    * the committed seen rows into the chain. The next round's candidates
-    * are `candidatesFromStore(round + 1)`.
+  /** One crawl round: bring the seen chain to the committed rounds',
+    * schedule, fetch and commit `candidates`, then bring the chain to the
+    * round's commit and save its bank. The next round's candidates are
+    * `candidatesFromStore(round + 1)`.
     */
   def runRound(round: Int, candidates: Dataset[Candidate]): Unit = {
+    syncSeen(round - 1)
     val cands = filterAllowed(candidates.toDF()
       .withColumn("canon", canonU($"url"))
       .withColumn("host", hostCol($"canon")))
@@ -325,26 +338,15 @@ final class Crawler(
         .unionByName(delta)).persist() // counted, then written
     val hostStateRows = hostState.count()
 
-    // the round's observed fetched-row count (outcome is fully
-    // materialized by the host-state count above, so the accumulator
-    // already carries this round's adds)
-    val fetchedDelta = math.max(0L, fetchedAcc.value - fetchedPrev)
-    fetchedPrev = fetchedAcc.value
     commitRound(round, frontier, results, hostState, hostStateRows, if (rebase) round else lastBase,
-      seqStart + frontierCount, frontierCount,
-      if (fetchedDelta > 0) fetchedDelta else frontierCount)
+      seqStart + frontierCount, frontierCount)
     outcome.unpersist()
     hostState.unpersist()
     seqCache.unpersist()
 
-    // fold the round's committed seen rows into the chain: a new round
-    // part, or, once the chain holds `collapseEvery` parts, one collapsed
-    // base part read from every committed round, so the round's rows get
-    // exactly one filter set either way
-    val collapse = seenParts.size >= collapseEvery
-    if (collapse) seenParts.foreach(_.free())
-    val part = seenPart(if (collapse) 0 else round, round, if (collapse) baseFpp else roundFpp)
-    seenParts = (if (collapse) Vector.empty else seenParts) ++ part
+    // the round's seen rows get exactly one filter set: a new round part's,
+    // or, on a rebase, the new base part's
+    syncSeen(round)
     // saved after the commit, for diagnostics: no crawl reads a saved bank
     // back, so a round whose bank write never ran resumes the same.
     // Distributed parquet write of (pid, filter) rows — nothing collected.
@@ -407,7 +409,6 @@ final class Crawler(
       .as[FrontierWithState]
 
     val rb = robotsB; val cb = cfgB; val f = fetcher; val r = round
-    val facc = fetchedAcc
     parted.mapPartitions { it =>
       val cfg = cb.value
       val robots = rb.value
@@ -419,7 +420,6 @@ final class Crawler(
         val row = if (status == "fetched") {
           PageParser.parse(html, e.canonUrl, cfg.maxCommentPages) match {
             case Some(parsed) =>
-              facc.add(1L)
               FetchParseRow(r, e.seq, e.url, e.canonUrl, e.host, e.keyword, "fetched",
                 attempts, parsed.title, parsed.author,
                 parsed.createdAt.map(java.sql.Timestamp.valueOf).orNull,
@@ -464,18 +464,16 @@ final class Crawler(
     */
   private def commitRound(round: Int, frontier: Dataset[FrontierEntry],
       results: DataFrame, hostState: DataFrame, hostStateRows: Long, baseRound: Int,
-      nextSeq: Long, frontierCount: Long, fetchedCount: Long): Unit = {
-    // docs holds only status='fetched' rows, so it is sized by the round's
-    // OBSERVED fetched count (executor accumulator), not the frontier
-    // count — under high failure rates the two diverge and the frontier
-    // count would overshoot the file fan-out
+      nextSeq: Long, frontierCount: Long): Unit = {
+    // docs holds only status='fetched' rows, so sizing it by the frontier
+    // count can only overshoot its file fan-out (under high failure rates)
     val docs = sizedForWrite(results.filter($"status" === "fetched")
       .select($"round", $"seq", $"canonUrl".as("doc_id"), $"url", $"host".as("site"),
         $"keyword", $"title", $"author", $"created_at", $"view_count", $"like_count",
         $"spans", $"outlinks", $"comments"),
       // the whole store measured 988 B per crawled URL (traced
       // crawl-revisit, snapshot.bytes_per_url), so a docs file stays ≲ 8 MB
-      fetchedCount, rowsPerFile = 8000L)
+      frontierCount, rowsPerFile = 8000L)
     val crawlLog = sizedForWrite(results.select($"round", $"seq", $"url", $"canonUrl",
       $"host", $"status", $"attempts"), frontierCount, rowsPerFile = 500000L)
     val seen = sizedForWrite(frontier.select($"round", $"seq", $"canonUrl", $"host"),

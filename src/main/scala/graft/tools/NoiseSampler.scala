@@ -54,13 +54,9 @@ final class NoiseSampler(periodMs: Long = 5000, probeMs: Long = 200) {
 object NoiseSampler {
   /** Active-core CPU speed probe: saturate `threads` threads with a pure
     * register-only LCG spin (zero memory traffic) and return mean
-    * iterations/sec per thread. This measures the host's frequency
-    * response to active core count — on the 32-vCPU microVM of the
-    * SCALING records the per-core clock dropped 1.25-1.55x (time-varying)
-    * going 6 → 24 busy cores, which caps the raw two-level efficiency of
-    * any perfectly-parallel job at ~0.65-0.79 regardless of code. A real
-    * cluster adds executor nodes without downclocking existing ones, so
-    * ScalingBench also reports an efficiency with this artifact divided out.
+    * iterations/sec per thread: the host's per-thread speed at that
+    * active-core count. Bench brackets its timed runs with it, and the
+    * in-run sampler and `hostFloor` run it on one thread.
     */
   def cpuSpeedPerThread(threads: Int, millis: Long = 3000): Double = {
     val counts = new java.util.concurrent.atomic.AtomicLongArray(threads)
@@ -119,7 +115,10 @@ object NoiseSampler {
     * burst covering ≥¼ of it). A run of `threads` busy threads that leaves
     * vCPUs spare gets tight margins (0.85/0.70); one that busies every vCPU
     * gets the loose ones its self-squeeze needs (0.80/0.50: a clean
-    * local[32] run read median 0.96×idle, p25 0.69×idle).
+    * local[32] run read median 0.96×idle, p25 0.69×idle). One sample is no
+    * verdict; the median rule applies from two samples (a run of ~5 s, at
+    * the default period) and the p25 rule, which needs a quarter of the
+    * samples to mean anything, from four.
     */
   final case class Report(n: Int, min: Double, p25: Double, median: Double) {
     def minMps: Double = min / 1e6
@@ -127,8 +126,8 @@ object NoiseSampler {
     def flaggedVsIdle(idleRef: Double, threads: Int): Boolean = {
       val (medianFrac, p25Frac) =
         if (threads >= Runtime.getRuntime.availableProcessors) (0.80, 0.50) else (0.85, 0.70)
-      n >= 4 && idleRef > 0 &&
-        (median < medianFrac * idleRef || p25 < p25Frac * idleRef)
+      idleRef > 0 && (n >= 2 && median < medianFrac * idleRef ||
+        n >= 4 && p25 < p25Frac * idleRef)
     }
     def json(flagged: Boolean): String =
       if (n == 0) """{"n":0}"""

@@ -5,40 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** North-rule scaling evidence: the same crawl job at two parallelism
   * levels (local[N] and local[4N] — stands in for N vs 4N executors; no
   * real cluster exists in this sandbox, see BASELINE.md), reporting
-  * throughput at both plus scaling efficiency = (thr_4N / thr_N) / 4.
+  * throughput at both plus the raw wall-clock scaling efficiency
+  * (thr_4N / thr_N) / 4, and each level's in-run host noise.
   *
-  * Usage: runMain graft.tools.ScalingBench [nSeeds] [loCores] [hiCores]
+  * Usage: runMain graft.tools.ScalingBench [nSeeds] [loCores] [hiCores] [reps]
   */
 object ScalingBench {
-
-  /** Memory-hierarchy speed probe: per-thread copy throughput over a
-    * 16 MB long array at `threads` active threads. On this host the
-    * per-thread copy rate drops ~1.1x (12 busy cores) to ~1.4x (24 busy
-    * cores) vs few-core runs — the shared cache/DRAM envelope. This
-    * matches the crawl stages' task-second inflation almost exactly
-    * (memory-bound parse work), so it is reported alongside raw
-    * efficiency: a cluster's 4N executors bring 4N memory systems, a
-    * single box does not.
-    */
-  def memSpeedPerThread(threads: Int, millis: Long = 3000): Double = {
-    val counts = new java.util.concurrent.atomic.AtomicLongArray(threads)
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val ts = (0 until threads).map { i =>
-      val t = new Thread(() => {
-        val n = 1 << 21
-        val a = new Array[Long](n); val b = new Array[Long](n)
-        java.util.Arrays.fill(a, i.toLong)
-        var reps = 0L
-        while (!stop.get()) { System.arraycopy(a, 0, b, 0, n); reps += 1 }
-        counts.set(i, reps + (if (b(0) == Long.MinValue) 1 else 0))
-      })
-      t.setDaemon(true); t
-    }
-    val t0 = System.nanoTime()
-    ts.foreach(_.start()); Thread.sleep(millis); stop.set(true); ts.foreach(_.join())
-    val sec = (System.nanoTime() - t0) / 1e9
-    (0 until threads).map(counts.get).sum.toDouble * 16.0 / threads / sec // MB/s/thread
-  }
 
   def runOnce(cores: Int, nSeeds: Long): (Double, Long, NoiseSampler.Report) = {
     val spark = SparkSession.builder()
@@ -70,8 +42,7 @@ object ScalingBench {
     // delay*salt, preserving the per-host politeness budget)
     val cfg = graft.core.CrawlConfig(maxRounds = 2, seenPartitions = math.max(cores, 16),
       saltFactor = 64, bloomExpectedPerPartition = 2000000L)
-    // in-run noise samples: the bracketing probes cannot see a burst that
-    // starts and ends inside the run — this can (see NoiseSampler)
+    // in-run noise samples, flagged against the host's idle floor
     val sampler = new NoiseSampler()
     val t0 = System.nanoTime()
     val crawler = new graft.pipeline.Crawler(spark, cfg, store)
@@ -102,25 +73,15 @@ object ScalingBench {
     runOnce(hi, nSeeds)
 
     // same-JVM runs are noisy (GC history, page cache) — interleave
-    // repetitions and take the best time per level. Each crawl run is
-    // bracketed by a cpu-speed probe at the SAME active-core count so the
-    // host's frequency-vs-active-cores response is sampled alongside.
+    // repetitions and take the best time per level
     val reps = args.lift(3).map(_.toInt).getOrElse(2)
-    val spdLo = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val spdHi = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val memLo = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val memHi = scala.collection.mutable.ArrayBuffer.empty[Double]
     val runs = (0 until reps).flatMap { r =>
-      spdLo += NoiseSampler.cpuSpeedPerThread(lo); memLo += memSpeedPerThread(lo)
       val (ls, lu, ln) = runOnce(lo, nSeeds)
-      spdHi += NoiseSampler.cpuSpeedPerThread(hi); memHi += memSpeedPerThread(hi)
       val (hs, hu, hn) = runOnce(hi, nSeeds)
       require(lu == hu, s"determinism violated: $lu vs $hu")
       println(f"""[scaling-rep $r] lo=$ls%.2fs hi=$hs%.2fs urls=$lu """ +
-        f"""spin_lo=${spdLo.last / 1e6}%.1fM/s spin_hi=${spdHi.last / 1e6}%.1fM/s """ +
-        f"""mem_lo=${memLo.last}%.0fMB/s mem_hi=${memHi.last}%.0fMB/s """ +
-        s"""inrun_lo=${ln.json(ln.flaggedVsIdle(spdLo.last, lo))} """ +
-        s"""inrun_hi=${hn.json(hn.flaggedVsIdle(spdHi.last, hi))}""")
+        s"""inrun_lo=${ln.json(ln.flaggedVsIdle(hostFloor, lo))} """ +
+        s"""inrun_hi=${hn.json(hn.flaggedVsIdle(hostFloor, hi))}""")
       Seq((lo, ls, lu, ln), (hi, hs, hu, hn))
     }
     val loSec = runs.filter(_._1 == lo).map(_._2).min
@@ -128,69 +89,22 @@ object ScalingBench {
     val urls = runs.head._3
     // contamination verdict for the RECORDED pair: min-of-reps already
     // rejects bursty reps (that is the method), so the record is clean iff
-    // the min rep at EACH level has clean in-run noise. Probe spread
-    // across reps is reported as a diagnostic, not a veto — an absorbed
-    // burst in a DISCARDED rep is the min-selection working as intended.
-    // The in-run flags are idle-referenced against the SAME level's
-    // bracketing probes: the probe thread during a lo run rides the host's
-    // (lo+1)-active-core clock regime, which is what the lo spin probes
-    // measure (and likewise for hi) — comparing across levels would
-    // misread the downclock-vs-active-cores response as a burst.
+    // the min rep at EACH level has clean in-run noise against the host's
+    // idle floor
     val loNoise = runs.filter(_._1 == lo).minBy(_._2)._4
     val hiNoise = runs.filter(_._1 == hi).minBy(_._2)._4
-    def spread(xs: Seq[Double]): Double = if (xs.isEmpty) 1.0 else xs.max / xs.min
-    // idleRef floored at the clean-host band: depressed bracketing probes
-    // must tighten the verdict, never loosen it (NoiseSampler.hostFloor)
-    val loFlag = loNoise.flaggedVsIdle(math.max(spdLo.max, hostFloor), lo)
-    val hiFlag = hiNoise.flaggedVsIdle(math.max(spdHi.max, hostFloor), hi)
+    val loFlag = loNoise.flaggedVsIdle(hostFloor, lo)
+    val hiFlag = hiNoise.flaggedVsIdle(hostFloor, hi)
     val contaminated = loFlag || hiFlag
 
     val thrLo = urls / loSec
     val thrHi = urls / hiSec
     val eff = (thrHi / thrLo) / (hi.toDouble / lo)
-    // host clock factor: per-thread register-spin speed at lo vs hi active
-    // cores (>1 means the host downclocks with more busy cores). The
-    // normalized efficiency removes this sandbox-only artifact — cluster
-    // scaling (the north-rule criterion) adds nodes, which does not
-    // downclock existing ones.
-    val clockRatio = (spdLo.sum / spdLo.size) / (spdHi.sum / spdHi.size)
-    val memRatio = (memLo.sum / memLo.size) / (memHi.sum / memHi.size)
-    // envelope correction uses max(clock, mem), NOT their product: a
-    // workload is bounded by one resource at a time, so multiplying both
-    // ratios double-counts the host's active-core response (the round-3
-    // artifact reported a >1.0 "efficiency" exactly this way). Still a
-    // SECONDARY diagnostic — the raw value is the number of record.
-    // When the probe pairs are themselves contaminated (asymmetric across
-    // reps, or a mid-run sampler tripped), the "correction" divides by a
-    // burst, not the host envelope — round 4 published a nonsense 2.19
-    // exactly this way. Emit null instead of a number inviting misquoting.
-    // Plausibility rails on the ratios themselves: more active cores can
-    // only hold or LOWER per-thread clock / DRAM share, so lo/hi ratios
-    // sit in [~1, ~1.3] (clock) and [~1, ~4] (mem) on a clean host — a
-    // ratio outside that band means one probe ate a burst (measured: a
-    // depressed lo spin probe produced clockRatio 0.37 → envelope 0.19,
-    // garbage in the OTHER direction from r4's 2.19).
-    val ratiosPlausible = clockRatio >= 0.95 && clockRatio <= 1.5 &&
-      memRatio >= 0.95 && memRatio <= 4.0
-    // a spin-probe pair spread wide across reps at one level means one of
-    // the probes ate a burst: the level's AVERAGE (which feeds clockRatio)
-    // is then part-burst, and the "correction" divides by noise — the
-    // round-5 0.804 record published envelope 2.226 exactly this way
-    // (probe_spread_hi 1.355). The raw value never uses the probes.
-    val probesSymmetric = spread(spdLo.toSeq) <= 1.15 && spread(spdHi.toSeq) <= 1.15
-    val effEnvelope =
-      if (contaminated || !ratiosPlausible || !probesSymmetric) "null"
-      else f"${eff * math.max(clockRatio, memRatio)}%.3f"
     println(f"""{"metric":"crawl_scaling_efficiency","value":$eff%.3f,""" +
-      s""""envelope_normalized_efficiency":$effEnvelope,""" +
-      f""""host_clock_ratio_lo_over_hi":$clockRatio%.3f,""" +
-      f""""host_memcopy_ratio_lo_over_hi":$memRatio%.3f,""" +
       f""""cores_lo":$lo,"cores_hi":$hi,"urls":$urls,"reps":$reps,""" +
       f""""sec_lo":$loSec%.2f,"sec_hi":$hiSec%.2f,""" +
       f""""urls_per_sec_lo":$thrLo%.1f,"urls_per_sec_hi":$thrHi%.1f,""" +
       s""""inrun_noise_lo":${loNoise.json(loFlag)},"inrun_noise_hi":${hiNoise.json(hiFlag)},""" +
-      f""""probe_spread_lo":${spread(spdLo.toSeq)}%.3f,"probe_spread_hi":${spread(spdHi.toSeq)}%.3f,""" +
-      f""""host_floor_mps":${hostFloor / 1e6}%.1f,"contaminated":$contaminated,""" +
-      f""""note":"value = raw wall-clock efficiency (the number of record); envelope_normalized divides out the WORSE of the measured per-thread register-spin / 16MB-copy throughput ratios between the two active-core counts (this single box downclocks/saturates shared cache+DRAM as active cores grow; adding cluster NODES adds whole memory systems instead)"}""")
+      f""""host_floor_mps":${hostFloor / 1e6}%.1f,"contaminated":$contaminated}""")
   }
 }

@@ -11,9 +11,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import scala.jdk.CollectionConverters._
 
 /** The bloom tier's lifecycle: each seen-chain part carries one filter set
-  * sized to its keys, the bank is the union of the parts' sets, each
-  * round runs the probe's filter pass once, and urls reach their filters
-  * through Catalyst exchanges: the crawl runs no RDD shuffle.
+  * sized to its keys, the bank is the union of the parts' sets, a resumed
+  * crawl saves the banks an uninterrupted one does, each round runs the
+  * probe's filter pass once, and urls reach their filters through
+  * Catalyst exchanges: the crawl runs no RDD shuffle.
   */
 class BloomLifecycleSpec extends SparkSpec {
   import BloomLifecycleSpec.CrawlRun
@@ -125,6 +126,31 @@ class BloomLifecycleSpec extends SparkSpec {
       val rule = 1.44 * math.log((ce + 1) / config.bloomFpp) / math.log(2)
       assert(bitsPerKey <= 1.5 * rule, f"$bitsPerKey%.1f bits/key vs sizing rule $rule%.1f")
     }
+
+  test("a crawl resumed after every round saves the same banks and rows as an uninterrupted one") {
+    // collapseEvery = 3 over 4 rounds: round parts at rounds 1 and 2, the
+    // collapse into a new base at round 3
+    import spark.implicits._
+    val cfg = config.copy(maxRounds = 4, collapseEvery = 3)
+    val ds = spark.createDataset(seeds)
+    val whole = new SnapshotStore(tempDir("graft-bloom-whole"))
+    new Crawler(spark, cfg, whole.root).run(ds)
+    val resumed = new SnapshotStore(tempDir("graft-bloom-resumed"))
+    for (r <- 0 until 4) new Crawler(spark, cfg.copy(maxRounds = r + 1), resumed.root).run(ds)
+    assert(whole.latestRound().contains(3) && resumed.latestRound().contains(3),
+      "test vacuous: both crawls must commit 4 rounds")
+    def bank(store: SnapshotStore, round: Int): Map[Int, Seq[String]] =
+      DistBloomBank.load(spark, store.bloomPath(round)).get.rdd.collect().toSeq.groupBy(_._1)
+        .map { case (pid, fs) => pid -> fs.map(f => java.util.Base64.getEncoder.encodeToString(f._2)).sorted }
+    def rows(store: SnapshotStore, table: String, round: Int) =
+      store.read(spark, table, minRound = round, maxRound = round).get.orderBy("seq").collect().toSeq
+    for (r <- 0 until 4) {
+      val sameBank = bank(resumed, r) == bank(whole, r)
+      assert(sameBank, s"round $r: the resumed crawl saved another bank")
+      for (t <- Seq("seen", "crawl_log", "docs"))
+        assert(rows(resumed, t, r) == rows(whole, t, r), s"round $r: the resumed crawl wrote other $t rows")
+    }
+  }
 
   /** Records written while `body` runs by the map stages of RDD-API
     * shuffles created in BloomBank.scala (feeding a `ShuffledRDD`) and of

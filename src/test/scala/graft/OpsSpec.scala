@@ -700,33 +700,31 @@ class OpsSpec extends SparkSpec {
   }
 
   test("guard ledger: awaitLedgerQuiescent waits out a listener bus a slow listener holds up") {
-    // the listener sleeps on every job end, so the query's SQL-end event,
-    // which carries its guard metrics, waits in the queue behind them.
-    // Without adaptive execution the query runs one job, not one per
-    // exchange: the queue stays shorter than the bus's own wait bound.
+    // the listener holds the bus at the query's first job end until 12 s
+    // after the query returns, so the query's SQL-end event, which carries
+    // its guard metrics, waits in the queue past the bus's own 10 s bound
     val sc = spark.sparkContext
-    val aqe = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(aqe)
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val gate = new java.util.concurrent.CountDownLatch(1)
     val slow = new org.apache.spark.scheduler.SparkListener {
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        jobs.incrementAndGet()
-        Thread.sleep(1000)
-      }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (jobs.incrementAndGet() == 1) gate.await()
     }
     org.apache.spark.GraftBridge.drainListeners(sc)
     sc.addSparkListener(slow)
-    spark.conf.set(aqe, "false")
     try {
       Guard.withQueryTag("slow-bus") {
         Dedup.simhashDupPairs(docs.limit(30).select($"doc_id", $"text"), maxHamming = 0).count()
       }
+      val t0 = System.nanoTime()
+      new Thread(() => { Thread.sleep(12000); gate.countDown() }).start()
       Guard.awaitLedgerQuiescent()
+      val waited = (System.nanoTime() - t0) / 1e9
       val recs = Guard.drainDropLedgerDetailed().filter(_.queryTag == "slow-bus")
-      assert(jobs.get > 0, "test vacuous: the slow listener saw no job end")
+      assert(waited > 10, s"test vacuous: the bus lagged only $waited s")
       assert(recs.size == 1 && recs.head.totalRows > 0, s"$recs after ${jobs.get} jobs")
     } finally {
-      prev.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
+      gate.countDown()
       sc.removeSparkListener(slow)
     }
   }
